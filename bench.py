@@ -7,11 +7,11 @@ Headline = index-build throughput (docs/sec) measured on a corpus big
 enough that JVM/session startup is noise (VERDICT r1: the 5k-doc sf0.1
 table was startup-dominated at 520 docs/s vs the pinned-protocol 5,226).
 The build runs the FULL plan (docs ids -> postings -> salted encode ->
-chunked + merged index + stats, all written to parquet) over the
+chunk table + merged export + stats, all written to parquet) over the
 FIXTURES.md synthetic source-code corpus ($SPARK_GRAFT_BENCH_DOCS docs,
 default 100k, ~20M postings — large enough to trip adaptive skew
 salting, so the salted path is what gets measured).  BM25 latencies are
-then served from BOTH artifacts (merged + chunked).  The dedup/ANN ops
+then served from the chunk table.  The dedup/ANN ops
 keep running over the shared sf tables for round-over-round comparison.
 
 Calibration (benchmetrics.py): single-thread canary (host speed),
@@ -89,7 +89,6 @@ def main() -> int:
     from invertedindexbuilder_spark.operators.dedup import minhash_dedup
     from invertedindexbuilder_spark.operators.postings import build_postings
     from invertedindexbuilder_spark.operators.query_exec import (
-        topk_bm25,
         topk_bm25_chunked,
     )
     from invertedindexbuilder_spark.operators.similarity import cosine_topk
@@ -126,7 +125,6 @@ def main() -> int:
             spark,
             synthetic_docs_src(spark, max(2000, cpus * 64)),
             warm_out,
-            write_chunks=True,
         )
     finally:
         shutil.rmtree(warm_out, ignore_errors=True)
@@ -136,38 +134,28 @@ def main() -> int:
     t_all = time.time()
     out = tempfile.mkdtemp(prefix="bench_idx_")
     try:
-        # ---- q1: FULL index build plan (write_chunks: both artifacts) ----
+        # ---- q1: FULL index build plan (chunk table + merged export) ----
         with meter.q("build_index"):
             manifest = build(
                 spark,
                 synthetic_docs_src(spark, bench_docs),
                 out,
-                write_chunks=True,
             )
         n_terms = int(manifest["phases"]["index"]["terms"])
 
         cat = Catalog(spark, out)
-        index = cat.read("index").cache()
         chunks = cat.read("index_chunks").cache()
         docs = cat.read("docs").select("doc_id", "doc_len").cache()
-        index.count(), chunks.count(), docs.count()  # Q1 session load
+        chunks.count(), docs.count()  # Q1 session load
         stats = load_stats(spark, out)
 
-        # ---- q2-q5: BM25 from merged vs chunked artifacts.  'common'
-        # is the ~95%-df stopword => the salted multi-chunk path. ----
+        # ---- q2-q3: BM25 from the chunk table.  'common' is the
+        # ~95%-df stopword => the salted multi-chunk path. ----
         with meter.q("bm25_and"):
-            topk_bm25(
-                spark, index, docs, stats, "common alpha", mode="and", k=10
-            ).collect()
-        with meter.q("bm25_or"):
-            topk_bm25(
-                spark, index, docs, stats, "alpha beta gamma", mode="or", k=10
-            ).collect()
-        with meter.q("bm25_and_chunked"):
             topk_bm25_chunked(
                 spark, chunks, docs, stats, "common alpha", mode="and", k=10
             ).collect()
-        with meter.q("bm25_or_chunked"):
+        with meter.q("bm25_or"):
             topk_bm25_chunked(
                 spark, chunks, docs, stats, "alpha beta gamma", mode="or", k=10
             ).collect()

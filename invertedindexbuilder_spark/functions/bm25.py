@@ -8,7 +8,7 @@ with k1 = 1.2, b = 0.75 (query.c:82-83) and the reference's quirks
 
 - ``N``    = total number of documents (query.c:47)
 - ``d_avr`` = sum(doc_len) / (N - 1)   — note N-1, a reference quirk
-  (query.c:48)
+  (query.c:48); +inf when N = 1
 - ``df``   = posting-list length of the term
 - ``|d|``  = the reference's ``size_of_doc`` = len(url) + 1 + len(body)
 - IDF may be NEGATIVE (df > N/2); there is no floor
@@ -38,5 +38,12 @@ def bm25(tf, df, doc_len, n_docs: int, d_avr: float) -> np.ndarray:
 
 
 def d_avr(sum_doc_len: int, n_docs: int) -> float:
-    """Reference average doc length: sum / (N - 1) (query.c:48)."""
+    """Reference average doc length: sum / (N - 1) (query.c:48).
+
+    A one-document corpus divides by zero; like the reference's double
+    division it yields IEEE +inf, so |d| / d_avr is 0 and the length
+    normalisation reduces to k1 * (1 - b).  Every serving surface gets
+    d_avr from here."""
+    if n_docs == 1:
+        return float("inf")
     return float(sum_doc_len) / float(n_docs - 1)

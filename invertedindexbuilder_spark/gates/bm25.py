@@ -63,12 +63,12 @@ def queries() -> dict:
             "query_id long, text string",
         )
         return topk_bm25_batch(
-            spark, env["index"], env["docs"], env["stats"], qdf,
+            spark, env["index_chunks"], env["docs"], env["stats"], qdf,
             mode="and", k=10, round_digits=5,
         )
 
     def bm25_batch_or(spark, sf_dir):
-        # the same batch operator against the CHUNKED serving table
+        # the same batch operator against the SALTED chunk table
         from invertedindexbuilder_spark.operators.query_batch import (
             topk_bm25_batch,
         )
@@ -107,13 +107,13 @@ def queries() -> dict:
         # leave the ranking via exclude_doc_ids; IDF/d_avr stay
         # as-indexed — same filtered-search semantics as boolean NOT
         from invertedindexbuilder_spark.operators.query_exec import (
-            topk_bm25,
+            topk_bm25_chunked,
         )
 
         env = built(spark, sf_dir)
         tomb = env["docs"].select("doc_id").filter(F.col("doc_id") % 11 == 5)
-        out = topk_bm25(
-            spark, env["index"], env["docs"], env["stats"],
+        out = topk_bm25_chunked(
+            spark, env["index_chunks"], env["docs"], env["stats"],
             "data join", mode="and", k=10, round_digits=5,
             exclude_doc_ids=tomb,
         )
@@ -157,7 +157,7 @@ def queries() -> dict:
 
     def facet_counts_and(spark, sf_dir):
         # facet distribution of the boolean match set (search-UI
-        # companion to ranking; r7): merged layout, AND semantics
+        # companion to ranking; r7): unsalted chunks, AND semantics
         from invertedindexbuilder_spark.operators.query_exec import (
             facet_counts,
         )
@@ -165,12 +165,12 @@ def queries() -> dict:
         env = built(spark, sf_dir)
         fac = documents(spark, sf_dir).select("doc_id", "lang", "source")
         return facet_counts(
-            spark, env["index"], fac, "data join",
+            spark, env["index_chunks"], fac, "data join",
             ["lang", "source"], mode="and",
         )
 
     def facet_counts_or(spark, sf_dir):
-        # the same operator against the CHUNKED serving table, OR mode
+        # the same operator against the SALTED chunk table, OR mode
         from invertedindexbuilder_spark.operators.query_exec import (
             facet_counts,
         )
@@ -223,8 +223,8 @@ def oracle_sql() -> dict:
         "bm25_and_deleted": bm25_sql(
             [("data", 1), ("join", 1)], "and", 10, extra="doc_id % 11 <> 5"
         ),
-        # chunked serving must produce the SAME answers as the merged
-        # index — the oracle is the ordinary BM25 twin
+        # salted chunks must produce the SAME answers as the unsalted
+        # ones — the oracle is the ordinary BM25 twin
         "bm25_and_chunked": bm25_sql([("data", 1), ("spark", 1)], "and", 10),
         "bm25_or_chunked": bm25_sql(
             [("merge", 1), ("filter", 1), ("data", 2)], "or", 10

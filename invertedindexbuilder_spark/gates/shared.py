@@ -327,17 +327,23 @@ def embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The index_meta oracle derives n_blocks/payload geometry from the
 # UNSALTED whole-list layout (ceil(df/128) full blocks); skew salting
 # produces ragged-but-self-describing tail blocks that would legitimately
-# differ.  Gate builds therefore pin salting OFF; the salted/chunked
-# layout is gate-covered separately via the bm25_*_chunked entries,
-# whose results are layout-independent.
+# differ.  Gate builds therefore pin salting OFF (one chunk per term,
+# served by the plain bm25 entries; the index_meta gates read the
+# merged export of those chunks); the salted multi-chunk layout is
+# gate-covered separately via the bm25_*_chunked entries, whose results
+# are layout-independent.
 UNSALTED = 1 << 62
 
 
 def built(spark: SparkSession, sf_dir: str) -> dict:
-    """Build (once per sf_dir) the index/docs/stats over documents."""
+    """Build (once per sf_dir) the unsalted chunks, their merged export,
+    docs and stats over documents."""
     if sf_dir in _INDEX_CACHE:
         return _INDEX_CACHE[sf_dir]
-    from invertedindexbuilder_spark.operators.index_build import build_index
+    from invertedindexbuilder_spark.operators.index_build import (
+        encode_chunks,
+        merge_chunks,
+    )
     from invertedindexbuilder_spark.operators.postings import build_postings
     from invertedindexbuilder_spark.sources.docs_src import (
         docs_from_documents_table,
@@ -345,7 +351,7 @@ def built(spark: SparkSession, sf_dir: str) -> dict:
 
     docs = docs_from_documents_table(documents(spark, sf_dir)).cache()
     postings = build_postings(docs).cache()
-    index = build_index(postings, salt_threshold=UNSALTED).cache()
+    chunks = encode_chunks(postings, salt_threshold=UNSALTED, heavy=[]).cache()
     agg = docs.agg(
         F.count("*").alias("n"),
         F.sum("doc_len").alias("sdl"),
@@ -354,7 +360,8 @@ def built(spark: SparkSession, sf_dir: str) -> dict:
     env = {
         "docs": docs,
         "postings": postings,
-        "index": index,
+        "index_chunks": chunks,
+        "index": merge_chunks(chunks).cache(),
         "stats": {
             "n_docs": int(agg["n"]),
             "sum_doc_len": int(agg["sdl"]),
@@ -491,13 +498,15 @@ def bm25_query(
     exclude: str | None = None,
     doc_filter=None,
 ) -> DataFrame:
-    from invertedindexbuilder_spark.operators.query_exec import topk_bm25
+    from invertedindexbuilder_spark.operators.query_exec import (
+        topk_bm25_chunked,
+    )
 
     env = built(spark, sf_dir)
     query = " ".join(t for t, w in qterms for _ in range(w))
-    out = topk_bm25(
+    out = topk_bm25_chunked(
         spark,
-        env["index"],
+        env["index_chunks"],
         env["docs"],
         env["stats"],
         query,

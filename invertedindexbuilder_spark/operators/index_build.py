@@ -739,27 +739,3 @@ def purge_chunks(chunks: DataFrame, deleted_ids: np.ndarray) -> DataFrame:
                 yield pd.DataFrame(out)
 
     return chunks.select(*cols).mapInPandas(rewrite, schema=INDEX_CHUNK)
-
-
-def build_index(
-    postings: DataFrame,
-    num_partitions: int | None = None,
-    salt_threshold: int | None = None,
-    chunk_blocks: int | None = None,
-) -> DataFrame:
-    """postings -> merged INDEX (one row per term).  salt_threshold /
-    chunk_blocks default to the adaptive policy (resolve_salting)."""
-    spark = postings.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    salt_threshold, chunk_blocks, heavy = resolve_salting(
-        postings, num_partitions, salt_threshold, chunk_blocks
-    )
-    chunks = encode_chunks(
-        postings,
-        num_partitions=num_partitions,
-        salt_threshold=salt_threshold,
-        chunk_blocks=chunk_blocks,
-        heavy=heavy,
-    )
-    return merge_chunks(chunks)

@@ -32,7 +32,7 @@ import numpy as np
 import pyarrow.parquet as pq
 
 from invertedindexbuilder_spark import BM25_B, BM25_K1, LEXICON_KEY_LEN
-from invertedindexbuilder_spark.functions.bm25 import bm25, idf
+from invertedindexbuilder_spark.functions.bm25 import bm25, d_avr, idf
 from invertedindexbuilder_spark.functions.compress import decode_block_run
 from invertedindexbuilder_spark.operators.query_exec import tokenize_query
 
@@ -109,7 +109,7 @@ class LocalIndex:
         self.doc_len[ids] = lens
         s = pq.read_table(_p("stats")).to_pylist()[0]
         self.n_docs = int(s["n_docs"])
-        self.d_avr = float(s["sum_doc_len"]) / (self.n_docs - 1)
+        self.d_avr = d_avr(s["sum_doc_len"], self.n_docs)
         self.min_doc_len = int(lens.min()) if lens.size else 0
         self.blocks_decoded = 0  # instrumentation
         # logical deletions (plans/deletes.delete_docs): loaded once per

@@ -1,7 +1,7 @@
 """Batch BM25 serving: answer a whole TABLE of queries in one Spark
 job — the cluster serving mode the reference (one query per
 interactive -q loop, query.c:29-64) has no analog for, and the place a
-DataFrame engine genuinely beats a cursor engine: each matched index
+DataFrame engine genuinely beats a cursor engine: each matched chunk
 row is DECODED EXACTLY ONCE however many queries share the term, and
 per-query top-k is one window over the scored frame.
 
@@ -9,8 +9,10 @@ Plan shape (no driver loop, no per-query jobs):
 
   queries (query_id, text)
     -> tokenize + strict-key weights     (one narrow mapInPandas)
-    -> distinct keys JOIN index          (one scan of the index,
-                                          collision winner per key)
+    -> distinct keys JOIN index_chunks   (one payload-free metadata
+                                          collect picks the collision
+                                          winner per key, one payload
+                                          scan)
     -> decode distinct matched rows      (once per key, not per query)
     -> join decoded postings back to (query_id, key, weight)
     -> doc_len join + BM25 + groupBy(query_id, doc_id)
@@ -27,7 +29,7 @@ output per partition.
 Reference parity per query: same tokenizer, D5 14-byte truncation +
 last-term-wins collisions, duplicate-term weights, N-1 d_avr, and the
 tie-to-smaller-doc_id heap policy (rank on rounded score when
-round_digits is set, like topk_bm25).
+round_digits is set, like topk_bm25_chunked).
 """
 
 from __future__ import annotations
@@ -39,15 +41,17 @@ from pyspark.sql import functions as F
 import numpy as np
 
 from invertedindexbuilder_spark import LEXICON_KEY_LEN
+from invertedindexbuilder_spark.functions.bm25 import d_avr
 from invertedindexbuilder_spark.operators.query_exec import (
     DOCLEN_PUSH_CAP,
     _DECODED_SCHEMA,
     _doc_lens_for,
     _lookup_chunk_meta,
-    _match_keys,
+    _winner_rows,
     bm25_expr,
     decode_matched_rows,
     decode_matched_rows_bmw,
+    lookup_chunk_rows,
     tokenize_query,
 )
 
@@ -95,7 +99,7 @@ def _query_keys(queries: DataFrame, strict: bool) -> DataFrame:
 
 def topk_bm25_batch(
     spark: SparkSession,
-    index: DataFrame,
+    chunks: DataFrame,
     docs: DataFrame,
     stats: dict,
     queries: DataFrame,
@@ -117,36 +121,15 @@ def topk_bm25_batch(
     ranking — the tombstone surface (plans/deletes.py); stats stay
     as-indexed, matching the single-query paths.
 
-    ``index`` may be the merged table OR the chunked table
-    (INDEX_CHUNK): chunk rows decode independently and the full-term
-    scoring df is recovered as a per-(key) sum, exactly like
-    topk_bm25_chunked.  ``queries`` needs (query_id: long, text:
-    string).  Results per query are identical to topk_bm25 (same gate
-    oracle, per-query)."""
+    ``chunks`` is the chunked table (INDEX_CHUNK): chunk rows decode
+    independently and the full-term scoring df comes from the lookup's
+    per-key metadata, exactly like topk_bm25_chunked.  ``queries``
+    needs (query_id: long, text: string).  Results per query are
+    identical to topk_bm25_chunked (same gate oracle, per-query)."""
     if mode not in ("and", "or"):
         raise ValueError(f"mode must be 'and' or 'or', got {mode!r}")
     n_docs = int(stats["n_docs"])
-    davr = float(stats["sum_doc_len"]) / float(n_docs - 1)
-    chunked = "salt" in index.columns
-
-    winners: dict | None = None
-
-    def _resolve(keys: dict) -> DataFrame:
-        """Matched index rows for a key set, collision winners applied
-        (same semantics as lookup_index_rows / lookup_chunk_rows)."""
-        if chunked:
-            # r8: the single-query metadata lookup — ONE payload-free
-            # collect derives collision winners + per-key stats on the
-            # driver and joins the winner set back as a broadcast
-            # literal (one payload-bearing scan; the old distributed
-            # row_number winner needed a shuffle for the same answer,
-            # and the stats now feed the candidate pruning below)
-            return _lookup_chunk_meta(index, list(keys), strict)[0]
-        m = _match_keys(index, keys, strict)
-        if strict:
-            winner = m.groupBy("key").agg(F.max("term").alias("term"))
-            return m.join(F.broadcast(winner), ["key", "term"])
-        return m
+    davr = d_avr(stats["sum_doc_len"], n_docs)
 
     # qkeys is deliberately NOT cached: it re-derives from the queries
     # table in one narrow pass wherever the plan needs it (a cache here
@@ -162,24 +145,19 @@ def topk_bm25_batch(
         return spark.createDataFrame(
             [], schema="query_id long, doc_id long, score double, rank int"
         )
-    if chunked:
-        matched, winners = _lookup_chunk_meta(
-            index, list(distinct_keys), strict
-        )
-    else:
-        matched = _resolve(distinct_keys)
+    # the single-query metadata lookup: ONE payload-free collect
+    # derives collision winners + per-key stats on the driver and joins
+    # the winner set back as a broadcast literal (one payload-bearing
+    # scan; the stats feed the found counts and candidate pruning)
+    matched, winners = _lookup_chunk_meta(chunks, list(distinct_keys), strict)
 
     docs_join = docs.select("doc_id", "doc_len")
     decoded = None
-    found_local: dict[int, int] | None = None
-    if winners is not None:
-        # per-query found counts, free from the lookup metadata
-        found_local = {}
-        by_q: dict[int, list[str]] = {}
-        for r in qk_rows:
-            if r["key"] in winners:
-                by_q.setdefault(int(r["query_id"]), []).append(r["key"])
-        found_local = {q: len(ks) for q, ks in by_q.items()}
+    # per-query found counts, free from the lookup metadata
+    by_q: dict[int, list[str]] = {}
+    for r in qk_rows:
+        if r["key"] in winners:
+            by_q.setdefault(int(r["query_id"]), []).append(r["key"])
 
     if mode == "and" and winners:
         # ---- batch conjunctive candidate pruning (r8) ----
@@ -200,20 +178,8 @@ def topk_bm25_batch(
             and 0 < cand_total <= DOCLEN_PUSH_CAP
             and skippable >= floor
         ):
-            def rows_for(keys: list[str]) -> DataFrame:
-                wdf = spark.createDataFrame(
-                    [
-                        (k, winners[k]["term"], winners[k]["term_df"])
-                        for k in keys
-                    ],
-                    schema="key string, term string, term_df long",
-                )
-                return _match_keys(index, {k: 1 for k in keys}, strict).join(
-                    F.broadcast(wdf), ["key", "term"]
-                )
-
             rare_rows_df = decode_matched_rows(
-                rows_for(rare_keys).withColumn("weight", F.lit(1))
+                _winner_rows(chunks, winners, rare_keys, strict).withColumn("weight", F.lit(1))
             )
             rrows = rare_rows_df.collect()  # <= cand_total rows
             cand_by_key: dict[str, list[int]] = {}
@@ -234,7 +200,7 @@ def topk_bm25_batch(
             import collections
 
             other_dec = decode_matched_rows_bmw(
-                rows_for(other_keys).withColumn("weight", F.lit(1)),
+                _winner_rows(chunks, winners, other_keys, strict).withColumn("weight", F.lit(1)),
                 all_cands, float("inf"), collections.defaultdict(float),
                 n_docs=1 << 62, min_doc_len=1.0, davr=1.0,
             )
@@ -292,22 +258,13 @@ def topk_bm25_batch(
     )
     if mode == "and":
         # docs containing ALL FOUND keys of their query: per-query found
-        # count = distinct keys that matched at least one index row.
-        # Computed from the MATCHED metadata (pre-decode — every matched
-        # row has df >= 1), so the decode pipeline runs exactly once;
-        # with the chunked lookup the counts are already on the driver.
-        if found_local is not None:
-            found = spark.createDataFrame(
-                list(found_local.items()), schema="query_id long, _need long"
-            )
-        else:
-            found = (
-                matched.select("key")
-                .distinct()
-                .join(F.broadcast(qkeys), "key")
-                .groupBy("query_id")
-                .agg(F.count("*").alias("_need"))
-            )
+        # count = distinct keys that matched at least one chunk row,
+        # already on the driver from the lookup metadata (pre-decode),
+        # so the decode pipeline runs exactly once
+        found = spark.createDataFrame(
+            [(q, len(ks)) for q, ks in by_q.items()],
+            schema="query_id long, _need long",
+        )
         agg = agg.join(F.broadcast(found), "query_id").filter(
             F.col("_nk") == F.col("_need")
         )
@@ -329,7 +286,8 @@ def topk_bm25_batch(
         if ex_keys:
             ex_pairs = (
                 decode_matched_rows(
-                    _resolve(ex_keys).withColumn("weight", F.lit(1))
+                    lookup_chunk_rows(chunks, list(ex_keys), strict)
+                    .withColumn("weight", F.lit(1))
                 )
                 .join(F.broadcast(ex_qkeys.select("query_id", "key")), "key")
                 .select("query_id", "doc_id")

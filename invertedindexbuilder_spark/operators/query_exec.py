@@ -1,8 +1,8 @@
-"""Top-k BM25 query execution over the compressed index.
+"""Top-k BM25 query execution over the chunked index (INDEX_CHUNK).
 
 Set-oriented re-expression of the reference's DAAT cursors
 (query.c:120-300): instead of a leapfrog nextGEQ loop, the matched
-index rows are block-prune-decoded in parallel, scored vectorized, and
+chunk rows are block-prune-decoded in parallel, scored vectorized, and
 reduced with one small groupBy + TakeOrderedAndProject.
 
 Replicated reference semantics (SURVEY §5.5):
@@ -18,9 +18,9 @@ Replicated reference semantics (SURVEY §5.5):
   earlier-seen (smaller) doc_id, matching the strict-> heap test
   (query.c:92-108).
 
-Scale notes: the per-term index rows stay distributed (a stopword row
-at 10^12 docs is GBs — never collected; driver metadata is O(#query
-terms) scalars); the docs join for doc_len shuffles on doc_id and
+Scale notes: the per-term chunk rows stay distributed (a stopword's
+chunks at 10^12 docs are GBs — never collected; driver metadata is
+O(#query terms) scalars); the docs join for doc_len shuffles on doc_id and
 benefits from bucketing the docs table by doc_id; stats is a broadcast
 scalar pair.  Conjunctive queries prune two-sidedly with the rarest
 term's doc range (the nextGEQ skip analog): whole chunks above the
@@ -52,11 +52,12 @@ import re
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from invertedindexbuilder_spark import BM25_B, BM25_K1, LEXICON_KEY_LEN
+from invertedindexbuilder_spark.functions.bm25 import d_avr
 from invertedindexbuilder_spark.functions.bm25 import idf as _idf
 from invertedindexbuilder_spark.functions.compress import (
     decode_blocks_pruned,
@@ -90,8 +91,8 @@ BMW_CANDIDATE_LIMIT = 200_000
 # cluster.  Full numbers in BENCH/SCALE.md.
 #
 # The decision variable is the query's total heavy-list posting
-# volume (r5) — the auto rule sums the matched heavy dfs, free in the
-# chunked path whose single-scan lookup already collected them.  The
+# volume (r5) — the auto rule sums the matched heavy dfs, free because
+# the single-scan lookup already collected them.  The
 # floor is recalibrated per decode generation: r6's batched varbyte
 # decode (compress.decode_block_run + the byte-position vb_decode)
 # made FULL decode 2.5-6x faster in page cache, and the re-measured
@@ -106,11 +107,6 @@ BMW_CANDIDATE_LIMIT = 200_000
 # with scripts/bench_bmw.py on the target cluster — full history in
 # BENCH/SCALE.md.
 AUTO_OR_PRUNE_MIN_HEAVY_POSTINGS = 500_000_000
-# Corpus floor below which the merged path skips even the per-term
-# metadata collect that the volume rule needs: with the default
-# heavy_df classifier a query needs heavy lists summing to 5e8
-# postings, implausible below ~10M docs.
-AUTO_OR_PRUNE_MIN_DOCS = 10_000_000
 # The conjunctive candidate path is cheaper than BMW (one rare-list
 # decode+collect, no scoring pass, no soundness-check job), so its
 # crossover comes earlier: measured deficit vs full decode was 1.86 s /
@@ -181,7 +177,6 @@ FACET_AND_PRUNE_MIN_SKIPPABLE_CONF = "spark.iib.facetAndPruneMinSkippable"
 # per query (RuntimeConfig), so a serving session can flip them live:
 #   spark.conf.set("spark.iib.autoOrPruneMinHeavyPostings", 2_000_000)
 OR_PRUNE_MIN_HEAVY_CONF = "spark.iib.autoOrPruneMinHeavyPostings"
-OR_PRUNE_MIN_DOCS_CONF = "spark.iib.autoOrPruneMinDocs"
 AND_PRUNE_MIN_DOCS_CONF = "spark.iib.autoAndPruneMinDocs"
 
 
@@ -209,50 +204,43 @@ def _key_weights(terms: list[str], strict: bool) -> dict[str, int]:
 def _match_keys(
     df: DataFrame, weights: dict[str, int], strict: bool
 ) -> DataFrame:
-    """Shared Q2/D5 key matching over any term-keyed table (merged
-    index rows or chunk rows): broadcast the (key, weight) pairs; in
-    strict mode push term-range predicates (key..key+0x7f) into the
-    scan and join on the 14-byte prefix.  Encoded ONCE so the merged
-    and chunked serving paths cannot diverge on lexicon semantics."""
-    spark = df.sparkSession
-    keys_df = spark.createDataFrame(
-        list(weights.items()), schema="key string, weight int"
-    )
-    if not strict:
-        return df.join(F.broadcast(keys_df), F.col("term") == F.col("key"))
-    prune = None
-    for k in weights:
-        cond = F.col("term").between(F.lit(k), F.lit(k + "\x7f"))
-        prune = cond if prune is None else (prune | cond)
-    return df.filter(prune).join(
-        F.broadcast(keys_df),
-        F.substring(F.col("term"), 1, LEXICON_KEY_LEN) == F.col("key"),
-    )
-
-
-def lookup_index_rows(
-    index: DataFrame, terms: list[str], strict: bool = True
-) -> DataFrame:
-    """Match query terms against the index (the Q2 lexicon lookup).
-
-    Returns index rows + (key, weight); at most one row per key (in
-    strict mode the byte-wise LAST matching term wins, replicating the
-    reference's overwrite-on-load collision policy).
-    """
-    weights = _key_weights(terms, strict)
-    if not weights:
-        return index.limit(0).withColumn("key", F.lit("")).withColumn(
-            "weight", F.lit(0)
-        )
-    matched = _match_keys(index, weights, strict)
+    """Shared Q2/D5 key matching over the term-keyed chunk table: adds
+    (key, weight) columns to the rows whose term matches a key; in
+    strict mode pushes term-range predicates (key..key+0x7f) into the
+    scan and matches on the 14-byte prefix.  The keys ride in the plan
+    as literals (an In-list and a key -> weight map), not as a joined
+    driver-built frame, whose every execution is a Spark job of its own.
+    Encoded ONCE so the single-query, batch and facet lookups cannot
+    diverge on lexicon semantics."""
     if strict:
-        # collision winner (last term in order, D5) via a tiny agg +
-        # broadcast join back — a row_number window here would EXCHANGE
-        # the matched rows incl. their payloads (GBs for a stopword
-        # term) just to rank a handful of collision candidates.
-        winner = matched.groupBy("key").agg(F.max("term").alias("term"))
-        matched = matched.join(F.broadcast(winner), ["key", "term"])
-    return matched
+        prune = None
+        for k in weights:
+            cond = F.col("term").between(F.lit(k), F.lit(k + "\x7f"))
+            prune = cond if prune is None else (prune | cond)
+        if prune is not None:
+            df = df.filter(prune)
+        key = F.substring(F.col("term"), 1, LEXICON_KEY_LEN)
+    else:
+        key = F.col("term")
+    weight_of = F.create_map(
+        *[F.lit(x) for kw in weights.items() for x in kw]
+    )
+    return (
+        df.withColumn("key", key)
+        .filter(F.col("key").isin(list(weights)))
+        .withColumn("weight", weight_of[F.col("key")].cast("int"))
+    )
+
+
+def _winner_match(
+    df: DataFrame, winners: dict, keys: list[str], strict: bool
+) -> DataFrame:
+    """:func:`_match_keys` restricted to the collision-winning terms of
+    ``keys`` (``winners`` from :func:`_lookup_chunk_meta`)."""
+    weights = {k: winners[k]["weight"] for k in keys}
+    return _match_keys(df, weights, strict).filter(
+        F.col("term").isin([winners[k]["term"] for k in keys])
+    )
 
 
 _DECODED_SCHEMA = T.StructType(
@@ -271,16 +259,16 @@ def decode_matched_rows(
     min_doc_id: int = 0,
     max_doc_id: int | None = None,
 ) -> DataFrame:
-    """Index rows -> exploded (key, df, weight, doc_id, tf) postings.
+    """Matched chunk rows -> exploded (key, df, weight, doc_id, tf)
+    postings.
 
     ``min_doc_id``/``max_doc_id`` bound the candidate doc range (from
     the rarest conjunctive term): blocks wholly outside are never
     decoded — the reference's nextGEQ skip, set-at-a-time.
 
-    Works on merged INDEX rows and on INDEX_CHUNK rows alike: a chunk's
-    first gap is absolute, so each row decodes independently.  When a
-    ``term_df`` column is present (chunked serving), it is emitted as
-    the scoring ``df`` while ``df`` itself stays the row's decode count.
+    A chunk's first gap is absolute, so each row decodes independently.
+    The lookup's full-term ``term_df`` column is emitted as the scoring
+    ``df``, while the row's own ``df`` stays its decode count.
 
     When an ``id_offset`` column is present (sharded serving,
     operators/sharding.py), it becomes block 0's delta-chain base, so
@@ -304,7 +292,7 @@ def decode_matched_rows(
                     block_counts=np.asarray(r.block_counts, dtype=np.int64),
                     max_doc_id=max_doc_id,
                 )
-                df_out = int(getattr(r, "term_df", r.df))
+                df_out = int(r.term_df)
                 if max_doc_id is not None and docs.size:
                     keep = docs <= max_doc_id
                     docs, tfs = docs[keep], tfs[keep]
@@ -434,7 +422,6 @@ def _driver_contribs(
 
 
 def _chunk_ioprune_filter(
-    spark: SparkSession,
     chunks: DataFrame,
     winners: dict,
     strict: bool,
@@ -474,24 +461,19 @@ def _chunk_ioprune_filter(
     bytes (pushed predicate + row-group/page stats), where the
     decode-level rule cannot (payload and metadata share rows).
     """
-    weights = {k: winners[k]["weight"] for k in heavy_keys}
-    meta_scan = _match_keys(
+    meta_scan = _winner_match(
         chunks.select(
             "term",
             "first_doc_id",
             F.element_at("last_doc_ids", -1).alias("last_doc"),
             F.array_max("max_tf").alias("cmt"),
         ),
-        weights,
+        winners,
+        heavy_keys,
         strict,
     )
-    wdf = spark.createDataFrame(
-        [(k, winners[k]["term"]) for k in heavy_keys],
-        schema="key string, term string",
-    )
     rows = (
-        meta_scan.join(F.broadcast(wdf), ["key", "term"])
-        .select("key", "first_doc_id", "last_doc", "cmt")
+        meta_scan.select("key", "first_doc_id", "last_doc", "cmt")
         .limit(OR_IOPRUNE_META_CAP + 1)
         .collect()
     )
@@ -566,7 +548,7 @@ def decode_matched_rows_bmw(
 ) -> DataFrame:
     """Heavy-list decode with distributed block-max (BMW-style) pruning
     — the set-at-a-time analog of local_query._disjunctive, using the
-    stored per-block ``max_tf`` the merged/chunked tables already carry.
+    stored per-block ``max_tf`` the chunk table already carries.
 
     A block of heavy term t decodes iff it may contain a CANDIDATE doc
     (one seen in a fully-decoded light list — candidates must be scored
@@ -604,7 +586,7 @@ def decode_matched_rows_bmw(
             for r in pdf.itertuples(index=False):
                 last = np.asarray(r.last_doc_ids, dtype=np.int64)
                 mt = np.asarray(r.max_tf, dtype=np.float64)
-                df_score = int(getattr(r, "term_df", r.df))
+                df_score = int(r.term_df)
                 w = int(r.weight)
                 t_idf = float(_idf(df_score, n_docs))
                 if t_idf <= 0:
@@ -617,9 +599,8 @@ def decode_matched_rows_bmw(
                     ub = w * t_idf * (BM25_K1 + 1.0) * mt / denom
                 keep_ub = ub >= (theta - others_ub[r.key])
                 # block b covers (lo[b], last[b]]; block 0's exclusive
-                # lower bound is the chunk's first doc - 1 (merged rows
-                # carry no first_doc_id -> -1, trivially sound)
-                first_lo = int(getattr(r, "first_doc_id", 0)) - 1
+                # lower bound is the chunk's first doc - 1
+                first_lo = int(r.first_doc_id) - 1
                 lo = np.concatenate(([first_lo], last[:-1]))
                 left = np.searchsorted(cand, lo + 1, side="left")
                 right = np.searchsorted(cand, last, side="right")
@@ -664,14 +645,12 @@ def decode_matched_rows_bmw(
 
 
 def _try_candidate_and_decode(
-    spark: SparkSession,
-    matched: DataFrame,
+    rows_for,
+    all_keys: list[str],
     rare_key: str,
     rare_df: int,
     cand_limit: int,
     counters: dict | None,
-    rows_for=None,
-    all_keys: list[str] | None = None,
 ) -> DataFrame | None:
     """Conjunctive candidate-block pruning — the distributed form of
     local_query._conjunctive's progressive intersection: the rarest
@@ -696,21 +675,17 @@ def _try_candidate_and_decode(
     stopword whose blocks would otherwise all decode — at 10^12 docs
     that is ~10^10 skipped blocks.
 
-    ``rows_for(keys)``: optional factory returning matched rows whose
-    SCAN predicate covers only ``keys`` — a plain ``matched.filter``
-    keeps every query term's range in the pushed filter, so the
-    rare-list job would read (and discard) the heavy terms' payload
-    bytes; at 10M docs that unpushed read measured 2x the whole
+    ``rows_for(keys)``: factory returning matched rows whose SCAN
+    predicate covers only ``keys`` — a plain filter on the shared
+    matched frame keeps every query term's range in the pushed filter,
+    so the rare-list job would read (and discard) the heavy terms'
+    payload bytes; at 10M docs that unpushed read measured 2x the whole
     full-decode query (BENCH/SCALE.md r4).
     """
     if rare_df > cand_limit:
         return None
-    if rows_for is not None:
-        rare_rows = rows_for([rare_key])
-        other_rows = rows_for([k for k in all_keys if k != rare_key])
-    else:
-        rare_rows = matched.filter(F.col("key") == F.lit(rare_key))
-        other_rows = matched.filter(F.col("key") != F.lit(rare_key))
+    rare_rows = rows_for([rare_key])
+    other_rows = rows_for([k for k in all_keys if k != rare_key])
     cand = np.sort(
         np.array(
             [
@@ -737,7 +712,8 @@ def _try_candidate_and_decode(
 
 def _try_bmw_or_decode(
     spark: SparkSession,
-    matched: DataFrame,
+    rows_for,
+    ioprune,
     meta: list,
     docs: DataFrame,
     stats: dict,
@@ -747,19 +723,17 @@ def _try_bmw_or_decode(
     heavy_df: int,
     cand_limit: int,
     counters: dict | None,
-    rows_for=None,
     round_digits: int | None = None,
-    ioprune=None,
     narrow=None,
 ) -> DataFrame | None:
-    """Disjunctive pruning orchestration shared by the merged and
-    chunked serving paths.  ``meta`` = one Row per key with (key, df,
-    weight, mt = list-wide max tf).  Returns ``(decoded, docs_narrow)``
-    — the pruned decoded-postings frame plus an optional
-    candidate-restricted docs frame for the scoring join (non-None only
-    on the candidate-only branch, whose bound check PROVES every result
-    doc is a candidate) — or None when pruning cannot help / cannot
-    stay bounded (caller falls back to full decode — always correct):
+    """Disjunctive pruning orchestration.  ``meta`` = one dict per key
+    with (key, df, weight, mt = list-wide max tf).  Returns
+    ``(decoded, docs_narrow)`` — the pruned decoded-postings frame plus
+    an optional candidate-restricted docs frame for the scoring join
+    (non-None only on the candidate-only branch, whose bound check
+    PROVES every result doc is a candidate) — or None when pruning
+    cannot help / cannot stay bounded (caller falls back to full decode
+    — always correct):
 
     - no heavy list (nothing to prune) or no light list (no theta seed);
     - light candidate volume above ``cand_limit`` (driver stays O(k +
@@ -767,17 +741,15 @@ def _try_bmw_or_decode(
       lesson);
     - fewer than k light candidates (theta would be -inf).
 
-    ``rows_for(keys)``: optional scan-pushed row factory (see
-    _try_candidate_and_decode) — without it the light pass's scan
-    predicate still covers the heavy terms, reading their payload
-    bytes just to discard them.
+    ``rows_for(keys)``: scan-pushed row factory (see
+    _try_candidate_and_decode) — so the light pass never reads the
+    heavy terms' payload bytes just to discard them.
 
     ``ioprune(heavy_keys, theta, cand_sorted, others_ub, cand_only)``:
-    optional chunk-granule scan-prune factory (chunked path only —
-    merged rows are one-per-term, nothing to skip at scan granularity);
-    returns a pushable Column over the heavy scan or None.  Applied
-    AFTER theta is known and BEFORE the heavy payload read, so skipped
-    chunks are skipped bytes (r7; see _chunk_ioprune_filter).
+    chunk-granule scan-prune factory; returns a pushable Column over
+    the heavy scan or None.  Applied AFTER theta is known and BEFORE
+    the heavy payload read, so skipped chunks are skipped bytes (r7;
+    see _chunk_ioprune_filter).
     """
     heavy = [m for m in meta if m["df"] > heavy_df]
     light = [m for m in meta if m["df"] <= heavy_df]
@@ -788,12 +760,8 @@ def _try_bmw_or_decode(
 
     light_keys = [m["key"] for m in light]
     heavy_keys = [m["key"] for m in heavy]
-    if rows_for is not None:
-        light_rows = rows_for(light_keys)
-        heavy_rows = rows_for(heavy_keys)
-    else:
-        light_rows = matched.filter(F.col("key").isin(light_keys))
-        heavy_rows = matched.filter(F.col("key").isin(heavy_keys))
+    light_rows = rows_for(light_keys)
+    heavy_rows = rows_for(heavy_keys)
 
     # pass 1: exact partial scores from the light lists -> theta + the
     # candidate doc set.  The light postings are cand_limit-bounded
@@ -845,13 +813,12 @@ def _try_bmw_or_decode(
         # is exact; otherwise fall back to full decode (correct, and
         # genuinely required — the top-k then hinges on tiny
         # differences among near-identical negative sums).
-        if ioprune is not None:
-            # candidate-only decode ⇒ candidate-free chunks contribute
-            # nothing; skip their payload at the scan (r7)
-            pred = ioprune(heavy_keys, float("inf"), cand_sorted,
-                           {m["key"]: 0.0 for m in heavy}, True)
-            if pred is not None:
-                heavy_rows = heavy_rows.filter(pred)
+        # candidate-only decode ⇒ candidate-free chunks contribute
+        # nothing; skip their payload at the scan (r7)
+        pred = ioprune(heavy_keys, float("inf"), cand_sorted,
+                       {m["key"]: 0.0 for m in heavy}, True)
+        if pred is not None:
+            heavy_rows = heavy_rows.filter(pred)
         heavy_cand = decode_matched_rows_bmw(
             heavy_rows, cand_sorted, float("inf"),
             {m["key"]: 0.0 for m in heavy},
@@ -937,14 +904,12 @@ def _try_bmw_or_decode(
     total_ub = sum(full_ubs.values())
     others_ub = {key: total_ub - ub for key, ub in full_ubs.items()}
 
-    if ioprune is not None:
-        # chunk-granule keep rule pushed into the heavy scan — the
-        # block-level rule below sees every block it would have kept
-        # (chunk-keep ⊇ block-keep), only the bytes read change (r7)
-        pred = ioprune(heavy_keys, float(theta), cand_sorted, others_ub,
-                       False)
-        if pred is not None:
-            heavy_rows = heavy_rows.filter(pred)
+    # chunk-granule keep rule pushed into the heavy scan — the
+    # block-level rule below sees every block it would have kept
+    # (chunk-keep ⊇ block-keep), only the bytes read change (r7)
+    pred = ioprune(heavy_keys, float(theta), cand_sorted, others_ub, False)
+    if pred is not None:
+        heavy_rows = heavy_rows.filter(pred)
     heavy_dec = decode_matched_rows_bmw(
         heavy_rows, cand_sorted, float(theta), others_ub,
         n_docs, min_doc_len, davr, counters=counters,
@@ -966,175 +931,22 @@ def bm25_expr(n_docs: int, davr: float):
     return idf * F.lit(BM25_K1 + 1.0) * F.col("tf") / denom
 
 
-def topk_bm25(
-    spark: SparkSession,
-    index: DataFrame,
-    docs: DataFrame,
-    stats: dict,
-    query: str,
-    mode: str = "and",
-    k: int = 10,
-    strict: bool = True,
-    prune_collect_limit: int = 100_000,
-    round_digits: int | None = None,
-    or_prune: bool | str = "auto",
-    and_prune: bool | str = "auto",
-    heavy_df: int = HEAVY_QUERY_DF,
-    cand_limit: int = BMW_CANDIDATE_LIMIT,
-    counters: dict | None = None,
-    exclude: str | None = None,
-    doc_filter=None,
-    exclude_doc_ids: DataFrame | None = None,
-) -> DataFrame:
-    """One top-k query -> DataFrame(doc_id, score) ordered desc.
-
-    ``stats`` needs n_docs and sum_doc_len; ``docs`` needs
-    (doc_id, doc_len).  ``round_digits`` rounds the score BEFORE the
-    top-k ordering (cross-engine-comparable results: ranking on raw
-    doubles could differ between float implementations at the k
-    boundary; ranking on rounded scores with a doc_id tiebreak cannot).
-    ``or_prune``: disjunctive block-max pruning (exact — see
-    decode_matched_rows_bmw) when the query mixes light and heavy
-    lists; falls back to full decode otherwise.
-
-    ``exclude``: NOT-terms — docs containing ANY of them leave the
-    result (the boolean surface the reference lacks; applied as an
-    anti-join after the per-doc aggregate).  IDF/d_avr still come from
-    full-corpus stats, matching the classic filtered-search semantics.
-    ``doc_filter``: Column predicate over ``docs`` columns (faceted
-    search); the inner doc_len join applies it before scoring, and at
-    scale it pushes into the docs-table scan.
-    ``exclude_doc_ids``: (doc_id) frame removed from the ranking the
-    same way as NOT-terms — the logical-deletion (tombstone) surface
-    (plans/deletes.py); stats stay as-indexed until a physical purge.
-    """
-    terms = tokenize_query(query)
-    matched = lookup_index_rows(index, terms, strict=strict)
-    if doc_filter is not None:
-        docs = docs.filter(doc_filter)
-    exclude_docs = exclude_doc_ids
-    if exclude or exclude_docs is not None:
-        # BMW OR-pruning is UNSOUND under exclusion: theta seeds from
-        # light-list candidates INCLUDING soon-to-be-excluded docs, so
-        # an inflated theta could prune heavy blocks holding docs that
-        # belong in the post-exclusion top-k.  Force the (exact) full
-        # decode; AND-mode pruning is score-free and stays on.
-        or_prune = False
-    if exclude:
-        ex_rows = lookup_index_rows(index, tokenize_query(exclude), strict=strict)
-        term_ex = decode_matched_rows(ex_rows).select("doc_id").distinct()
-        exclude_docs = (
-            term_ex
-            if exclude_docs is None
-            else exclude_docs.select("doc_id").unionByName(term_ex).distinct()
-        )
-
-    n_docs = int(stats["n_docs"])
-    davr = float(stats["sum_doc_len"]) / float(n_docs - 1)  # reference N-1 quirk
-    auto_or = or_prune == "auto"
-    if auto_or:
-        # provisional corpus floor; the real (posting-volume) decision
-        # happens below once the per-term metadata is collected
-        or_prune = n_docs >= _auto_floor(
-            spark, OR_PRUNE_MIN_DOCS_CONF, AUTO_OR_PRUNE_MIN_DOCS
-        )
-    if and_prune == "auto":
-        and_prune = n_docs >= _auto_floor(
-            spark, AND_PRUNE_MIN_DOCS_CONF, AUTO_AND_PRUNE_MIN_DOCS
-        )
-
-    # scan-pushed per-key frames for the pruning passes (same reason as
-    # the chunked path's rows_for: a filter on `matched` keeps every
-    # term's range in the pushed predicate, so e.g. the rare-list job
-    # would read the stopword row's payload just to discard it)
-    weights = _key_weights(terms, strict)
-
-    def rows_for(keys: list[str]) -> DataFrame:
-        m = _match_keys(index, {k: weights[k] for k in keys}, strict)
-        if strict:
-            winner = m.groupBy("key").agg(F.max("term").alias("term"))
-            m = m.join(F.broadcast(winner), ["key", "term"])
-        return m
-
-    min_doc, max_doc = 0, None
-    n_keys = None
-    decoded = None
-    if mode == "and":
-        # shortest-list-first (Q5): the rarest term bounds the candidate
-        # doc range; collect only its metadata when small enough.
-        # NB: only scalars come back — never the last_doc_ids array
-        # itself (a stopword term at 10^12 docs has ~10^10 blocks, tens
-        # of GB); driver metadata stays O(#query terms) regardless of df.
-        meta = matched.select(
-            "key", "df", F.element_at("last_doc_ids", -1).alias("last_doc")
-        ).collect()
-        n_keys = len(meta)
-        if n_keys == 0:
-            return spark.createDataFrame([], schema="doc_id long, score double")
-        rare = min(meta, key=lambda r: r["df"])
-        if rare["df"] <= prune_collect_limit:
-            max_doc = int(rare["last_doc"])
-        if and_prune and n_keys > 1:
-            res = _try_candidate_and_decode(
-                spark, matched, rare["key"], int(rare["df"]),
-                cand_limit, counters,
-                rows_for=rows_for, all_keys=[m["key"] for m in meta],
-            )
-            if res is not None:
-                decoded, cand = res
-                if 0 < cand.size <= DOCLEN_PUSH_CAP:
-                    # exact (see _try_candidate_and_decode): result
-                    # docs ⊆ candidates, ride-alongs can't pass the
-                    # all-keys filter — narrow the doc_len scan
-                    docs = docs.filter(
-                        F.col("doc_id").isin([int(x) for x in cand])
-                    )
-    elif mode == "or" and or_prune:
-        meta = matched.select(
-            "key", "df", "weight", F.array_max("max_tf").alias("mt")
-        ).collect()
-        # strict > to match _try_bmw_or_decode's heavy classifier: a
-        # term with df == heavy_df is decoded as a LIGHT list, so it
-        # must not count toward the prunable posting volume either
-        skippable = sum(r["df"] for r in meta if r["df"] > heavy_df)
-        if not auto_or or skippable >= _auto_floor(
-            spark, OR_PRUNE_MIN_HEAVY_CONF, AUTO_OR_PRUNE_MIN_HEAVY_POSTINGS
-        ):
-            res = _try_bmw_or_decode(
-                spark, matched, meta, docs, stats, n_docs, davr,
-                k, heavy_df, cand_limit, counters,
-                rows_for=rows_for, round_digits=round_digits,
-            )
-            if res is not None:
-                decoded, docs_narrow = res
-                if docs_narrow is not None:
-                    docs = docs_narrow
-
-    if decoded is None:
-        decoded = decode_matched_rows(
-            matched, min_doc_id=min_doc, max_doc_id=max_doc
-        )
-    return _score_topk(
-        decoded, docs, n_docs, davr, mode, n_keys, k, round_digits,
-        exclude_docs=exclude_docs,
-    )
-
-
 def _lookup_chunk_meta(
     chunks: DataFrame, terms: list[str], strict: bool = True
 ) -> tuple[DataFrame, dict]:
     """Match query terms against the CHUNKED index (INDEX_CHUNK);
     returns (matched rows, per-key winner metadata).
 
-    Same lexicon semantics as :func:`lookup_index_rows` (the shared
-    :func:`_match_keys` does the strict 14-byte matching for both
-    paths), but a matched term keeps ALL its chunk rows.  ONE
+    The shared :func:`_match_keys` does the strict 14-byte matching
+    (the byte-wise LAST matching term wins a key, replicating the
+    reference's overwrite-on-load collision policy); a matched term
+    keeps ALL its chunk rows.  ONE
     metadata-only aggregate (payload column dropped, so the parquet
     scan reads pruned metadata columns only) collects the tiny
     per-(key, term) stats to the driver — O(#keys x collision-set)
     rows — where the last-in-term-order collision winner (D5), the
     full-term df, doc-range bound, and list-wide max tf are all
-    derived.  The winner set joins back as a broadcast LITERAL, so the
+    derived.  The winner set rides back as plan literals, so the
     final plan holds exactly one payload-bearing chunk scan (pinned by
     test_plan_shape.test_chunk_lookup_single_payload_scan) and the
     AND/OR pruning decisions downstream need NO further aggregate jobs
@@ -1181,15 +993,26 @@ def _lookup_chunk_meta(
             }
     if not winners:
         return empty, {}
-    spark = chunks.sparkSession
-    winner_df = spark.createDataFrame(
-        [(k, w["term"], w["term_df"]) for k, w in winners.items()],
-        schema="key string, term string, term_df long",
+    return _winner_rows(chunks, winners, list(winners), strict), winners
+
+
+def _winner_rows(
+    chunks: DataFrame, winners: dict, keys: list[str], strict: bool
+) -> DataFrame:
+    """Chunk rows of the collision-winning terms of ``keys`` (``winners``
+    from :func:`_lookup_chunk_meta`), carrying (key, weight, term_df).
+    The SCAN predicate covers ONLY ``keys``, so the pruning passes can
+    decode e.g. the rare/light lists without reading the stopword
+    chunks' payload bytes (a filter on a frame matched for every key
+    keeps every term's range in the pushed filter; the key restriction
+    would only apply after the payloads are read)."""
+    term_dfs = {k: winners[k]["term_df"] for k in keys}
+    term_df_of = F.create_map(
+        *[F.lit(x) for kv in term_dfs.items() for x in kv]
     )
-    matched = _match_keys(chunks, weights, strict).join(
-        F.broadcast(winner_df), ["key", "term"]
+    return _winner_match(chunks, winners, keys, strict).withColumn(
+        "term_df", term_df_of[F.col("key")].cast("long")
     )
-    return matched, winners
 
 
 def lookup_chunk_rows(
@@ -1220,20 +1043,39 @@ def topk_bm25_chunked(
     exclude_doc_ids: DataFrame | None = None,
     docs_shards: list | None = None,
 ) -> DataFrame:
-    """Top-k BM25 served directly from the chunked index (INDEX_CHUNK).
+    """One top-k query over the chunked index (INDEX_CHUNK) ->
+    DataFrame(doc_id, score) ordered desc.
 
-    The 100 TB serving path: a heavy (stopword-scale) term's postings
-    live in many doc-range chunks, so its decode fans out one chunk per
-    task instead of serializing into the single task that holds the
-    GB-scale merged row.  Chunk payloads decode independently (absolute
-    first gap); BM25 needs the FULL-term df, carried as ``term_df``.
-    Results are identical to :func:`topk_bm25` over the merged index
-    (same gate oracle).  Reference anchor: the blockwise layout exists
+    The one distributed serving path: a heavy (stopword-scale) term's
+    postings live in many doc-range chunks, so its decode fans out one
+    chunk per task instead of serializing into the single task that
+    would hold a GB-scale one-row-per-term list.  Chunk payloads decode
+    independently (absolute first gap); BM25 needs the FULL-term df,
+    carried as ``term_df``.  Results do not depend on how a build
+    salted its chunks.  Reference anchor: the blockwise layout exists
     precisely so heavy lists decode incrementally (model_support.c).
 
-    ``exclude`` / ``doc_filter``: same boolean-NOT and faceted-filter
-    semantics as :func:`topk_bm25`.  ``exclude_doc_ids``: tombstone
-    frame, same semantics as in :func:`topk_bm25`.
+    ``stats`` needs n_docs and sum_doc_len; ``docs`` needs
+    (doc_id, doc_len).  ``round_digits`` rounds the score BEFORE the
+    top-k ordering (cross-engine-comparable results: ranking on raw
+    doubles could differ between float implementations at the k
+    boundary; ranking on rounded scores with a doc_id tiebreak cannot).
+    ``or_prune`` / ``and_prune``: exact disjunctive block-max and
+    conjunctive candidate pruning (see decode_matched_rows_bmw and
+    _try_candidate_and_decode); "auto" engages them above the measured
+    crossovers, and every path falls back to full decode when pruning
+    cannot help.
+
+    ``exclude``: NOT-terms — docs containing ANY of them leave the
+    result (the boolean surface the reference lacks; applied as an
+    anti-join after the per-doc aggregate).  IDF/d_avr still come from
+    full-corpus stats, matching the classic filtered-search semantics.
+    ``doc_filter``: Column predicate over ``docs`` columns (faceted
+    search); the inner doc_len join applies it before scoring, and at
+    scale it pushes into the docs-table scan.
+    ``exclude_doc_ids``: (doc_id) frame removed from the ranking the
+    same way as NOT-terms — the logical-deletion (tombstone) surface
+    (plans/deletes.py); stats stay as-indexed until a physical purge.
 
     ``docs_shards``: sharded serving only (operators/sharding.py) — a
     list of ``(raw_shard_docs, id_offset, shard_n_docs)`` so the
@@ -1269,7 +1111,7 @@ def topk_bm25_chunked(
         )
 
     n_docs = int(stats["n_docs"])
-    davr = float(stats["sum_doc_len"]) / float(n_docs - 1)
+    davr = d_avr(stats["sum_doc_len"], n_docs)
     if or_prune == "auto":
         # posting-volume rule, free here: the single-scan lookup
         # already collected every matched term's full df
@@ -1312,20 +1154,7 @@ def topk_bm25_chunked(
     # lookup already collected — NO further aggregate jobs / chunk
     # scans (r3 VERDICT #4: single-scan chunk lookup)
     def rows_for(keys: list[str]) -> DataFrame:
-        """Matched chunk rows whose SCAN predicate covers ONLY ``keys``
-        — the pruning passes use this so e.g. the rare/light decode
-        job never reads the stopword chunks' payload bytes (a filter
-        on the shared ``matched`` frame keeps every term's range in
-        the pushed filter; the key restriction only applies after the
-        payloads are already read)."""
-        w = {k: winners[k]["weight"] for k in keys}
-        wdf = spark.createDataFrame(
-            [(k, winners[k]["term"], winners[k]["term_df"]) for k in keys],
-            schema="key string, term string, term_df long",
-        )
-        return _match_keys(chunks, w, strict).join(
-            F.broadcast(wdf), ["key", "term"]
-        )
+        return _winner_rows(chunks, winners, keys, strict)
 
     min_doc, max_doc = 0, None
     n_keys = None
@@ -1357,9 +1186,8 @@ def topk_bm25_chunked(
                     )
 
             res = _try_candidate_and_decode(
-                spark, matched, rare_key, rare["term_df"],
+                rf, list(winners), rare_key, rare["term_df"],
                 cand_limit, counters,
-                rows_for=rf, all_keys=list(winners),
             )
             if res is not None:
                 decoded, cand = res
@@ -1391,16 +1219,15 @@ def topk_bm25_chunked(
             ) < OR_IOPRUNE_MIN_CHUNKS:
                 return None
             return _chunk_ioprune_filter(
-                spark, chunks, winners, strict, heavy_keys, theta,
+                chunks, winners, strict, heavy_keys, theta,
                 cand_sorted, others_ub, n_docs, min_dl, davr,
                 counters=counters, cand_only=cand_only,
             )
 
         res = _try_bmw_or_decode(
-            spark, matched, meta, docs, stats, n_docs, davr,
+            spark, rows_for, ioprune, meta, docs, stats, n_docs, davr,
             k, heavy_df, cand_limit, counters,
-            rows_for=rows_for, round_digits=round_digits,
-            ioprune=ioprune, narrow=narrow,
+            round_digits=round_digits, narrow=narrow,
         )
         if res is not None:
             decoded, docs_narrow = res
@@ -1436,8 +1263,8 @@ def _score_topk(
         "contrib", F.col("weight") * bm25_expr(n_docs, davr)
     )
     if mode == "and":
-        # (key, doc_id) is UNIQUE in decoded postings (one index row per
-        # key; chunk doc-ranges disjoint), so plain count(*) equals
+        # (key, doc_id) is UNIQUE in decoded postings (one winner term
+        # per key; its chunk doc-ranges disjoint), so plain count(*) equals
         # count_distinct(key) — and needs one exchange instead of the
         # distinct-agg's two.
         agg = contrib.groupBy("doc_id").agg(
@@ -1459,7 +1286,7 @@ def _score_topk(
 
 def facet_counts(
     spark: SparkSession,
-    index: DataFrame,
+    chunks: DataFrame,
     facets: DataFrame,
     query: str,
     facet_cols: list[str],
@@ -1471,7 +1298,7 @@ def facet_counts(
     """Facet distribution of the documents matching ``query`` ->
     DataFrame(*facet_cols, n_docs) ordered by count desc.
 
-    The search-UI companion to :func:`topk_bm25`: "this query matches
+    The search-UI companion to :func:`topk_bm25_chunked`: "this query matches
     1,204 python docs from github, 310 go docs from gitlab, ..." —
     boolean match semantics (AND: doc holds every matched key; OR:
     any), no scoring, so unknown terms drop exactly as the reference's
@@ -1479,9 +1306,7 @@ def facet_counts(
     surface — this is part of the serving extension layer, like
     boolean NOT).
 
-    ``index``: merged INDEX or INDEX_CHUNK frame (layout detected by
-    the ``first_doc_id`` column, same lexicon semantics either way).
-    ``facets``: (doc_id, *facet_cols) frame — any docs-side attribute
+    ``chunks``: the INDEX_CHUNK frame.  ``facets``: (doc_id, *facet_cols) frame — any docs-side attribute
     table.  ``exclude_doc_ids``: tombstone frame, anti-joined against
     the match set (plans/deletes.py logical deletion), so facet counts
     honor deletions like every other query surface.
@@ -1494,18 +1319,10 @@ def facet_counts(
     #distinct facet values.  No payload ever reaches the driver.
     """
     if mode not in ("and", "or"):
-        # before any lookup/action (ADVICE r7: an invalid mode used to
-        # trigger a full distinct-count job on the merged layout first)
+        # before any lookup/action: an invalid mode must not cost a job
         raise ValueError(f"mode must be 'and' or 'or', got {mode!r}")
-    terms = tokenize_query(query)
-    chunked = "first_doc_id" in index.columns
-    winners: dict = {}
-    if chunked:
-        matched, winners = _lookup_chunk_meta(index, terms, strict)
-        n_keys = len(winners)
-    else:
-        matched = lookup_index_rows(index, terms, strict)
-        n_keys = matched.select("key").distinct().count()
+    matched, winners = _lookup_chunk_meta(chunks, tokenize_query(query), strict)
+    n_keys = len(winners)
     facet_side = facets.select("doc_id", *facet_cols)
     if n_keys == 0:
         return facet_side.drop("doc_id").limit(0).withColumn(
@@ -1518,7 +1335,7 @@ def facet_counts(
         )
         return out.limit(top) if top is not None else out
 
-    if chunked and mode == "and" and exclude_doc_ids is None:
+    if mode == "and" and exclude_doc_ids is None:
         # r8 conjunctive candidate path: the match set is bounded by
         # the rarest key's list.  Decode it fully, candidate-only
         # decode the other keys (ride-alongs dropped in-decoder), and
@@ -1533,23 +1350,12 @@ def facet_counts(
         floor = spark.conf.get(FACET_AND_PRUNE_MIN_SKIPPABLE_CONF, None)
         floor = FACET_AND_PRUNE_MIN_SKIPPABLE if floor is None else int(floor)
         if rare["term_df"] <= DOCLEN_PUSH_CAP and skippable >= floor:
-            def rows_for(keys: list[str]) -> DataFrame:
-                wdf = spark.createDataFrame(
-                    [
-                        (k, winners[k]["term"], winners[k]["term_df"])
-                        for k in keys
-                    ],
-                    schema="key string, term string, term_df long",
-                )
-                return _match_keys(
-                    index, {k: 1 for k in keys}, strict
-                ).join(F.broadcast(wdf), ["key", "term"])
-
+            rare_rows = _winner_rows(chunks, winners, [rare_key], strict)
             cand = np.sort(
                 np.array(
                     [
                         r["doc_id"]
-                        for r in decode_matched_rows(rows_for([rare_key]))
+                        for r in decode_matched_rows(rare_rows)
                         .select("doc_id")
                         .collect()
                     ],
@@ -1561,7 +1367,10 @@ def facet_counts(
                 import collections
 
                 others = decode_matched_rows_bmw(
-                    rows_for([k for k in winners if k != rare_key]),
+                    _winner_rows(
+                        chunks, winners,
+                        [k for k in winners if k != rare_key], strict,
+                    ),
                     cand, float("inf"), collections.defaultdict(float),
                     n_docs=1 << 62, min_doc_len=1.0, davr=1.0,
                     cand_only=True,
@@ -1593,7 +1402,7 @@ def facet_counts(
         match_ids = match_ids.join(
             exclude_doc_ids.select("doc_id"), "doc_id", "left_anti"
         )
-    if mode == "and" and winners:
+    if mode == "and":
         # the match set is bounded by the rarest key's df — broadcast
         # it while that bound is broadcast-sized, so the facet table
         # streams through a hash join instead of shuffling (r8)

@@ -132,9 +132,8 @@ def sharded_view(shards: list[dict]) -> dict:
 
 
 def load_shards(spark: SparkSession, roots: list[str]) -> list[dict]:
-    """Load shard frames from build catalogs (chunked builds only —
-    the scatter needs the doc-range chunk table; a merged-only build
-    has one row per term with no per-shard decode fan-out to keep)."""
+    """Load shard frames (chunk table, docs, stats, tombstones) from
+    build catalogs."""
     from invertedindexbuilder_spark.catalog import Catalog
     from invertedindexbuilder_spark.plans.build import load_stats
     from invertedindexbuilder_spark.plans.deletes import load_tombstones
@@ -142,11 +141,6 @@ def load_shards(spark: SparkSession, roots: list[str]) -> list[dict]:
     shards = []
     for root in roots:
         cat = Catalog(spark, root)
-        if not cat.exists("index_chunks"):
-            raise ValueError(
-                f"sharded serving requires chunked builds (no "
-                f"index_chunks under {root}; build with write_chunks=True)"
-            )
         shards.append(
             {
                 "chunks": cat.read("index_chunks"),

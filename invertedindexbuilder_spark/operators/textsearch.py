@@ -201,7 +201,7 @@ def prefix_terms(
     """Vocabulary terms starting with ``prefix`` (wildcard ``pre*``
     lookup).  startswith compiles to a [prefix, prefix+0xFF) range on a
     term-sorted/partitioned lexicon — file-pruning at scale, which is
-    how the merged index's term-range pushdown already serves Q2."""
+    how the chunk table's term-range pushdown already serves Q2."""
     if not prefix:
         raise ValueError("empty prefix")
     return (

@@ -1,4 +1,5 @@
-"""End-to-end index build plan: docs_src -> docs, postings*, index, stats.
+"""End-to-end index build plan: docs_src -> docs, postings*, index_chunks,
+index (optional export), stats.
 
 Phase mapping to the reference (SURVEY §3.1) — each materialized table
 is the analog of one of its file boundaries, and each is a resumable
@@ -8,8 +9,8 @@ checkpoint with lineage + metrics in ``manifest.json``:
   --------------------------------------+----------------------------------
   PARSE  (tokenize + tf + doc table)    | docs table + postings (narrow)
   SORT + MERGE (external sort runs)     | one repartitionByRange shuffle
-  FINAL BUILD (blockwise encode)        | streaming encoder -> index table
-  lexicon/doc_table/inverted_list files | docs / stats / index tables
+  FINAL BUILD (blockwise encode)        | streaming encoder -> index_chunks
+  lexicon/doc_table/inverted_list files | docs / stats / index_chunks
 
 Resume: a phase whose output table exists and whose manifest entry
 matches the input fingerprint is skipped (kill the driver mid-build,
@@ -158,21 +159,20 @@ def build(
     checkpoint_postings: bool = False,
     num_partitions: int | None = None,
     tokenizer: str = "arrow",
-    write_chunks: bool = False,
     merged: bool = True,
 ) -> dict:
     """Run (or resume) the full build.  Returns the manifest dict.
 
-    ``merged=False`` skips the one-row-per-term INDEX entirely (implies
-    ``write_chunks``): serving runs from INDEX_CHUNK
-    (query_exec.topk_bm25_chunked), where a heavy term's payload never
-    materializes in one task — at 10^12 docs the merged artifact's
-    worst row is a multi-GB parquet cell, so chunk-only is the default
-    posture at scale; the merged table is the reference-parity artifact
-    for oracle runs.  With ``merged=True`` the per-term assembly is
-    tree-merged (operators.index_build.merge_chunks fanin) so no single
-    task concatenates more than DEFAULT_MERGE_FANIN chunk rows per
-    level.
+    Every build persists INDEX_CHUNK (``index_chunks``), the one
+    serving layout: a heavy term's payload never materializes in one
+    task (query_exec.topk_bm25_chunked), where at 10^12 docs a
+    one-row-per-term list is a multi-GB parquet cell.  ``merged=True``
+    also exports the one-row-per-term INDEX (``index``) as the
+    reference-parity artifact for oracle runs and introspection — no
+    query path reads it.  The export is tree-merged from the stored
+    chunks (operators.index_build.merge_chunks fanin) so no single task
+    concatenates more than DEFAULT_MERGE_FANIN chunk rows per level.
+    ``merged=False`` skips it: the at-scale posture.
 
     Job-count discipline (it dominates wall time once stages scale):
     the input is scanned exactly twice on a fresh build (range-partition
@@ -182,8 +182,6 @@ def build(
     input-side fingerprint scan only happens on RESUME, where it is the
     point.
     """
-    if not merged:
-        write_chunks = True
     cat = Catalog(spark, out_root)
     manifest = BuildManifest(out_root)
 
@@ -315,8 +313,12 @@ def build(
 
     # ---- phase 3: index (SORT+MERGE shuffle + FINAL BUILD encode) ----
     t0 = time.time()
-    index_table = "index" if merged else "index_chunks"
-    if not (manifest.phase_done("index", fp) and cat.exists(index_table)):
+    index_done = (
+        manifest.phase_done("index", fp)
+        and cat.exists("index_chunks")
+        and (not merged or cat.exists("index"))
+    )
+    if not index_done:
         if checkpoint_postings:
             # postings are materialized: exact skew detection is cheap
             eff_threshold, eff_chunk_blocks, heavy = resolve_salting(
@@ -336,66 +338,52 @@ def build(
             chunk_blocks=eff_chunk_blocks,
             heavy=heavy,
         )
-        if write_chunks:
-            # persist the chunked table — the SERVING artifact at scale
-            # (heavy terms decode one chunk per task; see
-            # query_exec.topk_bm25_chunked) — and derive the merged
-            # reference-parity index FROM it, so encode runs once.
-            #
-            # TERM-RANGE-CLUSTERED layout (r7): the encode shuffle is
-            # hash(term, salt), so without this every parquet file
-            # holds a random term subset and its min/max stats span the
-            # whole vocabulary — a single-term payload probe then reads
-            # ~40 % of the table (measured cold on the 30M index:
-            # 693 MB for ONE chunk row; 19 MB after clustering, 36x —
-            # BENCH/SCALE.md).  repartitionByRange keeps file stats
-            # tight so the query side's pushed term predicates prune
-            # files/row-groups with NO query-side changes; (salt,
-            # first_doc_id) sub-keys let the range boundaries split a
-            # stopword's chunk run across partitions, so no write-skew.
-            # The persist bounds the cost: the range sampler and the
-            # shuffle both read the cached encode output instead of
-            # re-executing tokenize+encode (MEMORY_AND_DISK — spills,
-            # never recomputes).  Purge/compact/shift outputs are
-            # narrow maps over this table, so they inherit the layout.
-            if cat.iceberg:
-                # Iceberg tables get layout from the table's sort-order
-                # / compaction config, not from write partitioning
-                cat.write(chunks, "index_chunks",
-              row_group_bytes=CHUNK_ROW_GROUP_BYTES)
-            else:
-                from pyspark.storagelevel import StorageLevel
-
-                chunks = chunks.persist(StorageLevel.MEMORY_AND_DISK)
-                cat.write(
-                    chunks.repartitionByRange(
-                        "term", "salt", "first_doc_id"
-                    ).sortWithinPartitions("term", "salt", "first_doc_id"),
-                    "index_chunks",
-                    row_group_bytes=CHUNK_ROW_GROUP_BYTES,
-                )
-                chunks.unpersist()
-            chunks = cat.read("index_chunks")
-        if merged:
-            # fanin (tree merge) needs a chunk-count pass; that is free
-            # when the chunk table is materialized (write_chunks) but
-            # would RE-EXECUTE the whole tokenize+encode lineage when it
-            # is not — so unmaterialized builds (small/oracle corpora)
-            # keep the flat merge, and the at-scale path (write_chunks,
-            # always on for merged=False) gets the bounded tree.
-            fanin = DEFAULT_MERGE_FANIN if write_chunks else None
-            index = merge_chunks(chunks, fanin=fanin)
-            cat.write(index, "index")
-            idx = cat.read("index")
-            terms_expr = F.count("*").alias("terms")
+        # persist the chunked table — the SERVING artifact (heavy
+        # terms decode one chunk per task; see
+        # query_exec.topk_bm25_chunked) — and derive the merged export
+        # FROM it, so encode runs once.
+        #
+        # TERM-RANGE-CLUSTERED layout (r7): the encode shuffle is
+        # hash(term, salt), so without this every parquet file holds a
+        # random term subset and its min/max stats span the whole
+        # vocabulary — a single-term payload probe then reads ~40 % of
+        # the table (measured cold on the 30M index: 693 MB for ONE
+        # chunk row; 19 MB after clustering, 36x — BENCH/SCALE.md).
+        # repartitionByRange keeps file stats tight so the query side's
+        # pushed term predicates prune files/row-groups with NO
+        # query-side changes; (salt, first_doc_id) sub-keys let the
+        # range boundaries split a stopword's chunk run across
+        # partitions, so no write-skew.  The persist bounds the cost:
+        # the range sampler and the shuffle both read the cached encode
+        # output instead of re-executing tokenize+encode
+        # (MEMORY_AND_DISK — spills, never recomputes).
+        # Purge/compact/shift outputs are narrow maps over this table,
+        # so they inherit the layout.
+        if cat.iceberg:
+            # Iceberg tables get layout from the table's sort-order /
+            # compaction config, not from write partitioning
+            cat.write(chunks, "index_chunks",
+                      row_group_bytes=CHUNK_ROW_GROUP_BYTES)
         else:
-            # chunk-only build: metrics from the chunk table (sum(df)
-            # over chunks is exactly the posting count; a term is
-            # counted once however many chunks it spans)
-            idx = cat.read("index_chunks")
-            terms_expr = F.count_distinct("term").alias("terms")
-        m = idx.agg(
-            terms_expr,
+            from pyspark.storagelevel import StorageLevel
+
+            chunks = chunks.persist(StorageLevel.MEMORY_AND_DISK)
+            cat.write(
+                chunks.repartitionByRange(
+                    "term", "salt", "first_doc_id"
+                ).sortWithinPartitions("term", "salt", "first_doc_id"),
+                "index_chunks",
+                row_group_bytes=CHUNK_ROW_GROUP_BYTES,
+            )
+            chunks.unpersist()
+        chunks = cat.read("index_chunks")
+        if merged:
+            cat.write(merge_chunks(chunks, fanin=DEFAULT_MERGE_FANIN), "index")
+        # metrics from the chunk table (sum(df) over chunks is exactly
+        # the posting count; a term is counted once however many chunks
+        # it spans)
+        m = chunks.agg(
+            F.count_distinct("term").alias("terms"),
             F.sum("df").alias("postings"),
             F.sum(F.length("payload")).alias("payload_bytes"),
             F.sum(F.size("last_doc_ids")).alias("blocks"),
@@ -436,7 +424,7 @@ def build(
                 "min_doc_len": d["min_doc_len"],
             }
         if "terms" not in iph:
-            i = cat.read(index_table).agg(
+            i = cat.read("index_chunks").agg(
                 F.count_distinct("term").alias("terms"),
                 F.sum("df").alias("postings"),
             ).collect()[0]
@@ -754,13 +742,12 @@ def compact(
     validate: bool = True,
     streamed_postings: DataFrame | None = None,
 ) -> dict:
-    """Fold a DELTA corpus (new files only) into an existing build made
-    with ``write_chunks=True`` — old postings are never re-tokenized or
-    re-encoded (operators/index_build.compact_chunks); only the delta
-    is, plus an O(index-size) rewrite of the index table(s) and an
-    append to the docs table.  Works against both build layouts: a
-    chunk-only build (``merged=False``) rewrites only ``index_chunks``;
-    a merged build also re-derives ``index``.
+    """Fold a DELTA corpus (new files only) into an existing build —
+    old postings are never re-tokenized or re-encoded
+    (operators/index_build.compact_chunks); only the delta is, plus an
+    O(index-size) rewrite of ``index_chunks`` and an append to the docs
+    table.  A build that keeps the merged export (``merged=True``) also
+    re-derives ``index``.
 
     Delta doc_ids continue after the old maximum in delta-key order —
     arrival order, exactly how the reference numbers appended input
@@ -808,11 +795,6 @@ def compact(
 
     cat = Catalog(spark, out_root)
     manifest = BuildManifest(out_root)
-    if not cat.exists("index_chunks"):
-        raise ValueError(
-            "compact requires an existing build made with write_chunks=True "
-            f"(no index_chunks table under {out_root})"
-        )
     has_merged = cat.exists("index")
     stats = load_stats(spark, out_root)
     n_old = int(stats["n_docs"])
@@ -1044,7 +1026,7 @@ def merge_builds(
     merged: bool = False,
     validate: bool = True,
 ) -> dict:
-    """FEDERATED index merge: two independent chunked builds over
+    """FEDERATED index merge: two independent builds over
     DISJOINT corpora (each with its own dense ids 0..n-1) become one
     build at ``out_root`` — the shard-and-merge pattern for building a
     10^12-doc index as independent jobs.
@@ -1074,12 +1056,6 @@ def merge_builds(
         )
     cat_a, cat_b = Catalog(spark, root_a), Catalog(spark, root_b)
     cat = Catalog(spark, out_root)
-    for c, r in ((cat_a, root_a), (cat_b, root_b)):
-        if not c.exists("index_chunks"):
-            raise ValueError(
-                f"merge_builds requires chunked builds (no index_chunks "
-                f"under {r}; build with write_chunks=True)"
-            )
     sa, sb = load_stats(spark, root_a), load_stats(spark, root_b)
     n_a = int(sa["n_docs"])
     t0 = time.time()

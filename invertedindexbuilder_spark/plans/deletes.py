@@ -154,7 +154,8 @@ def purge_deletes(
     """Physically remove every tombstoned doc from the build at
     ``out_root`` and clear the tombstone set.
 
-    Rewrites docs / index_chunks / index (if present) / stats into
+    Rewrites docs / index_chunks / index (the merged export, if
+    present) / stats into
     fresh generation dirs and publishes them together with the emptied
     tombstone table in ONE atomic tables.json flip — a crash mid-purge
     leaves the previous generation fully live (tombstones still
@@ -267,52 +268,24 @@ def purge_deletes(
         remap_phys,
     )
 
-    # ---- index: shift-or-reencode per chunk (or per merged row — a
-    # merged INDEX row is one whole-list chunk with salt 0 whose first
-    # varbyte IS the absolute first doc id) ----
-    publish_map = {"docs": docs_phys, "id_remap": remap_phys}
-    has_chunks = cat.exists("index_chunks")
-    if has_chunks:
-        chunks_phys = f"index_chunks.g{gen}"
-        cat.write(purge_chunks(cat.read("index_chunks"), deleted),
-                  chunks_phys, row_group_bytes=CHUNK_ROW_GROUP_BYTES)
-        new_chunks_tbl = spark.read.parquet(cat.path(chunks_phys))
-        publish_map["index_chunks"] = chunks_phys
-        if cat.exists("index"):
-            index_phys = f"index.g{gen}"
-            cat.write(
-                merge_chunks(new_chunks_tbl, fanin=DEFAULT_MERGE_FANIN),
-                index_phys,
-            )
-            publish_map["index"] = index_phys
-        stats_src = new_chunks_tbl
-    else:
-        from invertedindexbuilder_spark.functions.compress import vb_decode
-
-        @F.pandas_udf("long")
-        def first_vb(payloads):
-            import pandas as pd
-
-            return pd.Series(
-                [int(vb_decode(bytes(p)[:10], count=1)[0]) for p in payloads]
-            )
-
-        as_chunks = cat.read("index").select(
-            "term",
-            F.lit(0).alias("salt"),
-            first_vb(F.col("payload")).alias("first_doc_id"),
-            "df", "last_doc_ids", "block_bytes", "block_counts",
-            "max_tf", "payload",
-        )
+    # ---- index: shift-or-reencode per chunk; the merged export (if
+    # the build keeps one) re-derives from the purged chunks ----
+    chunks_phys = f"index_chunks.g{gen}"
+    cat.write(purge_chunks(cat.read("index_chunks"), deleted),
+              chunks_phys, row_group_bytes=CHUNK_ROW_GROUP_BYTES)
+    new_chunks_tbl = spark.read.parquet(cat.path(chunks_phys))
+    publish_map = {
+        "docs": docs_phys, "id_remap": remap_phys, "index_chunks": chunks_phys,
+    }
+    if cat.exists("index"):
         index_phys = f"index.g{gen}"
         cat.write(
-            purge_chunks(as_chunks, deleted).drop("salt", "first_doc_id"),
+            merge_chunks(new_chunks_tbl, fanin=DEFAULT_MERGE_FANIN),
             index_phys,
         )
         publish_map["index"] = index_phys
-        stats_src = spark.read.parquet(cat.path(index_phys))
 
-    m = stats_src.agg(
+    m = new_chunks_tbl.agg(
         F.count_distinct("term").alias("terms"),
         F.sum("df").alias("postings"),
     ).collect()[0]

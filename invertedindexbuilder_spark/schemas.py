@@ -9,8 +9,12 @@ otherwise):
 - ``docs``     — docID lexicon: deterministic doc_id, synthesized url,
   reference doc_len semantics, sha256(content) per-row invariant.
 - ``postings`` — (term, doc_id, tf); intermediate, checkpointable.
-- ``index``    — one row per term (or per (term, salt) chunk before the
-  final chunk-merge): df + block metadata + compressed payload.
+- ``index_chunks`` — the serving layout: one row per (term, salt)
+  doc-range chunk (``first_doc_id`` + df + block metadata + compressed
+  payload whose first gap is absolute); every query path reads it.
+- ``index``    — optional merged export (``build(merged=True)``): one
+  row per term, the reference-parity artifact for oracle runs and
+  introspection; no query path reads it.
 - ``stats``    — singleton corpus aggregates used by the scorer.
 """
 
@@ -64,7 +68,8 @@ INDEX = T.StructType(
     ]
 )
 
-# pre-merge salted chunk rows (heavy terms only; SURVEY §7.4)
+# serving chunk rows: one per (term, salt); light terms are one salt-0
+# chunk, heavy terms span doc-range chunks (SURVEY §7.4)
 INDEX_CHUNK = T.StructType(
     [
         T.StructField("term", T.StringType(), False),

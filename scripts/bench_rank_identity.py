@@ -20,9 +20,8 @@ Surfaces (each compared independently against the pure-pandas spec
 oracle, tests/oracle_util.CorpusOracle — the query golden source,
 since the reference C binary's own query path carries defect D3):
 
-- merged:   query_exec.topk_bm25 over the one-row-per-term index,
-- chunked:  query_exec.topk_bm25_chunked over INDEX_CHUNK (the 100 TB
-            serving path),
+- chunked:  query_exec.topk_bm25_chunked over INDEX_CHUNK (the
+            distributed serving path),
 - local:    local_query.LocalIndex/topk_local (the -q session analog),
 - sharded:  topk_bm25_chunked over a two-shard sharded_view split on
             the id midpoint (scatter-gather serving; r8, VERDICT r7
@@ -41,7 +40,8 @@ else => real defect, go fix it).
 
 Prints one JSON line:
   {"rank_identity_rate": 1.0, "n_evals": N, "k": 10,
-   "surfaces": {"merged": 1.0, "chunked": 1.0, "local": 1.0}, ...}
+   "surfaces": {"chunked": 1.0, "local": 1.0, "sharded": 1.0,
+                "batch": 1.0}, ...}
 """
 
 from __future__ import annotations
@@ -124,9 +124,8 @@ def ensure_index(spark, n_docs: int, keep: bool) -> str:
                 return out
     shutil.rmtree(out, ignore_errors=True)
     t0 = time.time()
-    build(spark, synthetic_docs_src(spark, n_docs), out,
-          write_chunks=True, merged=True)
-    print(f"# built idx_{n_docs} (merged+chunks) in {time.time()-t0:.1f}s",
+    build(spark, synthetic_docs_src(spark, n_docs), out, merged=False)
+    print(f"# built idx_{n_docs} (chunks) in {time.time()-t0:.1f}s",
           file=sys.stderr)
     return out
 
@@ -144,7 +143,7 @@ def main() -> int:
     from invertedindexbuilder_spark.operators.local_query import (
         LocalIndex, topk_local)
     from invertedindexbuilder_spark.operators.query_exec import (
-        tokenize_query, topk_bm25, topk_bm25_chunked)
+        tokenize_query, topk_bm25_chunked)
     from invertedindexbuilder_spark.plans.build import load_stats
     from invertedindexbuilder_spark.session import get_spark
     from tests.oracle_util import CorpusOracle
@@ -152,20 +151,15 @@ def main() -> int:
     spark = get_spark(cores=args.cores)
     root = ensure_index(spark, args.docs, args.keep)
     cat = Catalog(spark, root)
-    index = cat.read("index").cache()
     chunks = cat.read("index_chunks").cache()
     docs = cat.read("docs").cache()
     stats = load_stats(spark, root)
-    index.count(), chunks.count(), docs.count()  # warm the caches
+    chunks.count(), docs.count()  # warm the caches
 
     t0 = time.time()
     oracle = CorpusOracle(args.docs)
     print(f"# oracle built in {time.time()-t0:.1f}s", file=sys.stderr)
     queries = build_query_set(oracle)
-
-    def surface_merged(q, mode):
-        return [(r["doc_id"], r["score"]) for r in topk_bm25(
-            spark, index, docs, stats, q, mode=mode, k=args.k).collect()]
 
     def surface_chunked(q, mode):
         return [(r["doc_id"], r["score"]) for r in topk_bm25_chunked(
@@ -247,8 +241,7 @@ def main() -> int:
             }
         return batch_cache[mode].get(qid_of[q], [])
 
-    surfaces = {"merged": surface_merged, "chunked": surface_chunked,
-                "local": surface_local, "sharded": surface_sharded,
+    surfaces = {"chunked": surface_chunked, "local": surface_local, "sharded": surface_sharded,
                 "batch": surface_batch}
     per_surface = {name: [0, 0] for name in surfaces}  # [identical, total]
     mismatches = []

@@ -32,19 +32,14 @@ def main() -> int:
     ap.add_argument("--chunk-blocks", type=int, default=None,
                     help="blocks per salted chunk (default: adaptive)")
     ap.add_argument("--checkpoint-postings", action="store_true")
-    ap.add_argument("--write-chunks", action="store_true",
-                    help="also persist the chunked serving table "
-                         "(index_chunks) for topk_bm25_chunked / "
-                         "query_cli --chunked")
     ap.add_argument("--chunks-only", action="store_true",
-                    help="skip the merged one-row-per-term index "
-                         "(build merged=False): serve purely from "
-                         "index_chunks — the at-scale posture; implies "
-                         "--write-chunks")
+                    help="skip the merged one-row-per-term export "
+                         "(build merged=False); every build serves from "
+                         "the chunk table (index_chunks) either way — "
+                         "the at-scale posture")
     ap.add_argument("--compact", action="store_true",
                     help="treat the input as a DELTA of new files and "
-                         "fold it into the existing build at --out "
-                         "(requires a prior --write-chunks build); old "
+                         "fold it into the existing build at --out; old "
                          "postings are never re-tokenized or re-encoded")
     ap.add_argument("--synthetic-start", type=int, default=0,
                     help="with --synthetic: generate rows "
@@ -172,7 +167,6 @@ def main() -> int:
         chunk_blocks=args.chunk_blocks,
         checkpoint_postings=args.checkpoint_postings,
         tokenizer=args.tokenizer,
-        write_chunks=args.write_chunks,
         merged=not args.chunks_only,
     )
     wall = time.time() - t0

@@ -3,9 +3,9 @@
     python scripts/merge_indexes.py --a /path/shardA --b /path/shardB \
         --out /path/merged [--merged-index]
 
-Both shards must be chunked builds (build --write-chunks) over
-DISJOINT corpora; the merge is metadata-only (one varbyte rewritten
-per chunk of shard B).  Prints the merged stats as one JSON line.
+Both shards are builds over DISJOINT corpora; the merge is
+metadata-only (one varbyte rewritten per chunk of shard B).  Prints
+the merged stats as one JSON line.
 """
 
 from __future__ import annotations

@@ -22,7 +22,7 @@ def main() -> int:
     ap.add_argument("--index", default=None)
     ap.add_argument("--shards", metavar="ROOT1,ROOT2,...", default=None,
                     help="with --spark: scatter-gather serving over "
-                         "INDEPENDENT chunked shard builds (disjoint "
+                         "INDEPENDENT shard builds (disjoint "
                          "corpora, dense local ids) — one lazy-union "
                          "job, global df/N/d_avr, results identical to "
                          "querying merge_builds' output")
@@ -31,17 +31,15 @@ def main() -> int:
     ap.add_argument("--no-strict", action="store_true",
                     help="disable the reference's 14-char key truncation")
     ap.add_argument("--spark", action="store_true",
-                    help="distributed DataFrame execution instead of the "
-                         "driver-local session")
-    ap.add_argument("--chunked", action="store_true",
-                    help="with --spark: serve from the chunked index "
-                         "(index_chunks, built with --write-chunks) — "
-                         "heavy terms decode one chunk per task")
+                    help="distributed DataFrame execution over the "
+                         "chunk table (index_chunks; heavy terms decode "
+                         "one chunk per task) instead of the driver-local "
+                         "session")
     ap.add_argument("--batch", metavar="QUERIES_FILE",
                     help="with --spark: answer a whole FILE of queries "
                          "(one per line) in ONE job via "
                          "operators/query_batch.topk_bm25_batch — each "
-                         "matched index row decodes once however many "
+                         "matched chunk row decodes once however many "
                          "queries share the term")
     ap.add_argument("--not", dest="exclude", metavar="TERMS", default=None,
                     help="with --spark: boolean NOT — exclude docs "
@@ -215,8 +213,7 @@ def _spark_batch(args) -> int:
         tombstones = view["tombstones"]
     else:
         cat = Catalog(spark, args.index)
-        table = "index_chunks" if args.chunked else "index"
-        index = cat.read(table)
+        index = cat.read("index_chunks")
         docs = cat.read("docs").select("doc_id", "doc_len")
         stats = load_stats(spark, args.index)
         tombstones = None
@@ -246,7 +243,6 @@ def _spark_batch(args) -> int:
 def _spark_runner(args):
     from invertedindexbuilder_spark.catalog import Catalog
     from invertedindexbuilder_spark.operators.query_exec import (
-        topk_bm25,
         topk_bm25_chunked,
     )
     from invertedindexbuilder_spark.plans.build import load_stats
@@ -276,20 +272,17 @@ def _spark_runner(args):
         stats = view["stats"]
         tombstones = view["tombstones"]
         docs_shards = view["docs_shards"]
-        exec_fn = topk_bm25_chunked
         if tombstones is not None:
             tombstones = tombstones.cache()
             print(f"# excluding {tombstones.count()} tombstoned docs "
                   "(across shards)", file=sys.stderr)
     else:
         cat = Catalog(spark, args.index)
-        table = "index_chunks" if args.chunked else "index"
-        index = cat.read(table).cache()
+        index = cat.read("index_chunks").cache()
         docs_full = cat.read("docs")
         docs = docs_full.select("doc_id", "url", "doc_len").cache()
         index.count(), docs.count()  # warm the caches (Q1 session load)
         stats = load_stats(spark, args.index)
-        exec_fn = topk_bm25_chunked if args.chunked else topk_bm25
         tombstones = None
         if not args.ignore_tombstones:
             from invertedindexbuilder_spark.plans.deletes import (
@@ -336,7 +329,7 @@ def _spark_runner(args):
                 kw["and_prune"] = True
         if docs_shards is not None:
             kw["docs_shards"] = docs_shards
-        res = exec_fn(
+        res = topk_bm25_chunked(
             spark, index, docs, stats, query,
             mode=mode, k=k, strict=not args.no_strict,
             exclude=args.exclude, doc_filter=doc_filter,

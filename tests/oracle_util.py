@@ -14,6 +14,7 @@ import pandas as pd
 
 from invertedindexbuilder_spark import LEXICON_KEY_LEN
 from invertedindexbuilder_spark.functions.bm25 import bm25 as bm25_np
+from invertedindexbuilder_spark.functions.compress import decode_posting_list
 from invertedindexbuilder_spark.functions.tokenize import tokenize_text
 from invertedindexbuilder_spark.sources.docs_src import synthetic_docs_src_pandas
 
@@ -73,3 +74,28 @@ class CorpusOracle:
         if mode == "and":
             items = [(d, s) for d, s in items if len(counts[d]) == len(sel)]
         return sorted(items, key=lambda x: (-x[1], x[0]))[:k]
+
+
+def decoded_lists(table) -> dict[str, tuple[list[int], list[int]]]:
+    """term -> (doc_ids, tfs) decoded from a merged INDEX export or an
+    INDEX_CHUNK frame.  A chunk's first gap is absolute, so chunks
+    decode alone and concatenate in first_doc_id order: both layouts
+    compare directly."""
+    chunked = "first_doc_id" in table.columns
+    parts: dict[str, list] = collections.defaultdict(list)
+    for r in table.collect():
+        docs, tfs = decode_posting_list(
+            bytes(r["payload"]),
+            int(r["df"]),
+            np.asarray(r["block_bytes"]),
+            block_counts=np.asarray(r["block_counts"]),
+        )
+        first = r["first_doc_id"] if chunked else 0
+        parts[r["term"]].append((first, docs.tolist(), tfs.tolist()))
+    return {
+        t: (
+            [d for _, ds, _ in sorted(ps) for d in ds],
+            [f for _, _, fs in sorted(ps) for f in fs],
+        )
+        for t, ps in parts.items()
+    }

@@ -9,14 +9,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from invertedindexbuilder_spark.operators.index_build import (
-    encode_chunks,
-    merge_chunks,
-)
-from invertedindexbuilder_spark.operators.query_exec import (
-    topk_bm25,
-    topk_bm25_chunked,
-)
+from invertedindexbuilder_spark.operators.index_build import encode_chunks
+from invertedindexbuilder_spark.operators.query_exec import topk_bm25_chunked
 
 N = 20_000  # docs; 'common' df=10k (~157 blocks), rare df=100 each
 
@@ -38,7 +32,8 @@ def env(spark):
             rows.append(("raretwo", d, 1))
     postings = spark.createDataFrame(rows, "term string, doc_id long, tf long")
     chunks = encode_chunks(postings, salt_threshold=4096, chunk_blocks=8).cache()
-    index = merge_chunks(chunks).cache()
+    # the merged row layout: one unsalted whole-list chunk per term
+    merged = encode_chunks(postings, heavy=[]).cache()
     docs = spark.range(N).select(
         F.col("id").alias("doc_id"),
         (F.lit(100) + F.col("id") % 40).cast("long").alias("doc_len"),
@@ -48,7 +43,7 @@ def env(spark):
         "sum_doc_len": sum(100 + d % 40 for d in range(N)),
         "min_doc_len": 100,
     }
-    return {"chunks": chunks, "index": index, "docs": docs, "stats": stats}
+    return {"chunks": chunks, "merged": merged, "docs": docs, "stats": stats}
 
 
 def _key(rows):
@@ -57,16 +52,19 @@ def _key(rows):
 
 @pytest.mark.parametrize("query", ["rareone raretwo common", "rareone common common"])
 def test_or_pruned_equals_full_decode_merged(spark, env, query):
+    """Block-level pruning inside whole-list rows (the merged layout, one
+    unsalted chunk per term): too few chunks for the scan prune, so
+    every skip happens in the decoder."""
     counters = {
         "decoded": spark.sparkContext.accumulator(0),
         "total": spark.sparkContext.accumulator(0),
     }
-    pruned = topk_bm25(
-        spark, env["index"], env["docs"], env["stats"], query,
+    pruned = topk_bm25_chunked(
+        spark, env["merged"], env["docs"], env["stats"], query,
         mode="or", k=10, round_digits=6, counters=counters, or_prune=True,
     ).collect()
-    full = topk_bm25(
-        spark, env["index"], env["docs"], env["stats"], query,
+    full = topk_bm25_chunked(
+        spark, env["merged"], env["docs"], env["stats"], query,
         mode="or", k=10, round_digits=6, or_prune=False,
     ).collect()
     assert _key(pruned) == _key(full)
@@ -190,12 +188,12 @@ def test_or_ioprune_fallback_matches(spark, env, monkeypatch):
 
 def test_or_all_heavy_falls_back_and_matches(spark, env):
     # no light list -> no theta seed -> fallback full decode (correct)
-    a = topk_bm25(
-        spark, env["index"], env["docs"], env["stats"], "common mid",
+    a = topk_bm25_chunked(
+        spark, env["merged"], env["docs"], env["stats"], "common mid",
         mode="or", k=10, round_digits=6, or_prune=True,
     ).collect()
-    b = topk_bm25(
-        spark, env["index"], env["docs"], env["stats"], "common mid",
+    b = topk_bm25_chunked(
+        spark, env["merged"], env["docs"], env["stats"], "common mid",
         mode="or", k=10, round_digits=6, or_prune=False,
     ).collect()
     assert _key(a) == _key(b)
@@ -203,13 +201,13 @@ def test_or_all_heavy_falls_back_and_matches(spark, env):
 
 def test_or_pruned_with_duplicate_query_terms(spark, env):
     # duplicate light term: weight=2 flows through theta and candidates
-    a = topk_bm25(
-        spark, env["index"], env["docs"], env["stats"],
+    a = topk_bm25_chunked(
+        spark, env["merged"], env["docs"], env["stats"],
         "rareone rareone common", mode="or", k=10, round_digits=6,
         or_prune=True,
     ).collect()
-    b = topk_bm25(
-        spark, env["index"], env["docs"], env["stats"],
+    b = topk_bm25_chunked(
+        spark, env["merged"], env["docs"], env["stats"],
         "rareone rareone common", mode="or", k=10, round_digits=6,
         or_prune=False,
     ).collect()
@@ -217,16 +215,17 @@ def test_or_pruned_with_duplicate_query_terms(spark, env):
 
 
 def test_and_candidate_prune_equals_full_merged(spark, env):
+    """Candidate pruning inside whole-list rows (the merged layout)."""
     counters = {
         "decoded": spark.sparkContext.accumulator(0),
         "total": spark.sparkContext.accumulator(0),
     }
-    pruned = topk_bm25(
-        spark, env["index"], env["docs"], env["stats"], "rareone common",
+    pruned = topk_bm25_chunked(
+        spark, env["merged"], env["docs"], env["stats"], "rareone common",
         mode="and", k=10, round_digits=6, and_prune=True, counters=counters,
     ).collect()
-    full = topk_bm25(
-        spark, env["index"], env["docs"], env["stats"], "rareone common",
+    full = topk_bm25_chunked(
+        spark, env["merged"], env["docs"], env["stats"], "rareone common",
         mode="and", k=10, round_digits=6, and_prune=False,
     ).collect()
     assert _key(pruned) == _key(full) and pruned

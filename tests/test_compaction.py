@@ -14,10 +14,9 @@ from invertedindexbuilder_spark.operators.index_build import (
     encode_chunks,
     merge_chunks,
 )
-from invertedindexbuilder_spark.operators.query_exec import (
-    topk_bm25,
-    topk_bm25_chunked,
-)
+from invertedindexbuilder_spark.operators.query_exec import topk_bm25_chunked
+
+from tests.oracle_util import decoded_lists
 
 N_OLD, N_ALL = 600, 900
 
@@ -50,12 +49,14 @@ def frames(spark):
     compacted_chunks = compact_chunks(
         old_chunks, delta, salt_threshold=64, chunk_blocks=1
     ).cache()
+    full_chunks = encode_chunks(full, salt_threshold=64, chunk_blocks=1).cache()
     return {
         "compacted": merge_chunks(compacted_chunks).cache(),
         "compacted_chunks": compacted_chunks,
-        "full": merge_chunks(
-            encode_chunks(full, salt_threshold=64, chunk_blocks=1)
-        ).cache(),
+        "full": merge_chunks(full_chunks).cache(),
+        "full_chunks": full_chunks,
+        # whole-list rows (the merged layout): one unsalted chunk per term
+        "full_unsalted": encode_chunks(full, heavy=[]).cache(),
         "rows": _postings_rows(0, N_ALL),
     }
 
@@ -100,10 +101,12 @@ def test_overlapping_delta_fails_fast(spark, frames):
 
 
 def test_plan_compact_matches_full_rebuild(spark, tmp_path):
-    """End-to-end plan: build 300 docs, compact 100 more in, compare
-    against a clean 400-doc build.  Doc ids may differ (compaction uses
-    arrival order), so identity is checked on id-invariant artifacts:
-    term stats, corpus stats, and (url, score) query results."""
+    """End-to-end plan: build 300 docs (default build, no flags),
+    compact 100 more in, compare against a clean 400-doc build.  Doc
+    ids may differ (compaction uses arrival order), so identity is
+    checked on id-invariant artifacts: term stats, corpus stats, and
+    (url, score) query results.  The rewritten merged export must
+    still decode to the same lists as the rewritten index_chunks."""
     from invertedindexbuilder_spark.catalog import Catalog
     from invertedindexbuilder_spark.plans.build import (
         build,
@@ -114,14 +117,17 @@ def test_plan_compact_matches_full_rebuild(spark, tmp_path):
 
     root_c = str(tmp_path / "compacted")
     root_f = str(tmp_path / "full")
-    build(spark, synthetic_docs_src(spark, 300), root_c, write_chunks=True)
+    build(spark, synthetic_docs_src(spark, 300), root_c)
     compact(spark, synthetic_docs_src(spark, 100, start=300), root_c)
-    build(spark, synthetic_docs_src(spark, 400), root_f, write_chunks=True)
+    build(spark, synthetic_docs_src(spark, 400), root_f)
 
     cc, cf = Catalog(spark, root_c), Catalog(spark, root_f)
     a = {r["term"]: r["df"] for r in cc.read("index").select("term", "df").collect()}
     b = {r["term"]: r["df"] for r in cf.read("index").select("term", "df").collect()}
     assert a == b
+    assert decoded_lists(cc.read("index")) == decoded_lists(
+        cc.read("index_chunks")
+    )
     ids = sorted(r["doc_id"] for r in cc.read("docs").select("doc_id").collect())
     assert ids == list(range(400))
     assert load_stats(spark, root_c) == load_stats(spark, root_f)
@@ -129,9 +135,9 @@ def test_plan_compact_matches_full_rebuild(spark, tmp_path):
     def results(root):
         cat = Catalog(spark, root)
         docs = cat.read("docs")
-        out = topk_bm25(
+        out = topk_bm25_chunked(
             spark,
-            cat.read("index"),
+            cat.read("index_chunks"),
             docs.select("doc_id", "doc_len"),
             load_stats(spark, root),
             "alpha beta",
@@ -178,11 +184,12 @@ def test_compacted_serves_identical_queries(spark, frames):
         "sum_doc_len": sum(100 + d % 40 for d in range(N_ALL)),
     }
     for q, m in [("the newterm", "and"), ("mid rare the", "or")]:
-        a = topk_bm25(
-            spark, frames["full"], docs, stats, q, mode=m, k=10, round_digits=6
+        a = topk_bm25_chunked(
+            spark, frames["full_unsalted"], docs, stats, q, mode=m, k=10,
+            round_digits=6,
         ).collect()
-        b = topk_bm25(
-            spark, frames["compacted"], docs, stats, q, mode=m, k=10,
+        b = topk_bm25_chunked(
+            spark, frames["full_chunks"], docs, stats, q, mode=m, k=10,
             round_digits=6,
         ).collect()
         c = topk_bm25_chunked(
@@ -204,7 +211,7 @@ def test_compact_crash_before_publish_keeps_old_view(spark, tmp_path, monkeypatc
     from invertedindexbuilder_spark.sources.docs_src import synthetic_docs_src
 
     root = str(tmp_path / "idx")
-    build(spark, synthetic_docs_src(spark, 300), root, write_chunks=True)
+    build(spark, synthetic_docs_src(spark, 300), root)
     cat = Catalog(spark, root)
     stats_before = load_stats(spark, root)
     terms_before = {
@@ -252,7 +259,7 @@ def test_compact_crash_after_publish_is_consistent(spark, tmp_path, monkeypatch)
     from invertedindexbuilder_spark.sources.docs_src import synthetic_docs_src
 
     root = str(tmp_path / "idx")
-    build(spark, synthetic_docs_src(spark, 300), root, write_chunks=True)
+    build(spark, synthetic_docs_src(spark, 300), root)
 
     real_record = BuildManifest.record
 
@@ -293,7 +300,7 @@ def test_compact_delta_repartition_bounded_by_cores(spark, tmp_path, monkeypatch
     from invertedindexbuilder_spark.sources.docs_src import synthetic_docs_src
 
     root = str(tmp_path / "idx")
-    build(spark, synthetic_docs_src(spark, 200), root, write_chunks=True)
+    build(spark, synthetic_docs_src(spark, 200), root)
 
     seen: list[int] = []
     real = build_mod.build_postings  # the r8 'arrow' default path

@@ -2,10 +2,11 @@
 
 Contracts pinned here (plans/deletes.py):
 
-- tombstoned docs vanish from every query surface (Spark merged,
-  Spark chunked, driver-local) while stats stay as-indexed;
+- tombstoned docs vanish from every query surface (Spark single-query,
+  Spark batch, driver-local) while stats stay as-indexed;
 - purge == fresh rebuild over the surviving corpus: identical merged
-  posting lists (decode), docs table, stats, and top-k answers;
+  posting lists (decode), docs table, stats, and top-k answers, and
+  the rewritten merged export decodes like the rewritten chunk table;
 - chunks with no tombstone inside their doc range take the
   one-varbyte first-gap rebase (payload tail byte-identical), only
   overlapping chunks re-encode;
@@ -29,7 +30,7 @@ from invertedindexbuilder_spark.operators.local_query import (
     topk_local,
 )
 from invertedindexbuilder_spark.operators.postings import build_postings
-from invertedindexbuilder_spark.operators.query_exec import topk_bm25
+from invertedindexbuilder_spark.operators.query_exec import topk_bm25_chunked
 from invertedindexbuilder_spark.plans.build import build, compact, load_stats
 from invertedindexbuilder_spark.plans.deletes import (
     delete_docs,
@@ -37,6 +38,8 @@ from invertedindexbuilder_spark.plans.deletes import (
     purge_deletes,
 )
 from invertedindexbuilder_spark.sources.docs_src import synthetic_docs_src
+
+from tests.oracle_util import decoded_lists
 
 N_DOCS = 300
 DELETED = sorted({3, 17, 42, 120, 121, 122, 250, 299})
@@ -61,14 +64,14 @@ def purged_and_rebuilt(spark, tmp_path_factory):
     root = tmp_path_factory.mktemp("deletes")
     out = str(root / "full")
     out_ref = str(root / "survivors")
-    build(spark, synthetic_docs_src(spark, N_DOCS), out, write_chunks=True)
+    build(spark, synthetic_docs_src(spark, N_DOCS), out)
     delete_docs(spark, out, DELETED)
     res = purge_deletes(spark, out)
     assert res == {"n_purged": len(DELETED), "n_docs": N_DOCS - len(DELETED)}
     # the reference build: drop the same docs from the SOURCE (keyed by
     # what survived the purge) and rebuild from scratch
     src = synthetic_docs_src(spark, N_DOCS)
-    build(spark, _surviving_src(spark, src, out), out_ref, write_chunks=True)
+    build(spark, _surviving_src(spark, src, out), out_ref)
     return out, out_ref
 
 
@@ -87,18 +90,18 @@ def test_tombstoned_docs_leave_every_surface(spark, tmp_out):
     build(spark, synthetic_docs_src(spark, 200), tmp_out)
     cat = Catalog(spark, tmp_out)
     stats = load_stats(spark, tmp_out)
-    index = cat.read("index")
+    chunks = cat.read("index_chunks")
     docs = cat.read("docs").select("doc_id", "doc_len")
-    base = topk_bm25(
-        spark, index, docs, stats, "alpha common", mode="or", k=200
+    base = topk_bm25_chunked(
+        spark, chunks, docs, stats, "alpha common", mode="or", k=200
     ).collect()
     assert base, "query must match something for the test to mean anything"
     victims = [r["doc_id"] for r in base[:3]]
     delete_docs(spark, tmp_out, victims)
 
     tomb = load_tombstones(spark, tmp_out)
-    spark_res = topk_bm25(
-        spark, index, docs, stats, "alpha common", mode="or", k=200,
+    spark_res = topk_bm25_chunked(
+        spark, chunks, docs, stats, "alpha common", mode="or", k=200,
         exclude_doc_ids=tomb,
     ).collect()
     got = {r["doc_id"] for r in spark_res}
@@ -129,20 +132,20 @@ def test_batch_serving_excludes_tombstones(spark, tmp_out):
     build(spark, synthetic_docs_src(spark, 150), tmp_out)
     cat = Catalog(spark, tmp_out)
     stats = load_stats(spark, tmp_out)
-    index = cat.read("index")
+    chunks = cat.read("index_chunks")
     docs = cat.read("docs").select("doc_id", "doc_len")
     qdf = spark.createDataFrame(
         [(0, "alpha common"), (1, "beta common")],
         "query_id long, text string",
     )
     base = topk_bm25_batch(
-        spark, index, docs, stats, qdf, mode="or", k=150
+        spark, chunks, docs, stats, qdf, mode="or", k=150
     ).collect()
     victims = sorted({r["doc_id"] for r in base})[:4]
     delete_docs(spark, tmp_out, victims)
     tomb = load_tombstones(spark, tmp_out)
     res = topk_bm25_batch(
-        spark, index, docs, stats, qdf, mode="or", k=150,
+        spark, chunks, docs, stats, qdf, mode="or", k=150,
         exclude_doc_ids=tomb,
     ).collect()
     assert not ({r["doc_id"] for r in res} & set(victims))
@@ -182,6 +185,10 @@ def test_purge_equals_rebuild(spark, purged_and_rebuilt):
 
     # merged index: identical decoded posting lists
     assert _decode_all(cat.read("index")) == _decode_all(ref.read("index"))
+    # the purged export and the purged chunk table agree
+    assert decoded_lists(cat.read("index")) == decoded_lists(
+        cat.read("index_chunks")
+    )
 
     # end to end: identical top-k from both builds
     for mode in ("and", "or"):
@@ -207,28 +214,6 @@ def test_purge_clears_tombstones_and_compact_still_works(
         r["doc_id"] for r in Catalog(spark, out).read("docs").collect()
     )
     assert ids == list(range(n_before + 40))
-
-
-def test_purge_merged_only_build(spark, tmp_path):
-    """A default build (merged index, no chunks table) purges too: the
-    merged row is one whole-list chunk whose first varbyte is the
-    absolute first doc id."""
-    out = str(tmp_path / "merged")
-    out_ref = str(tmp_path / "merged_ref")
-    dele = [0, 5, 60, 119]
-    build(spark, synthetic_docs_src(spark, 120), out)
-    delete_docs(spark, out, dele)
-    assert purge_deletes(spark, out) == {"n_purged": 4, "n_docs": 116}
-    src = synthetic_docs_src(spark, 120)
-    build(spark, _surviving_src(spark, src, out), out_ref)
-    cat, ref = Catalog(spark, out), Catalog(spark, out_ref)
-    assert _decode_all(cat.read("index")) == _decode_all(ref.read("index"))
-    assert load_stats(spark, out) == load_stats(spark, out_ref)
-    ra = topk_local(LocalIndex(out), "alpha common", mode="or", k=10)
-    rb = topk_local(LocalIndex(out_ref), "alpha common", mode="or", k=10)
-    assert [(d, round(s, 9)) for d, s in ra] == [
-        (d, round(s, 9)) for d, s in rb
-    ]
 
 
 def test_purge_noop_without_tombstones(spark, tmp_out):
@@ -394,10 +379,7 @@ def test_purge_emits_id_remap_for_upstream_resync(spark, tmp_path):
     a subsequent compact() with upstream-assigned delta ids passes the
     dense-id validation."""
     root = str(tmp_path / "idx")
-    build(
-        spark, synthetic_docs_src(spark, N_DOCS, with_ids=True), root,
-        write_chunks=True,
-    )
+    build(spark, synthetic_docs_src(spark, N_DOCS, with_ids=True), root)
     cat = Catalog(spark, root)
 
     # upstream's view before the purge: its ids ARE the index ids

@@ -1,6 +1,7 @@
 """Facet counts over the boolean match set (query_exec.facet_counts):
 counts vs a brute-force recompute on a corpus with known facet
-structure, merged/chunked parity, OR vs AND, unknown-term drop,
+structure, parity between whole-list rows (``index``: the merged
+layout, one unsalted chunk per term) and salted chunks, OR vs AND, unknown-term drop,
 all-unknown empty frame, tombstone exclusion, and the top-N limit.
 (The reference's query surface has no facet analog — serving
 extension layer, like boolean NOT.)"""
@@ -10,17 +11,12 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from invertedindexbuilder_spark.operators.index_build import (
-    build_index,
-    encode_chunks,
-)
+from invertedindexbuilder_spark.operators.index_build import encode_chunks
 from invertedindexbuilder_spark.operators.postings import build_postings
 from invertedindexbuilder_spark.operators.query_exec import facet_counts
 from invertedindexbuilder_spark.sources.docs_src import (
     docs_from_documents_table,
 )
-
-UNSALTED = 1 << 62
 
 LANGS = ["py", "go", "rs"]
 SOURCES = ["gh", "gl"]
@@ -50,7 +46,7 @@ def env(spark):
     docs = docs_from_documents_table(documents).cache()
     postings = build_postings(docs).cache()
     return {
-        "index": build_index(postings, salt_threshold=UNSALTED).cache(),
+        "index": encode_chunks(postings, heavy=[]).cache(),
         "chunks": encode_chunks(
             postings, salt_threshold=16, chunk_blocks=1
         ).cache(),
@@ -151,7 +147,7 @@ def built_root(spark, tmp_path_factory):
     )
 
     out = str(tmp_path_factory.mktemp("fc") / "idx")
-    build(spark, synthetic_docs_src(spark, 600), out, write_chunks=True)
+    build(spark, synthetic_docs_src(spark, 600), out)
     return out
 
 
@@ -172,7 +168,7 @@ def test_local_facets_match_spark_surface(spark, built_root, query, mode):
     want = [
         (r["repo"], r["n_docs"])
         for r in facet_counts(
-            spark, cat.read("index"), fac, query, ["repo"], mode=mode
+            spark, cat.read("index_chunks"), fac, query, ["repo"], mode=mode
         ).collect()
     ]
     li = LocalIndex(built_root)
@@ -189,7 +185,7 @@ def test_local_facets_match_spark_surface(spark, built_root, query, mode):
     want_t = [
         (r["repo"], r["n_docs"])
         for r in fc(
-            spark, cat.read("index"), fac, query, ["repo"], mode=mode,
+            spark, cat.read("index_chunks"), fac, query, ["repo"], mode=mode,
             exclude_doc_ids=tomb,
         ).collect()
     ]

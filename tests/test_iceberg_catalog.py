@@ -89,7 +89,7 @@ def test_real_iceberg_build_compact(tmp_path):
     os.environ["ICEBERG_CATALOG"] = "ice"
     try:
         root = str(tmp_path / "idx")
-        build(spark, synthetic_docs_src(spark, 200), root, write_chunks=True)
+        build(spark, synthetic_docs_src(spark, 200), root)
         compact(spark, synthetic_docs_src(spark, 50, start=200), root)
         assert load_stats(spark, root)["n_docs"] == 250
     finally:

@@ -33,7 +33,7 @@ def _load_index_stats():
 
 
 def test_build_report_smoke(spark, tmp_out):
-    build(spark, synthetic_docs_src(spark, 40), tmp_out, write_chunks=True)
+    build(spark, synthetic_docs_src(spark, 40), tmp_out)
     build_search_tables(
         spark,
         spark.createDataFrame(
@@ -70,7 +70,7 @@ def test_tombstone_debt_reported_and_purge_flagged(spark, tmp_out):
         purge_deletes,
     )
 
-    build(spark, synthetic_docs_src(spark, 40), tmp_out, write_chunks=True)
+    build(spark, synthetic_docs_src(spark, 40), tmp_out)
     mod = _load_index_stats()
 
     # 2/40 = 5% exactly: debt reported, no recommendation yet

@@ -40,7 +40,7 @@ def _decode_all(rows):
 
 
 def test_shift_chunks_decode_identity(spark, tmp_out):
-    build(spark, synthetic_docs_src(spark, 80), tmp_out, write_chunks=True)
+    build(spark, synthetic_docs_src(spark, 80), tmp_out)
     chunks = Catalog(spark, tmp_out).read("index_chunks")
     before = _decode_all(chunks.collect())
     after = _decode_all(shift_chunks(chunks, 1000).collect())
@@ -57,7 +57,7 @@ def test_shift_chunks_decode_identity(spark, tmp_out):
 def test_shift_chunks_plan_has_no_exchange(spark, tmp_out):
     """The rebase is narrow: reading chunks -> patched chunks must plan
     without any shuffle exchange (the metadata-only-merge guarantee)."""
-    build(spark, synthetic_docs_src(spark, 40), tmp_out, write_chunks=True)
+    build(spark, synthetic_docs_src(spark, 40), tmp_out)
     chunks = Catalog(spark, tmp_out).read("index_chunks")
     plan = (
         shift_chunks(chunks, 7)
@@ -69,7 +69,7 @@ def test_shift_chunks_plan_has_no_exchange(spark, tmp_out):
 
 
 def test_shift_zero_is_identity(spark, tmp_out):
-    build(spark, synthetic_docs_src(spark, 40), tmp_out, write_chunks=True)
+    build(spark, synthetic_docs_src(spark, 40), tmp_out)
     chunks = Catalog(spark, tmp_out).read("index_chunks")
     assert shift_chunks(chunks, 0) is chunks
     with pytest.raises(ValueError):
@@ -84,16 +84,16 @@ def merged_roots(spark, tmp_path_factory):
     # shift really exercises multi-chunk delta chains
     build(
         spark, synthetic_docs_src(spark, N_A), ra,
-        write_chunks=True, salt_threshold=70, chunk_blocks=1,
+        salt_threshold=70, chunk_blocks=1,
     )
     build(
         spark, synthetic_docs_src(spark, N_B, start=N_A), rb,
-        write_chunks=True, salt_threshold=70, chunk_blocks=1,
+        salt_threshold=70, chunk_blocks=1,
     )
     merge_builds(spark, ra, rb, out)
     build(
         spark, synthetic_docs_src(spark, N_A + N_B), full,
-        write_chunks=True, salt_threshold=70, chunk_blocks=1,
+        salt_threshold=70, chunk_blocks=1,
     )
     return ra, rb, out, full
 
@@ -146,10 +146,7 @@ def test_merged_build_accepts_compaction_delta(spark, merged_roots, tmp_path):
         spark, synthetic_docs_src(spark, n_delta, start=N_A + N_B), root
     )
     full = str(tmp_path / "full2")
-    build(
-        spark, synthetic_docs_src(spark, N_A + N_B + n_delta), full,
-        write_chunks=True,
-    )
+    build(spark, synthetic_docs_src(spark, N_A + N_B + n_delta), full)
     got, want = load_stats(spark, root), load_stats(spark, full)
     # layout-independent stats (terms/doc counts/postings); payload
     # geometry legitimately differs across salting layouts
@@ -168,8 +165,18 @@ def test_merge_refuses_in_place_output(spark, merged_roots, tmp_path):
         merge_builds(spark, ra, rb, ra)
 
 
-def test_merge_requires_chunked_builds(spark, tmp_path):
-    ra = str(tmp_path / "nochunks")
-    build(spark, synthetic_docs_src(spark, 30), ra)  # merged-only build
-    with pytest.raises(ValueError, match="index_chunks"):
-        merge_builds(spark, ra, ra, str(tmp_path / "out"))
+def test_merge_accepts_default_builds(spark, tmp_path):
+    """Two default build() roots (no flags) merge directly; with
+    merged=True the output's merged export decodes like its chunks."""
+    from tests.oracle_util import decoded_lists
+
+    ra, rb, out, full = (str(tmp_path / n) for n in ("a", "b", "m", "full"))
+    build(spark, synthetic_docs_src(spark, 30), ra)
+    build(spark, synthetic_docs_src(spark, 20, start=30), rb)
+    merge_builds(spark, ra, rb, out, merged=True)
+    build(spark, synthetic_docs_src(spark, 50), full)
+    assert load_stats(spark, out) == load_stats(spark, full)
+    cat = Catalog(spark, out)
+    assert decoded_lists(cat.read("index")) == decoded_lists(
+        cat.read("index_chunks")
+    )

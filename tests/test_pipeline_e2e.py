@@ -47,7 +47,7 @@ def test_incremental_pipeline_equals_one_shot(spark, tmp_path):
     # incremental path
     m = curate(spark, base, croot, **KNOBS)
     base_in = int(m["phases"]["curate"]["docs_in"])
-    build(spark, curated_docs(spark, base, croot), iroot, write_chunks=True)
+    build(spark, curated_docs(spark, base, croot), iroot)
     curate_delta(spark, delta, croot, base_src=base, langs=None,
                  min_quality=None, max_dup_word_frac=None,
                  near_dup_threshold=0.6)
@@ -59,9 +59,7 @@ def test_incremental_pipeline_equals_one_shot(spark, tmp_path):
 
     # one-shot path
     curate(spark, union, croot2, **KNOBS)
-    build(
-        spark, curated_docs(spark, union, croot2), iroot2, write_chunks=True
-    )
+    build(spark, curated_docs(spark, union, croot2), iroot2)
 
     # same survivor corpus -> same stats and same (url, score) answers
     assert load_stats(spark, iroot) == load_stats(spark, iroot2)
@@ -76,7 +74,7 @@ def test_incremental_pipeline_drops_cross_corpus_dups(spark, tmp_path):
     delta = synthetic_docs_src(spark, 150, start=300)
     croot, iroot = str(tmp_path / "c"), str(tmp_path / "i")
     m0 = curate(spark, base, croot, **KNOBS)
-    build(spark, curated_docs(spark, base, croot), iroot, write_chunks=True)
+    build(spark, curated_docs(spark, base, croot), iroot)
     m = curate_delta(spark, delta, croot, base_src=base, langs=None,
                      min_quality=None, max_dup_word_frac=None,
                      near_dup_threshold=0.6)

@@ -12,10 +12,7 @@ from pyspark.sql import functions as F
 
 from invertedindexbuilder_spark.operators.index_build import encode_chunks
 from invertedindexbuilder_spark.operators.postings import build_postings_jvm
-from invertedindexbuilder_spark.operators.query_exec import (
-    lookup_chunk_rows,
-    lookup_index_rows,
-)
+from invertedindexbuilder_spark.operators.query_exec import lookup_chunk_rows
 
 
 def _plan(df) -> str:
@@ -39,15 +36,7 @@ def tables(spark, tmp_path_factory):
     encode_chunks(postings, salt_threshold=64, chunk_blocks=1).write.parquet(
         root + "/chunks"
     )
-    from invertedindexbuilder_spark.operators.index_build import merge_chunks
-
-    merge_chunks(spark.read.parquet(root + "/chunks")).write.parquet(
-        root + "/index"
-    )
-    return {
-        "chunks": spark.read.parquet(root + "/chunks"),
-        "index": spark.read.parquet(root + "/index"),
-    }
+    return {"chunks": spark.read.parquet(root + "/chunks")}
 
 
 def test_tokenize_plan_is_one_exchange_no_window(spark):
@@ -57,17 +46,6 @@ def test_tokenize_plan_is_one_exchange_no_window(spark):
     plan = _plan(build_postings_jvm(docs))
     assert _shuffle_exchanges(plan) == 1  # the (term, doc_id) agg only
     assert "Window" not in plan
-
-
-def test_merged_lookup_never_exchanges_payload_rows(tables):
-    plan = _plan(lookup_index_rows(tables["index"], ["the", "mid"], strict=True))
-    assert "Window" not in plan
-    # every non-broadcast exchange in this plan is the tiny winner agg;
-    # none of them may carry the payload column
-    for m in re.finditer(r"(?<!Broadcast)Exchange [^\n]*", plan):
-        assert "payload" not in m.group(0)
-    # term-range pushdown reaches the scan
-    assert "PushedFilters" in plan and "GreaterThanOrEqual(term," in plan
 
 
 def test_chunk_lookup_single_payload_scan(tables):
@@ -82,6 +60,8 @@ def test_chunk_lookup_single_payload_scan(tables):
     scans = re.findall(r"FileScan parquet \[[^\]]*\]", plan)
     assert len(scans) == 1
     assert "payload#" in scans[0]
+    # term-range pushdown reaches the scan
+    assert "PushedFilters" in plan and "GreaterThanOrEqual(term," in plan
 
 
 def test_bucketed_docs_join_shuffles_only_the_decoded_side(spark, tmp_path):
@@ -193,8 +173,7 @@ def test_chunk_table_files_are_term_clustered(spark, tmp_path):
     # the range partitions open so there are multiple files to check
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try:
-        build(spark, synthetic_docs_src(spark, 600), root,
-              write_chunks=True, num_partitions=8)
+        build(spark, synthetic_docs_src(spark, 600), root, num_partitions=8)
     finally:
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
                        "true")

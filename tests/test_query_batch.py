@@ -1,21 +1,16 @@
 """Batch BM25 serving: per-query results must be identical to the
 single-query operator (same semantics, one job for the whole table),
-on both the merged and the chunked index."""
+on whole-list rows (``index``: the merged layout, one unsalted chunk
+per term) and on salted multi-chunk rows (``chunks``)."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from invertedindexbuilder_spark.operators.index_build import (
-    encode_chunks,
-    merge_chunks,
-)
+from invertedindexbuilder_spark.operators.index_build import encode_chunks
 from invertedindexbuilder_spark.operators.query_batch import topk_bm25_batch
-from invertedindexbuilder_spark.operators.query_exec import (
-    topk_bm25,
-    topk_bm25_chunked,
-)
+from invertedindexbuilder_spark.operators.query_exec import topk_bm25_chunked
 
 N = 3000
 
@@ -33,7 +28,7 @@ def env(spark):
             rows.append(("rare", d, 2))
     postings = spark.createDataFrame(rows, "term string, doc_id long, tf long")
     chunks = encode_chunks(postings, salt_threshold=256, chunk_blocks=2).cache()
-    index = merge_chunks(chunks).cache()
+    index = encode_chunks(postings, heavy=[]).cache()
     docs = spark.range(N).select(
         F.col("id").alias("doc_id"),
         (F.lit(80) + F.col("id") % 50).cast("long").alias("doc_len"),
@@ -75,13 +70,12 @@ def test_batch_per_query_exclusion(spark, env, table):
     got: dict[int, list] = {}
     for r in batch:
         got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
-    single = topk_bm25 if table == "index" else topk_bm25_chunked
     for qid, text, minus in [
         (1, "the data", "mid"), (2, "the data", None), (3, "the", "zzznotaterm")
     ]:
         want = [
             (r["doc_id"], r["score"])
-            for r in single(
+            for r in topk_bm25_chunked(
                 spark, env[table], env["docs"], env["stats"], text,
                 mode="or", k=5, round_digits=6, exclude=minus,
             ).collect()
@@ -103,12 +97,11 @@ def test_batch_equals_per_query(spark, env, mode, table):
         got.setdefault(r["query_id"], []).append(
             (r["rank"], r["doc_id"], r["score"])
         )
-    single = topk_bm25 if table == "index" else topk_bm25_chunked
     for qid, text in QUERIES:
         want = [
             (i + 1, r["doc_id"], r["score"])
             for i, r in enumerate(
-                single(
+                topk_bm25_chunked(
                     spark, env[table], env["docs"], env["stats"], text,
                     mode=mode, k=5, round_digits=6,
                 ).collect()

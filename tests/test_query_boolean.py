@@ -1,26 +1,19 @@
-"""Boolean NOT-terms and faceted doc filters on both serving paths
-(query_exec.topk_bm25 / topk_bm25_chunked): exclusion correctness vs a
-brute-force recompute, merged/chunked parity, unknown-term no-op."""
+"""Boolean NOT-terms and faceted doc filters (query_exec.
+topk_bm25_chunked) on whole-list rows (the merged layout: one unsalted
+chunk per term) and on salted multi-chunk rows: exclusion correctness
+vs a brute-force recompute, layout parity, unknown-term no-op."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from invertedindexbuilder_spark.operators.index_build import (
-    build_index,
-    encode_chunks,
-)
+from invertedindexbuilder_spark.operators.index_build import encode_chunks
 from invertedindexbuilder_spark.operators.postings import build_postings
-from invertedindexbuilder_spark.operators.query_exec import (
-    topk_bm25,
-    topk_bm25_chunked,
-)
+from invertedindexbuilder_spark.operators.query_exec import topk_bm25_chunked
 from invertedindexbuilder_spark.sources.docs_src import (
     docs_from_documents_table,
 )
-
-UNSALTED = 1 << 62
 
 
 @pytest.fixture(scope="module")
@@ -36,14 +29,14 @@ def env(spark):
     documents = spark.createDataFrame(rows, "doc_id long, text string")
     docs = docs_from_documents_table(documents).cache()
     postings = build_postings(docs).cache()
-    index = build_index(postings, salt_threshold=UNSALTED).cache()
+    merged = encode_chunks(postings, heavy=[]).cache()
     chunks = encode_chunks(postings, salt_threshold=16, chunk_blocks=1).cache()
     agg = docs.agg(
         F.count("*").alias("n"), F.sum("doc_len").alias("s"), F.min("doc_len").alias("m")
     ).collect()[0]
     stats = {"n_docs": agg["n"], "sum_doc_len": agg["s"], "min_doc_len": agg["m"]}
     return {
-        "docs": docs, "index": index, "chunks": chunks, "stats": stats,
+        "docs": docs, "merged": merged, "chunks": chunks, "stats": stats,
         "has_window": {d for d in range(60) if d % 4 == 0},
     }
 
@@ -53,12 +46,12 @@ def _ids(df):
 
 
 def test_exclude_removes_exactly_matching_docs(spark, env):
-    base = topk_bm25(
-        spark, env["index"], env["docs"], env["stats"],
+    base = topk_bm25_chunked(
+        spark, env["merged"], env["docs"], env["stats"],
         "data join", mode="and", k=100, round_digits=5,
     )
-    excl = topk_bm25(
-        spark, env["index"], env["docs"], env["stats"],
+    excl = topk_bm25_chunked(
+        spark, env["merged"], env["docs"], env["stats"],
         "data join", mode="and", k=100, round_digits=5, exclude="window",
     )
     assert set(_ids(excl)) == set(_ids(base)) - env["has_window"]
@@ -70,8 +63,8 @@ def test_exclude_removes_exactly_matching_docs(spark, env):
 
 
 def test_exclude_parity_merged_vs_chunked(spark, env):
-    a = topk_bm25(
-        spark, env["index"], env["docs"], env["stats"],
+    a = topk_bm25_chunked(
+        spark, env["merged"], env["docs"], env["stats"],
         "data join", mode="or", k=100, round_digits=5, exclude="window extra",
     ).collect()
     b = topk_bm25_chunked(
@@ -84,12 +77,12 @@ def test_exclude_parity_merged_vs_chunked(spark, env):
 
 
 def test_exclude_unknown_term_is_noop(spark, env):
-    base = topk_bm25(
-        spark, env["index"], env["docs"], env["stats"],
+    base = topk_bm25_chunked(
+        spark, env["merged"], env["docs"], env["stats"],
         "data join", mode="and", k=100, round_digits=5,
     ).collect()
-    excl = topk_bm25(
-        spark, env["index"], env["docs"], env["stats"],
+    excl = topk_bm25_chunked(
+        spark, env["merged"], env["docs"], env["stats"],
         "data join", mode="and", k=100, round_digits=5,
         exclude="zzznotaterm",
     ).collect()
@@ -108,12 +101,12 @@ def test_exclude_forces_bmw_off_and_stays_exact(spark, env):
     kw = dict(
         mode="or", k=5, round_digits=5, exclude="extra", heavy_df=1,
     )
-    forced = topk_bm25(
-        spark, env["index"], env["docs"], env["stats"], "data window",
+    forced = topk_bm25_chunked(
+        spark, env["merged"], env["docs"], env["stats"], "data window",
         or_prune=True, **kw,
     ).collect()
-    plain = topk_bm25(
-        spark, env["index"], env["docs"], env["stats"], "data window",
+    plain = topk_bm25_chunked(
+        spark, env["merged"], env["docs"], env["stats"], "data window",
         or_prune=False, **kw,
     ).collect()
     assert [(r["doc_id"], r["score"]) for r in forced] == [
@@ -124,11 +117,8 @@ def test_exclude_forces_bmw_off_and_stays_exact(spark, env):
 
 def test_doc_filter_restricts_both_paths(spark, env):
     pred = F.col("doc_id") % 3 == 0
-    for fn, idx in (
-        (topk_bm25, env["index"]),
-        (topk_bm25_chunked, env["chunks"]),
-    ):
-        out = fn(
+    for idx in (env["merged"], env["chunks"]):
+        out = topk_bm25_chunked(
             spark, idx, env["docs"], env["stats"],
             "data join", mode="and", k=100, round_digits=5, doc_filter=pred,
         )

@@ -4,7 +4,10 @@ k in {1, 10, 100}, unknown/duplicate/truncated terms, empty results."""
 import pytest
 
 from invertedindexbuilder_spark.catalog import Catalog
-from invertedindexbuilder_spark.operators.query_exec import tokenize_query, topk_bm25
+from invertedindexbuilder_spark.operators.query_exec import (
+    tokenize_query,
+    topk_bm25_chunked,
+)
 from invertedindexbuilder_spark.plans.build import build, load_stats
 from invertedindexbuilder_spark.sources.docs_src import synthetic_docs_src
 
@@ -28,10 +31,13 @@ QUERIES = [
 @pytest.fixture(scope="module")
 def env(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("qidx") / "sf_small")
-    build(spark, synthetic_docs_src(spark, N_DOCS), out, salt_threshold=10**9)
+    build(
+        spark, synthetic_docs_src(spark, N_DOCS), out, salt_threshold=10**9,
+        merged=False,
+    )
     cat = Catalog(spark, out)
     return {
-        "index": cat.read("index").cache(),
+        "chunks": cat.read("index_chunks").cache(),
         "docs": cat.read("docs").cache(),
         "stats": load_stats(spark, out),
         "oracle": CorpusOracle(N_DOCS),
@@ -44,8 +50,8 @@ def test_rank_identity(spark, env, mode, k):
     for q in QUERIES:
         got = [
             (r["doc_id"], r["score"])
-            for r in topk_bm25(
-                spark, env["index"], env["docs"], env["stats"], q, mode=mode, k=k
+            for r in topk_bm25_chunked(
+                spark, env["chunks"], env["docs"], env["stats"], q, mode=mode, k=k
             ).collect()
         ]
         want = env["oracle"].topk(tokenize_query(q), mode, k)
@@ -57,12 +63,12 @@ def test_rank_identity(spark, env, mode, k):
 def test_single_found_term_and_equals_or(spark, env):
     """Unknown terms are silently dropped, so AND == OR when only one
     query term is found (reference Q2 semantics, SURVEY §3.3)."""
-    a = topk_bm25(
-        spark, env["index"], env["docs"], env["stats"],
+    a = topk_bm25_chunked(
+        spark, env["chunks"], env["docs"], env["stats"],
         "notinlexicon alpha", mode="and", k=20,
     ).collect()
-    o = topk_bm25(
-        spark, env["index"], env["docs"], env["stats"],
+    o = topk_bm25_chunked(
+        spark, env["chunks"], env["docs"], env["stats"],
         "notinlexicon alpha", mode="or", k=20,
     ).collect()
     assert [(r["doc_id"], r["score"]) for r in a] == [
@@ -73,24 +79,24 @@ def test_single_found_term_and_equals_or(spark, env):
 def test_strict_truncation_collision(spark, env):
     """D5: 'abcdefghijklmno' and 'abcdefghijklmnz' share a 14-char key;
     strict lookup must resolve BOTH to the byte-wise last term."""
-    r1 = topk_bm25(
-        spark, env["index"], env["docs"], env["stats"],
+    r1 = topk_bm25_chunked(
+        spark, env["chunks"], env["docs"], env["stats"],
         "abcdefghijklmno", mode="or", k=100, strict=True,
     ).collect()
-    r2 = topk_bm25(
-        spark, env["index"], env["docs"], env["stats"],
+    r2 = topk_bm25_chunked(
+        spark, env["chunks"], env["docs"], env["stats"],
         "abcdefghijklmnz", mode="or", k=100, strict=True,
     ).collect()
     assert [(r["doc_id"], r["score"]) for r in r1] == [
         (r["doc_id"], r["score"]) for r in r2
     ]
     # non-strict mode resolves them to their own (different) lists
-    n1 = topk_bm25(
-        spark, env["index"], env["docs"], env["stats"],
+    n1 = topk_bm25_chunked(
+        spark, env["chunks"], env["docs"], env["stats"],
         "abcdefghijklmno", mode="or", k=100, strict=False,
     ).collect()
-    n2 = topk_bm25(
-        spark, env["index"], env["docs"], env["stats"],
+    n2 = topk_bm25_chunked(
+        spark, env["chunks"], env["docs"], env["stats"],
         "abcdefghijklmnz", mode="or", k=100, strict=False,
     ).collect()
     assert {r["doc_id"] for r in n1} != {r["doc_id"] for r in n2}

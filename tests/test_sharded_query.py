@@ -10,13 +10,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from invertedindexbuilder_spark.operators.index_build import (
-    encode_chunks,
-    merge_chunks,
-)
+from invertedindexbuilder_spark.operators.index_build import encode_chunks
 from invertedindexbuilder_spark.operators.query_exec import (
     _make_docs_narrower,
-    topk_bm25,
     topk_bm25_chunked,
 )
 from invertedindexbuilder_spark.operators.sharding import (
@@ -68,7 +64,9 @@ def env(spark):
     rows = _rows()
     post = spark.createDataFrame(rows, "term string, doc_id long, tf long")
     chunks = encode_chunks(post, salt_threshold=64, chunk_blocks=1).cache()
-    index = merge_chunks(chunks).cache()
+    # the single-build reference in the merged layout: one unsalted
+    # whole-list chunk per term
+    unsalted = encode_chunks(post, heavy=[]).cache()
     docs = spark.range(N).select(
         F.col("id").alias("doc_id"),
         (F.lit(100) + F.col("id") % 40).cast("long").alias("doc_len"),
@@ -80,7 +78,7 @@ def env(spark):
     }
     shards = [_mk_shard(spark, rows, 0, N_A), _mk_shard(spark, rows, N_A, N)]
     return {
-        "index": index,
+        "unsalted": unsalted,
         "chunks": chunks,
         "docs": docs,
         "stats": stats,
@@ -94,8 +92,8 @@ def _key(rows):
 
 def _single(spark, env, query, mode, **kw):
     return _key(
-        topk_bm25(
-            spark, env["index"], env["docs"], env["stats"], query,
+        topk_bm25_chunked(
+            spark, env["unsalted"], env["docs"], env["stats"], query,
             mode=mode, k=10, round_digits=6, **kw,
         ).collect()
     )
@@ -286,11 +284,11 @@ def test_sharded_roots_match_federated_merge(spark, tmp_path_factory):
     ra, rb, out = (str(base / n) for n in ("a", "b", "m"))
     build(
         spark, synthetic_docs_src(spark, 200), ra,
-        write_chunks=True, salt_threshold=70, chunk_blocks=1,
+        salt_threshold=70, chunk_blocks=1,
     )
     build(
         spark, synthetic_docs_src(spark, 150, start=200), rb,
-        write_chunks=True, salt_threshold=70, chunk_blocks=1,
+        salt_threshold=70, chunk_blocks=1,
     )
     merge_builds(spark, ra, rb, out)
     cat = Catalog(spark, out)
@@ -357,7 +355,7 @@ def test_stream_delta_served_sharded_before_compaction(spark, tmp_path):
     root, delta_root, full = (
         str(tmp_path / n) for n in ("base", "delta", "full")
     )
-    build(spark, synthetic_docs_src(spark, n_base), root, write_chunks=True)
+    build(spark, synthetic_docs_src(spark, n_base), root)
 
     # two drops land in the ingest dir; the delta indexes ONLY them
     drops = str(tmp_path / "drops")
@@ -369,12 +367,9 @@ def test_stream_delta_served_sharded_before_compaction(spark, tmp_path):
     ).write.mode("append").parquet(drops)
     delta_src = spark.read.parquet(drops)
     assert delta_src.count() == n_delta
-    build(spark, delta_src, delta_root, write_chunks=True)
+    build(spark, delta_src, delta_root)
 
-    build(
-        spark, synthetic_docs_src(spark, n_base + n_delta), full,
-        write_chunks=True,
-    )
+    build(spark, synthetic_docs_src(spark, n_base + n_delta), full)
 
     from invertedindexbuilder_spark.catalog import Catalog
     from invertedindexbuilder_spark.plans.build import load_stats
@@ -403,11 +398,22 @@ def test_stream_delta_served_sharded_before_compaction(spark, tmp_path):
     assert got and got == want
 
 
-def test_sharded_requires_chunked_builds(spark, tmp_path):
-    from invertedindexbuilder_spark.plans.build import build
+def test_sharded_serves_default_builds(spark, tmp_path):
+    """A default build() root (no flags) loads as a shard and serves
+    exactly what its own chunk table serves."""
+    from invertedindexbuilder_spark.catalog import Catalog
+    from invertedindexbuilder_spark.plans.build import build, load_stats
     from invertedindexbuilder_spark.sources.docs_src import synthetic_docs_src
 
-    root = str(tmp_path / "nochunks")
-    build(spark, synthetic_docs_src(spark, 40), root, write_chunks=False)
-    with pytest.raises(ValueError, match="chunked builds"):
-        topk_bm25_sharded(spark, [root], "alpha", mode="or", k=5)
+    root = str(tmp_path / "default")
+    build(spark, synthetic_docs_src(spark, 40), root)
+    cat = Catalog(spark, root)
+    want = _key(
+        topk_bm25_chunked(
+            spark, cat.read("index_chunks"),
+            cat.read("docs").select("doc_id", "doc_len"),
+            load_stats(spark, root), "alpha", mode="or", k=5,
+        ).collect()
+    )
+    got = _key(topk_bm25_sharded(spark, [root], "alpha", mode="or", k=5).collect())
+    assert got and got == want

@@ -8,14 +8,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from invertedindexbuilder_spark.operators.dedup import minhash_dedup
-from invertedindexbuilder_spark.operators.index_build import (
-    encode_chunks,
-    merge_chunks,
-)
-from invertedindexbuilder_spark.operators.query_exec import (
-    topk_bm25,
-    topk_bm25_chunked,
-)
+from invertedindexbuilder_spark.operators.index_build import encode_chunks
+from invertedindexbuilder_spark.operators.query_exec import topk_bm25_chunked
 
 
 def _n_cached_rdds(spark) -> int:
@@ -30,16 +24,16 @@ def test_repeated_queries_do_not_grow_storage(spark):
             rows.append(("mid", d, 1))
     postings = spark.createDataFrame(rows, "term string, doc_id long, tf long")
     chunks = encode_chunks(postings, salt_threshold=64, chunk_blocks=1).cache()
-    merged = merge_chunks(chunks).cache()
+    unsalted = encode_chunks(postings, heavy=[]).cache()
     docs = spark.range(300).select(
         F.col("id").alias("doc_id"), F.lit(120).cast("long").alias("doc_len")
     )
     stats = {"n_docs": 300, "sum_doc_len": 300 * 120}
-    chunks.count(), merged.count()
+    chunks.count(), unsalted.count()
 
     base = _n_cached_rdds(spark)
     for q, m in [("the mid", "and"), ("the", "or")] * 5:
-        topk_bm25(spark, merged, docs, stats, q, mode=m, k=5).collect()
+        topk_bm25_chunked(spark, unsalted, docs, stats, q, mode=m, k=5).collect()
         topk_bm25_chunked(spark, chunks, docs, stats, q, mode=m, k=5).collect()
     # <=: Spark's async ContextCleaner may release OTHER tests' expired
     # checkpoint RDDs mid-loop; the property under test is non-growth

@@ -29,7 +29,7 @@ def test_stream_drops_fold_through_compact_into_queries(spark, tmp_path):
     root_full = str(tmp_path / "idx_full")
 
     # base build (chunked serving layout)
-    build(spark, synthetic_docs_src(spark, N_BASE), root, write_chunks=True)
+    build(spark, synthetic_docs_src(spark, N_BASE), root)
 
     # two parquet drops land (the stream source dir)
     synthetic_docs_src(spark, 50, start=N_BASE).write.mode("append").parquet(drops)
@@ -59,7 +59,6 @@ def test_stream_drops_fold_through_compact_into_queries(spark, tmp_path):
         spark,
         synthetic_docs_src(spark, N_BASE + N_DELTA),
         root_full,
-        write_chunks=True,
     )
     cat, cat_f = Catalog(spark, root), Catalog(spark, root_full)
     assert load_stats(spark, root_full) == stats

@@ -113,7 +113,7 @@ def test_chunk_only_build_serves_and_compacts(spark, tmp_path):
 
     # chunk-only compacted result == merged full rebuild, query-for-query
     root_f = str(tmp_path / "full")
-    build(spark, synthetic_docs_src(spark, 400), root_f, write_chunks=True)
+    build(spark, synthetic_docs_src(spark, 400), root_f)
     cat_f = Catalog(spark, root_f)
     stats_f = load_stats(spark, root_f)
     assert stats2 == stats_f
@@ -155,7 +155,7 @@ def test_local_session_serves_chunk_only_build(spark, tmp_path):
     root_c = str(tmp_path / "chunkonly")
     root_m = str(tmp_path / "merged")
     build(spark, synthetic_docs_src(spark, 250), root_c, merged=False)
-    build(spark, synthetic_docs_src(spark, 250), root_m, write_chunks=True)
+    build(spark, synthetic_docs_src(spark, 250), root_m)
     li_c, li_m = LocalIndex(root_c), LocalIndex(root_m)
     for q, m in [("alpha beta", "and"), ("common alpha gamma", "or")]:
         a = topk_local(li_c, q, mode=m, k=10)
