@@ -1,13 +1,16 @@
 """Driver-local query session: <100 ms interactive top-k BM25 without
 launching a Spark job (the analog of the reference's -q session,
 query.c:29-300 — load once, then answer from memory + targeted reads).
+The session loads the serving chunk table (index_chunks) into flat
+columns (LocalIndex) and never reads the merged ``index`` export.
 
 Two exact pruning mechanisms over the block metadata:
 
 - conjunctive: progressive intersection from the rarest list; for each
   further list only blocks whose doc range intersects the current
   candidate set are decoded (nextGEQ skipping, set-at-a-time —
-  inverted_list.c:36-77 semantics without the cursor);
+  inverted_list.c:36-77 semantics without the cursor); the tfs decoded
+  there score the final candidates, so no block is decoded twice;
 - disjunctive: BLOCK-MAX pruning in the spirit of Block-Max WAND
   (Ding & Suel, SIGIR 2011) — the north-star addition; the reference
   has docid skips only.  Light lists are decoded fully and
@@ -29,46 +32,38 @@ from __future__ import annotations
 import bisect
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from invertedindexbuilder_spark import BM25_B, BM25_K1, LEXICON_KEY_LEN
 from invertedindexbuilder_spark.functions.bm25 import bm25, d_avr, idf
 from invertedindexbuilder_spark.functions.compress import decode_block_run
-from invertedindexbuilder_spark.operators.query_exec import tokenize_query
+from invertedindexbuilder_spark.operators.query_exec import (
+    HEAVY_QUERY_DF,
+    _key_weights,
+    tokenize_query,
+)
 
-HEAVY_QUERY_DF = 8192  # lists above this get block-max treatment in OR
 
-
-def _merge_chunk_table(chunks):
-    """pyarrow INDEX_CHUNK table -> merged one-row-per-term pyarrow-like
-    table (driver-side twin of operators.index_build.merge_chunks, via
-    the same _merge_sorted_frame)."""
-    import pandas as pd
-    import pyarrow as pa
-
-    from invertedindexbuilder_spark.operators.index_build import (
-        _merge_sorted_frame,
-    )
-
-    pdf = chunks.to_pandas()
-    out = {k: [] for k in ("term", "df", "last_doc_ids", "block_bytes",
-                           "block_counts", "max_tf", "payload")}
-    for _term, grp in pdf.groupby("term", sort=False):
-        m = _merge_sorted_frame(
-            pd.DataFrame(grp).sort_values("first_doc_id")
-        )
-        for k in out:
-            out[k].append(m[k])
-    return pa.table(out)
+def _offsets(counts) -> np.ndarray:
+    """Per-row counts -> int64 start offsets, plus the total at the end."""
+    return np.concatenate(([0], np.cumsum(np.asarray(counts, np.int64))))
 
 
 class LocalIndex:
-    """In-process view of the built tables (index/docs/stats parquet).
+    """In-process view of the built tables (index_chunks/docs/stats,
+    plus deleted_docs when present), loaded eagerly (the reference's
+    12 s query-prep step at MS MARCO scale).
 
-    Loads the doc-length array and the per-term metadata eagerly (the
-    reference's 12 s query-prep step at MS MARCO scale); payloads are
-    memory-resident here — at cluster scale the same session reads
-    term rows on demand with a parquet term-range filter instead.
+    The chunk table is held as flat columns: the sorted term list,
+    per-term offsets into per-block arrays (last doc id, byte size,
+    posting count, max tf, delta-chain base) and one payload buffer
+    with per-block byte offsets.  A term's chunks are consecutive block
+    runs in first_doc_id order, so one-chunk, salted and folded terms
+    take one path.  Payloads are memory-resident here — at cluster
+    scale the same session reads term rows on demand with a parquet
+    term-range filter instead.
     """
 
     def __init__(self, index_root: str):
@@ -82,26 +77,39 @@ class LocalIndex:
             # resolve generation pointers (tables.json) like Catalog does
             return resolve_table_path(index_root, name)
 
-        if os.path.exists(_p("index")):
-            t = pq.read_table(_p("index"))
-        else:
-            # chunk-only build (plans.build merged=False): assemble the
-            # merged per-term view in driver memory — the whole point of
-            # the local session is an index that FITS the driver, so the
-            # concat the distributed plan avoids is fine here
-            t = _merge_chunk_table(pq.read_table(_p("index_chunks")))
-        self.terms: list[str] = t.column("term").to_pylist()
-        order = np.argsort(self.terms)
-        self.terms = [self.terms[i] for i in order]
-        rows = {
-            name: t.column(name).to_pylist()
-            for name in ("df", "last_doc_ids", "block_bytes", "block_counts",
-                         "max_tf", "payload")
-        }
-        self.rows = [
-            {k: rows[k][i] for k in rows} | {"term": self.terms[j]}
-            for j, i in enumerate(order)
-        ]
+        # Arrow orders strings by UTF-8 bytes = code points, the order
+        # bisect sees on the Python term list
+        t = pq.read_table(_p("index_chunks")).sort_by(
+            [("term", "ascending"), ("first_doc_id", "ascending")]
+        )
+        names = np.asarray(t.column("term").to_pylist(), dtype=object)
+        new_term = np.ones(names.size, dtype=bool)
+        new_term[1:] = names[1:] != names[:-1]
+        term_rows = np.append(np.flatnonzero(new_term), names.size)
+        self.terms: list[str] = names[term_rows[:-1]].tolist()
+        row_blk = _offsets(pc.list_value_length(t.column("max_tf")))
+        self._term_blk = row_blk[term_rows]
+        self._df = np.diff(_offsets(t.column("df"))[term_rows])
+        self._last, self._bb, self._bc, self._mtf = (
+            pc.list_flatten(t.column(c)).to_numpy().astype(np.int64)
+            for c in ("last_doc_ids", "block_bytes", "block_counts", "max_tf")
+        )
+        self._boff = _offsets(self._bb)
+        pay = t.column("payload").combine_chunks().cast(pa.large_binary())
+        lo, hi = np.frombuffer(pay.buffers()[1], np.int64)[
+            [pay.offset, pay.offset + len(pay)]]
+        self._payload = np.frombuffer(pay.buffers()[2], np.uint8)[lo:hi]
+        # delta-chain base per block: the previous block's last doc, or
+        # 0 where a chunk starts (a chunk's first gap is absolute).  A
+        # run decoded in one pass across chunk starts adds each start's
+        # previous last doc to every later posting; ``_shift``
+        # accumulates those, so the run corrects by one subtraction
+        chunk_start = np.zeros(self._last.size, dtype=bool)
+        chunk_start[row_blk[:-1]] = True
+        prev_last = np.concatenate(([0], self._last[:-1]))
+        self._base = np.where(chunk_start, 0, prev_last)
+        self._shift = np.cumsum(np.where(chunk_start, prev_last, 0))
+
         d = pq.read_table(_p("docs"), columns=["doc_id", "doc_len"])
         ids = np.asarray(d.column("doc_id"), dtype=np.int64)
         lens = np.asarray(d.column("doc_len"), dtype=np.int64)
@@ -126,6 +134,8 @@ class LocalIndex:
 
     # -- lexicon lookup (Q2 + D5) --
     def lookup(self, term: str, strict: bool = True) -> dict | None:
+        """The term's row: term, df, first block index ``lo`` and its
+        per-block arrays over all of its chunks."""
         if strict:
             key = term[:LEXICON_KEY_LEN]
             lo = bisect.bisect_left(self.terms, key)
@@ -134,57 +144,59 @@ class LocalIndex:
                 i for i in range(lo, hi)
                 if self.terms[i][:LEXICON_KEY_LEN] == key
             ]
-            return self.rows[match[-1]] if match else None  # last wins
+            return self._row(match[-1]) if match else None  # last wins
         lo = bisect.bisect_left(self.terms, term)
         if lo < len(self.terms) and self.terms[lo] == term:
-            return self.rows[lo]
+            return self._row(lo)
         return None
 
+    def _row(self, i: int) -> dict:
+        lo, hi = int(self._term_blk[i]), int(self._term_blk[i + 1])
+        return {"term": self.terms[i], "df": int(self._df[i]), "lo": lo,
+                "last_doc_ids": self._last[lo:hi],
+                "block_bytes": self._bb[lo:hi], "max_tf": self._mtf[lo:hi]}
+
     # -- block-level decode helpers --
+    def _decode_run(self, b0: int, b1: int):
+        """Global blocks b0..b1 of one term -> (doc_ids, tfs) with ONE
+        varbyte pass (compress.decode_block_run), corrected where the
+        run crosses chunk starts."""
+        bc = self._bc[b0 : b1 + 1]
+        d, t = decode_block_run(
+            self._payload[self._boff[b0] : self._boff[b1 + 1]],
+            self._bb[b0 : b1 + 1], bc, prev_doc_id=int(self._base[b0]),
+        )
+        if self._shift[b1] != self._shift[b0]:
+            d -= np.repeat(self._shift[b0 : b1 + 1] - self._shift[b0], bc)
+        return d, t
+
     def _decode_blocks(self, row: dict, want: np.ndarray):
         """Decode the selected block indices of one list ->
         (doc_ids, tfs) concatenated.  Consecutive indices decode as
-        RUNS — one varbyte pass per run (compress.decode_block_run),
-        not one per block; a full-list decode is exactly one pass."""
+        RUNS — one varbyte pass per run, not one per block; a
+        full-list decode is exactly one pass."""
         if want.size == 0:
             return np.zeros(0, np.int64), np.zeros(0, np.int64)
-        bb = np.asarray(row["block_bytes"], dtype=np.int64)
-        bc = np.asarray(row["block_counts"], dtype=np.int64)
-        last = np.asarray(row["last_doc_ids"], dtype=np.int64)
-        payload = bytes(row["payload"])
-        offs = np.concatenate(([0], np.cumsum(bb)))
         self.blocks_decoded += int(want.size)
+        want = want + row["lo"]
         span0, span1 = int(want[0]), int(want[-1])
         n_span = span1 - span0 + 1
         if want.size * 3 >= n_span:
             # dense selection: ONE decode of the whole span, then mask
             # off the unwanted blocks' rows — far cheaper than many
             # fragmented runs when BMW pruning leaves a gappy pattern
-            d, t = decode_block_run(
-                payload[offs[span0] : offs[span1 + 1]],
-                bb[span0 : span1 + 1],
-                bc[span0 : span1 + 1],
-                prev_doc_id=int(last[span0 - 1]) if span0 > 0 else 0,
-            )
+            d, t = self._decode_run(span0, span1)
             if want.size == n_span:
                 return d, t
             keep_block = np.zeros(n_span, dtype=bool)
             keep_block[want - span0] = True
-            keep = np.repeat(keep_block, bc[span0 : span1 + 1])
+            keep = np.repeat(keep_block, self._bc[span0 : span1 + 1])
             return d[keep], t[keep]
-        out_d, out_t = [], []
         cuts = np.flatnonzero(np.diff(want) != 1) + 1
-        for run in np.split(want, cuts):
-            b0, b1 = int(run[0]), int(run[-1])
-            d, t = decode_block_run(
-                payload[offs[b0] : offs[b1 + 1]],
-                bb[b0 : b1 + 1],
-                bc[b0 : b1 + 1],
-                prev_doc_id=int(last[b0 - 1]) if b0 > 0 else 0,
-            )
-            out_d.append(d)
-            out_t.append(t)
-        return np.concatenate(out_d), np.concatenate(out_t)
+        runs = [self._decode_run(int(r[0]), int(r[-1]))
+                for r in np.split(want, cuts)]
+        return (np.concatenate([d for d, _ in runs]),
+                np.concatenate([t for _, t in runs]))
 
     def decode_all(self, row: dict):
         n_blocks = len(row["block_bytes"])
@@ -193,17 +205,11 @@ class LocalIndex:
     def blocks_overlapping(self, row: dict, cand: np.ndarray) -> np.ndarray:
         """Indices of blocks whose doc range contains >= 1 candidate.
         Block b covers (last[b-1], last[b]] — metadata only, no decode."""
-        last = np.asarray(row["last_doc_ids"], dtype=np.int64)
+        last = row["last_doc_ids"]
         lo = np.concatenate(([-1], last[:-1]))  # exclusive lower bound
         left = np.searchsorted(cand, lo + 1, side="left")
         right = np.searchsorted(cand, last, side="right")
         return np.flatnonzero(right > left)
-
-
-def _score(li: LocalIndex, tfs, df):
-    return lambda doc_ids, tfs_: bm25(
-        tfs_, df, li.doc_len[doc_ids], li.n_docs, li.d_avr
-    )
 
 
 def _block_ubs(li: LocalIndex, row: dict) -> np.ndarray:
@@ -237,13 +243,9 @@ def _match_rows(
     """Lexicon lookup shared by ranking and facets: (row, weight) per
     matched key (D5 collision winner, duplicate-term weights, unknown
     terms dropped), shortest-list-first (Q5)."""
-    weights: dict[str, int] = {}
-    for t in tokenize_query(query):
-        key = t[:LEXICON_KEY_LEN] if strict else t
-        weights[key] = weights.get(key, 0) + 1
     matched: list[tuple[dict, int]] = []
     seen = set()
-    for key, w in weights.items():
+    for key, w in _key_weights(tokenize_query(query), strict).items():
         row = li.lookup(key, strict=strict)
         if row is not None and row["term"] not in seen:
             seen.add(row["term"])
@@ -304,25 +306,33 @@ def _dense_theta(scores: np.ndarray, mask: np.ndarray, k: int) -> float:
     return float(np.partition(sc, ids.size - k)[ids.size - k])
 
 
-def _conjunctive(li, matched, k, ex=None):
-    # leapfrog, set-at-a-time: rarest list seeds the candidates; each
-    # further list is decoded only where its blocks overlap them
-    cand, _ = li.decode_all(matched[0][0])
-    cand, _unused = _drop_excluded(cand, cand, ex)
+def _leapfrog(li, matched, ex=None):
+    """AND match set, set-at-a-time: the rarest list seeds the
+    candidates; each further list decodes only the blocks overlapping
+    them.  -> (sorted candidate doc_ids, per matched list the tfs at
+    those candidates), every block decoded at most once."""
+    cand, tf = _drop_excluded(*li.decode_all(matched[0][0]), ex)
+    tfs = [tf]
     for row, _w in matched[1:]:
         if cand.size == 0:
-            return []
-        d, _t = li._decode_blocks(row, li.blocks_overlapping(row, cand))
-        cand = cand[np.isin(cand, d, assume_unique=True)]
-    if cand.size == 0:
-        return []
-    # exact scoring: per-term tf restricted to the final candidates
-    scores = np.zeros(cand.size, dtype=np.float64)
-    for row, w in matched:
+            break
         d, t = li._decode_blocks(row, li.blocks_overlapping(row, cand))
         pos = np.searchsorted(d, cand)
-        assert (d[pos] == cand).all()
-        scores += w * bm25(t[pos], row["df"], li.doc_len[cand], li.n_docs, li.d_avr)
+        hit = pos < d.size
+        hit[hit] = d[pos[hit]] == cand[hit]
+        cand = cand[hit]
+        tfs = [x[hit] for x in tfs] + [t[pos[hit]]]
+    return cand, tfs
+
+
+def _conjunctive(li, matched, k, ex=None):
+    cand, tfs = _leapfrog(li, matched, ex)
+    if cand.size == 0:
+        return []
+    # exact scoring from the tfs the intersection already decoded
+    scores = np.zeros(cand.size, dtype=np.float64)
+    for (row, w), tf in zip(matched, tfs):
+        scores += w * bm25(tf, row["df"], li.doc_len[cand], li.n_docs, li.d_avr)
     order = np.lexsort((cand, -scores))[:k]
     return [(int(cand[i]), float(scores[i])) for i in order]
 
@@ -337,8 +347,7 @@ def _disjunctive(li, matched, k, ex=None):
     heavy = [(r, w) for r, w in matched if r["df"] > HEAVY_QUERY_DF]
 
     for row, w in light:
-        d, t = li.decode_all(row)
-        d, t = _drop_excluded(d, t, ex)
+        d, t = _drop_excluded(*li.decode_all(row), ex)
         scores[d] += w * bm25(t, row["df"], li.doc_len[d], li.n_docs, li.d_avr)
         mask[d] = True
 
@@ -347,7 +356,7 @@ def _disjunctive(li, matched, k, ex=None):
 
     ubs = [_block_ubs(li, r) for r, _ in heavy]
     full_ub = [float(u.max()) * w if u.size else 0.0 for (r, w), u in zip(heavy, ubs)]
-    decoded: list[set] = [set() for _ in heavy]
+    decoded = [np.zeros(len(r["max_tf"]), dtype=bool) for r, _ in heavy]
 
     # candidate completion loop: candidates' heavy postings must all be
     # fetched; newly admitted docs may require blocks of OTHER heavy
@@ -360,20 +369,14 @@ def _disjunctive(li, matched, k, ex=None):
             others = sum(full_ub[: i]) + sum(full_ub[i + 1 :])
             want_ub = np.flatnonzero(w * ubs[i] + others >= theta)
             want_cand = li.blocks_overlapping(row, cand)
-            want = [
-                b
-                for b in np.union1d(want_ub, want_cand).tolist()
-                if b not in decoded[i]
-            ]
-            if not want:
+            want = np.union1d(want_ub, want_cand)
+            want = want[~decoded[i][want]]
+            if not want.size:
                 continue
             grew = True
-            decoded[i].update(want)
-            d, t = li._decode_blocks(row, np.array(want, dtype=np.int64))
-            d, t = _drop_excluded(d, t, ex)
-            scores[d] += w * bm25(
-                t, row["df"], li.doc_len[d], li.n_docs, li.d_avr
-            )
+            decoded[i][want] = True
+            d, t = _drop_excluded(*li._decode_blocks(row, want), ex)
+            scores[d] += w * bm25(t, row["df"], li.doc_len[d], li.n_docs, li.d_avr)
             mask[d] = True
         if not grew:
             break
@@ -396,22 +399,15 @@ def match_ids_local(
     matched = _match_rows(li, query, strict)
     if not matched:
         return np.empty(0, dtype=np.int64)
+    ex = li.tombstones if apply_tombstones else None
     if mode == "and":
-        ids, _ = li.decode_all(matched[0][0])
-        for row, _w in matched[1:]:
-            if ids.size == 0:
-                break
-            d, _t = li._decode_blocks(row, li.blocks_overlapping(row, ids))
-            ids = ids[np.isin(ids, d, assume_unique=True)]
-    elif mode == "or":
+        return _leapfrog(li, matched, ex)[0]
+    if mode == "or":
         ids = np.unique(
             np.concatenate([li.decode_all(row)[0] for row, _w in matched])
         )
-    else:
-        raise ValueError(mode)
-    ex = li.tombstones if apply_tombstones else None
-    ids, _ = _drop_excluded(ids, ids, ex)
-    return ids
+        return _drop_excluded(ids, ids, ex)[0]
+    raise ValueError(mode)
 
 
 def facet_counts_local(

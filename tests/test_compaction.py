@@ -14,6 +14,10 @@ from invertedindexbuilder_spark.operators.index_build import (
     encode_chunks,
     merge_chunks,
 )
+from invertedindexbuilder_spark.operators.local_query import (
+    LocalIndex,
+    topk_local,
+)
 from invertedindexbuilder_spark.operators.query_exec import topk_bm25_chunked
 
 from tests.oracle_util import decoded_lists
@@ -151,6 +155,20 @@ def test_plan_compact_matches_full_rebuild(spark, tmp_path):
         )
 
     assert results(root_c) == results(root_f)
+    # the driver-local session serves the folded terms' several chunks
+    # (old + delta) with the same answers
+    assert cc.read("index_chunks").filter(F.col("term") == "alpha").count() > 1
+    li = LocalIndex(root_c)
+    docs = cc.read("docs").select("doc_id", "url").collect()
+    urls = {r["doc_id"]: r["url"] for r in docs}
+    local = sorted(
+        (urls[d], s)
+        for d, s in topk_local(li, "alpha beta", mode="and", k=100_000)
+    )
+    want = results(root_c)
+    assert [u for u, _ in local] == [u for u, _ in want]
+    for (_, s), (_, r) in zip(local, want):
+        assert abs(s - r) <= 1e-6
 
     # replaying the same delta must be rejected
     with pytest.raises(ValueError, match="replayed or overlapping"):

@@ -81,17 +81,32 @@ def test_conjunctive_block_pruning_skips_blocks(li):
     assert li.blocks_decoded < total_blocks // 2 + 1
 
 
+def test_conjunctive_decodes_each_block_once(li):
+    """AND scores its candidates from the tfs the intersection decoded:
+    on fully overlapping queries every matched block decodes once."""
+    for query in ("common", "common alpha"):
+        matched = sum(len(li.lookup(t)["block_bytes"]) for t in query.split())
+        li.blocks_decoded = 0
+        assert topk_local(li, query, mode="and", k=10)
+        assert li.blocks_decoded == matched, query
+
+
 def test_disjunctive_blockmax_prunes(li):
-    """OR with k=1 over a heavy + light term: with HEAVY_QUERY_DF
-    forced low, most heavy blocks should fail the upper-bound test."""
+    """OR with k=3 over one heavy and four light terms: with
+    HEAVY_QUERY_DF forced low, the light docs seed theta and most
+    heavy blocks fail the upper-bound test."""
     import invertedindexbuilder_spark.operators.local_query as lq
 
+    query = "common rare0001 rare0002 rare0003 rare0004"
+    rows = [li.lookup(t) for t in query.split()]
+    matched = sum(len(r["block_bytes"]) for r in rows if r is not None)
     old = lq.HEAVY_QUERY_DF
     lq.HEAVY_QUERY_DF = 64
     try:
         li.blocks_decoded = 0
-        got = topk_local(li, "alpha rare0007", mode="or", k=3)
-        want = brute_topk(li, ["alpha", "rare0007"], "or", 3)
+        got = topk_local(li, query, mode="or", k=3)
+        assert li.blocks_decoded < matched
+        want = brute_topk(li, query.split(), "or", 3)
         assert [g[0] for g in got] == [w[0] for w in want]
     finally:
         lq.HEAVY_QUERY_DF = old

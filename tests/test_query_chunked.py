@@ -28,6 +28,8 @@ from invertedindexbuilder_spark.operators.query_exec import (
     topk_bm25_chunked,
 )
 
+from tests.oracle_util import decoded_lists
+
 N_DOCS = 600
 
 
@@ -185,8 +187,9 @@ def test_chunked_matches_merged(spark, corpus, query, mode):
 
 def test_build_chunks_serve_like_merged_export(spark, tmp_out):
     """Full plan: the persisted (salted) index_chunks artifact serves
-    the same answers as the driver-local session reading the merged
-    export the build derived from it."""
+    the same answers on the distributed path and in the driver-local
+    session, whose multi-chunk terms decode to the lists of the merged
+    export the build derived from the chunks."""
     from invertedindexbuilder_spark.catalog import Catalog
     from invertedindexbuilder_spark.operators.local_query import (
         LocalIndex,
@@ -198,13 +201,18 @@ def test_build_chunks_serve_like_merged_export(spark, tmp_out):
     src = synthetic_docs_src(spark, 400)
     build(spark, src, tmp_out, salt_threshold=200, chunk_blocks=1)
     cat = Catalog(spark, tmp_out)
-    assert cat.exists("index")  # merged export, read by LocalIndex
+    assert cat.exists("index")  # merged export, the decode reference
     chunks = cat.read("index_chunks")
     docs = cat.read("docs").select("doc_id", "doc_len")
     stats = load_stats(spark, tmp_out)
     li = LocalIndex(tmp_out)
     # the fixture stopword 'common' (df ~380 > 200) must be chunked
     assert chunks.filter(F.col("term") == "common").count() > 1
+    merged = decoded_lists(cat.read("index"))
+    assert sorted(merged) == li.terms
+    for term, (doc_ids, tfs) in merged.items():
+        d, t = li.decode_all(li.lookup(term, strict=False))
+        assert (d.tolist(), t.tolist()) == (doc_ids, tfs), term
     for query, mode in [("common alpha", "and"), ("alpha beta gamma", "or")]:
         a = topk_local(li, query, mode=mode, k=10)
         b = topk_bm25_chunked(

@@ -1,7 +1,7 @@
-"""scripts/query_cli.py --spark serves a default build() root (no build
-flags) from its chunk table — single queries and --batch — with the
-same answers as topk_bm25_chunked.  Runs in-process: the CLI's
-get_spark(cores=8) reuses the test session."""
+"""scripts/query_cli.py serves a default build() root (no build flags)
+from its chunk table — driver-local and --spark single queries and
+--batch — with the same answers as topk_bm25_chunked.  Runs
+in-process: the CLI's get_spark(cores=8) reuses the test session."""
 
 from __future__ import annotations
 
@@ -53,6 +53,24 @@ def test_spark_cli_serves_default_build(spark, root, mode, monkeypatch, capsys):
         for line in capsys.readouterr().out.splitlines()
     ]
     assert got and got == _want(spark, root, "alpha common", mode)
+
+
+@pytest.mark.parametrize("mode", ["and", "or"])
+def test_local_cli_serves_default_build(spark, root, mode, monkeypatch, capsys):
+    """Without --spark the CLI answers from the driver-local session."""
+    monkeypatch.setattr(
+        sys, "argv",
+        ["query_cli.py", "--index", root, "--mode", mode, "--k", "5",
+         "alpha", "common"],
+    )
+    assert query_cli.main() == 0
+    docs = Catalog(spark, root).read("docs").select("doc_id", "url").collect()
+    urls = {r["doc_id"]: r["url"] for r in docs}
+    want = [
+        f"{score:.6f}\t{doc_id}\t{urls[doc_id]}"
+        for doc_id, score in _want(spark, root, "alpha common", mode)
+    ]
+    assert want and capsys.readouterr().out.splitlines() == want
 
 
 def test_spark_cli_batch_serves_default_build(
