@@ -38,39 +38,21 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-import numpy as np
-
 from invertedindexbuilder_spark import LEXICON_KEY_LEN
 from invertedindexbuilder_spark.functions.bm25 import d_avr
 from invertedindexbuilder_spark.operators.query_exec import (
-    DOCLEN_PUSH_CAP,
-    _DECODED_SCHEMA,
     _doc_lens_for,
+    _local_doc_lens,
     _lookup_chunk_meta,
-    _winner_rows,
+    and_candidate_pass,
+    and_candidates_engaged,
     bm25_expr,
     decode_matched_rows,
-    decode_matched_rows_bmw,
     lookup_chunk_rows,
     tokenize_query,
 )
 
 _QKEYS_SCHEMA = "query_id long, key string, weight int"
-
-# Batch conjunctive candidate pruning (r8, VERDICT r7 #5): per query
-# the rarest matched key's decoded doc_ids bound the result set, so
-# the OTHER keys decode candidate-bearing blocks only and doc_lens
-# come from one In-pushed scan of the union candidate set — the batch
-# form of the single-query r7 machinery.  Engage only when (a) the
-# union candidate set stays within the doc_len pushdown cap and (b)
-# the would-be-skipped decode volume (sum of non-rare matched dfs)
-# clears this floor — below it the two extra driver jobs cost more
-# than the skipped decode (same shape as the single-query crossover,
-# scripts/bench_bmw.py).  Conf-overridable per deployment like the
-# other auto floors.
-BATCH_AND_PRUNE_MIN_SKIPPABLE = 100_000
-BATCH_AND_PRUNE_MIN_SKIPPABLE_CONF = "spark.iib.batchAndPruneMinSkippable"
-
 
 def _query_keys(queries: DataFrame, strict: bool) -> DataFrame:
     """(query_id, text) -> (query_id, key, weight): tokenize each query
@@ -160,86 +142,15 @@ def topk_bm25_batch(
             by_q.setdefault(int(r["query_id"]), []).append(r["key"])
 
     if mode == "and" and winners:
-        # ---- batch conjunctive candidate pruning (r8) ----
-        rare_of = {
-            q: min(ks, key=lambda k: winners[k]["term_df"])
-            for q, ks in by_q.items()
-        }
-        rare_keys = sorted(set(rare_of.values()))
-        other_keys = sorted(set(winners) - set(rare_keys))
-        cand_total = sum(winners[k]["term_df"] for k in rare_keys)
-        skippable = sum(winners[k]["term_df"] for k in other_keys)
-        floor = spark.conf.get(BATCH_AND_PRUNE_MIN_SKIPPABLE_CONF, None)
-        floor = (
-            BATCH_AND_PRUNE_MIN_SKIPPABLE if floor is None else int(floor)
+        # conjunctive candidate pass over the whole batch: each query's
+        # result docs are in its rarest list, so the union of the rare
+        # lists bounds every result doc of the batch
+        rare_keys = sorted(
+            {min(ks, key=lambda k: winners[k]["term_df"]) for ks in by_q.values()}
         )
-        if (
-            other_keys
-            and 0 < cand_total <= DOCLEN_PUSH_CAP
-            and skippable >= floor
-        ):
-            rare_rows_df = decode_matched_rows(
-                _winner_rows(chunks, winners, rare_keys, strict).withColumn("weight", F.lit(1))
-            )
-            rrows = rare_rows_df.collect()  # <= cand_total rows
-            cand_by_key: dict[str, list[int]] = {}
-            for r in rrows:
-                cand_by_key.setdefault(r["key"], []).append(r["doc_id"])
-            all_cands = np.unique(
-                np.fromiter(
-                    (r["doc_id"] for r in rrows), np.int64, count=len(rrows)
-                )
-            )
-            # every AND result doc of query q is in q's rare list, so
-            # the union candidate set bounds every result doc: the
-            # other keys decode candidate-bearing blocks only (exact —
-            # a ride-along posting's doc is missing from its query's
-            # rare list and dies to the all-keys filter), and doc_lens
-            # for the whole batch come from one In-pushed scan instead
-            # of a corpus-scale doc_len join.
-            import collections
-
-            other_dec = decode_matched_rows_bmw(
-                _winner_rows(chunks, winners, other_keys, strict).withColumn("weight", F.lit(1)),
-                all_cands, float("inf"), collections.defaultdict(float),
-                n_docs=1 << 62, min_doc_len=1.0, davr=1.0,
-            )
-            rare_local = spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        "key": [r["key"] for r in rrows],
-                        "df": np.fromiter(
-                            (r["df"] for r in rrows), np.int64,
-                            count=len(rrows),
-                        ),
-                        "weight": np.ones(len(rrows), dtype=np.int32),
-                        "doc_id": np.fromiter(
-                            (r["doc_id"] for r in rrows), np.int64,
-                            count=len(rrows),
-                        ),
-                        "tf": np.fromiter(
-                            (r["tf"] for r in rrows), np.int64,
-                            count=len(rrows),
-                        ),
-                    }
-                ),
-                schema=_DECODED_SCHEMA,
-            )
-            decoded = rare_local.unionByName(other_dec)
-            dl_map = _doc_lens_for(docs, all_cands)
-            docs_join = spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        "doc_id": np.fromiter(
-                            dl_map.keys(), np.int64, count=len(dl_map)
-                        ),
-                        "doc_len": np.fromiter(
-                            dl_map.values(), np.float64, count=len(dl_map)
-                        ),
-                    }
-                ),
-                schema="doc_id long, doc_len double",
-            )
+        if and_candidates_engaged(winners, rare_keys):
+            decoded, cand = and_candidate_pass(chunks, winners, rare_keys, strict)
+            docs_join = _local_doc_lens(spark, _doc_lens_for(docs, cand))
 
     if decoded is None:
         # decode each matched row ONCE (weight=1 placeholder; the

@@ -22,13 +22,16 @@ Scale notes: the per-term chunk rows stay distributed (a stopword's
 chunks at 10^12 docs are GBs — never collected; driver metadata is
 O(#query terms) scalars); the docs join for doc_len shuffles on doc_id and
 benefits from bucketing the docs table by doc_id; stats is a broadcast
-scalar pair.  Conjunctive queries prune two-sidedly with the rarest
-term's doc range (the nextGEQ skip analog): whole chunks above the
-bound leave the plan, boundary chunks truncate blocks in the decoder;
-at scale (and_prune auto) the rarest list's decoded doc_ids become an
-explicit candidate set and every other list decodes candidate-bearing
-blocks ONLY (_try_candidate_and_decode — the distributed form of the
-local session's progressive intersection).
+scalar pair.  Conjunctive queries prune with the rarest term's doc
+range (the nextGEQ skip analog): whole chunks above the bound leave
+the plan, boundary chunks truncate blocks in the decoder.  When the
+rare list is small and the other lists are long (one rule,
+and_candidates_engaged, for single-query, batch and facet AND), the
+rare postings collect once and their doc_ids become an explicit
+candidate set: every other list decodes candidate-bearing blocks ONLY
+(and_candidate_pass + decode_candidate_blocks — the distributed form
+of the local session's progressive intersection), and the query
+finishes over local relations for the rare postings and doc_lens.
 Disjunctive queries get set-at-a-time block-max pruning
 (decode_matched_rows_bmw): light lists decode fully and seed theta (the
 k-th best partial score) plus the candidate set; heavy-list blocks
@@ -37,8 +40,8 @@ bound (plus the other heavy lists' full-list bounds) can still reach
 theta — the one-pass form of the driver-local session's adaptive BMW
 loop (local_query.py), on the same Ding & Suel (SIGIR 2011) idea.
 That rule is exact only while heavy contributions are non-negative;
-negative-IDF heavy lists (df > N/2) route through a sound
-candidate-only variant with a driver-side bound check and a full-decode
+negative-IDF heavy lists (df > N/2) route through the same
+candidate-only decoder with a driver-side bound check and a full-decode
 fallback (see _try_bmw_or_decode — the r4 soundness fix).
 Queries with no light/heavy mix, or with candidate volume beyond the
 driver bound, fall back to full decode — embarrassingly parallel over
@@ -107,16 +110,6 @@ BMW_CANDIDATE_LIMIT = 200_000
 # with scripts/bench_bmw.py on the target cluster — full history in
 # BENCH/SCALE.md.
 AUTO_OR_PRUNE_MIN_HEAVY_POSTINGS = 500_000_000
-# The conjunctive candidate path is cheaper than BMW (one rare-list
-# decode+collect, no scoring pass, no soundness-check job), so its
-# crossover comes earlier: measured deficit vs full decode was 1.86 s /
-# 1.66 s / 1.61 s at 100k / 300k / 1M docs and 0.0 s (parity) at 10M
-# (bench_bmw.py, same protocol) — hence 10M.  r6's faster full decode
-# moved the 30M point from a decisive win (6.95 vs 10.88 s) to parity
-# (7.8 vs 7.1 s, inside session noise); the rule stays — candidate
-# pruning never lost a measurement, and on remote storage its skipped
-# heavy blocks are skipped reads.
-AUTO_AND_PRUNE_MIN_DOCS = 10_000_000
 
 # Two-phase disjunctive I/O pruning (r7): the block-max keep rule is
 # evaluated per CHUNK against a payload-free metadata scan, and only
@@ -157,34 +150,19 @@ DOCLEN_PUSH_CAP = 1000
 # effective chunk size — underestimating chunk count only delays
 # engagement (never engages a hopeless prune).
 APPROX_CHUNK_POSTINGS = 1_000_000
-# Conjunctive facet counts (r8): when the rarest key bounds the match
-# set under the doc_len push cap AND the other keys' would-be-skipped
-# decode volume clears this floor, the whole match set computes
-# driver-side (rare list + candidate-only decode of the others) and
-# the facet table is read through a pushed doc_id In-list instead of a
-# corpus-scale scan + join.  Below the floor the two extra driver jobs
-# cost more than the full facet path (same overhead shape as the
-# other candidate paths; bench.py big_facet_counts is the measured
-# point: 54 MB rchar -> ~1 MB with the pushed read at 1M docs).
-FACET_AND_PRUNE_MIN_SKIPPABLE = 100_000
-FACET_AND_PRUNE_MIN_SKIPPABLE_CONF = "spark.iib.facetAndPruneMinSkippable"
-
-# Serving-config overrides (VERDICT r6 #3): the module constants above
-# are MEASURED floors for THIS box's decode generation and page-cache
-# storage; SCALE.md tells a cluster operator to recalibrate with
-# scripts/bench_bmw.py on the target cluster — these confs are the knob
-# that applies the recalibration WITHOUT editing the module.  Resolved
-# per query (RuntimeConfig), so a serving session can flip them live:
-#   spark.conf.set("spark.iib.autoOrPruneMinHeavyPostings", 2_000_000)
-OR_PRUNE_MIN_HEAVY_CONF = "spark.iib.autoOrPruneMinHeavyPostings"
-AND_PRUNE_MIN_DOCS_CONF = "spark.iib.autoAndPruneMinDocs"
-
-
-def _auto_floor(spark: SparkSession, conf_key: str, default: int) -> int:
-    """An auto-prune floor: the Spark conf override if set, else the
-    measured module constant."""
-    v = spark.conf.get(conf_key, None)
-    return default if v is None else int(v)
+# Conjunctive candidate pass (and_candidate_pass), one rule for the
+# single-query, batch and facet AND surfaces: engage when the rare
+# lists' postings fit the doc_len push cap AND the other keys' summed
+# df — the decode volume the pass can skip — reaches this floor.
+# Below it the pass's two extra driver jobs (rare-list collect,
+# candidate doc_len collect) cost more than the decode it skips.
+# Measured with scripts/bench_bmw.py (a ~300-df rare list + the
+# ~0.93-df stopword, and_prune forced vs and_full, warm, 4 cores):
+# forced loses by 0.3-0.5 s at 93k skippable postings, ties at 279k
+# (+0.05 / -0.04 s in two runs), and wins from 558k (-0.57 s) and 930k
+# (-0.08 / -0.30 s); the floor sits just above the last losing point.
+# Full table in BENCH/SCALE.md.
+AND_PRUNE_MIN_SKIPPABLE = 300_000
 
 
 def tokenize_query(query: str) -> list[str]:
@@ -535,6 +513,91 @@ def _chunk_ioprune_filter(
     return cond
 
 
+def _decode_kept_blocks(
+    matched: DataFrame,
+    cand_sorted: np.ndarray,
+    counters: dict | None,
+    ub_keep=None,
+) -> DataFrame:
+    """Shared block-selecting decoder: a block of a matched chunk row
+    decodes iff its doc range holds a candidate doc (``cand_sorted``)
+    or ``ub_keep(row, max_tf)`` marks it.  Without ``ub_keep`` only
+    candidate postings are emitted: a ride-along doc in a
+    candidate-bearing block would carry a partial score.
+
+    ``counters``: optional {"decoded": acc, "total": acc} Spark
+    accumulators for pruning instrumentation (tests assert decoded <<
+    total on a selective query against a planted stopword).
+    """
+    spark = matched.sparkSession
+    cand_bc = spark.sparkContext.broadcast(np.asarray(cand_sorted, np.int64))
+    acc_dec = counters.get("decoded") if counters else None
+    acc_tot = counters.get("total") if counters else None
+
+    def explode(batches):
+        cand = cand_bc.value
+        for pdf in batches:
+            for r in pdf.itertuples(index=False):
+                last = np.asarray(r.last_doc_ids, dtype=np.int64)
+                # block b covers (lo[b], last[b]]; block 0's exclusive
+                # lower bound is the chunk's first doc - 1
+                first_lo = int(r.first_doc_id) - 1
+                lo = np.concatenate(([first_lo], last[:-1]))
+                left = np.searchsorted(cand, lo + 1, side="left")
+                right = np.searchsorted(cand, last, side="right")
+                mask = right > left
+                if ub_keep is not None:
+                    mask |= ub_keep(r, np.asarray(r.max_tf, dtype=np.float64))
+                keep = np.flatnonzero(mask)
+                if acc_tot is not None:
+                    acc_tot.add(int(last.size))
+                if acc_dec is not None:
+                    acc_dec.add(int(keep.size))
+                if keep.size == 0:
+                    continue
+                docs, tfs = decode_blocks_selected(
+                    bytes(r.payload),
+                    last,
+                    np.asarray(r.block_bytes, dtype=np.int64),
+                    np.asarray(r.block_counts, dtype=np.int64),
+                    keep,
+                    # sharded serving: block 0's chain base is the
+                    # shard's id offset (see decode_matched_rows);
+                    # blocks >0 re-base from the REBASED last_doc_ids
+                    prev_doc_id=int(getattr(r, "id_offset", 0)),
+                )
+                if ub_keep is None and docs.size:
+                    # sorted-membership filter: candidate docs only
+                    pos = np.searchsorted(cand, docs)
+                    pos[pos == cand.size] = 0
+                    sel = cand[pos] == docs
+                    docs, tfs = docs[sel], tfs[sel]
+                if not docs.size:
+                    continue
+                yield pd.DataFrame(
+                    {
+                        "key": np.repeat(r.key, docs.size),
+                        "df": np.full(docs.size, int(r.term_df), dtype=np.int64),
+                        "weight": np.full(docs.size, int(r.weight), dtype=np.int32),
+                        "doc_id": docs,
+                        "tf": tfs,
+                    }
+                )
+
+    return matched.mapInPandas(explode, schema=_DECODED_SCHEMA)
+
+
+def decode_candidate_blocks(
+    matched: DataFrame, cand_sorted: np.ndarray, counters: dict | None = None
+) -> DataFrame:
+    """Candidate-only decode — the set-at-a-time form of the
+    reference's nextGEQ skip (query.c:120-300): only blocks whose doc
+    range holds a candidate doc decode, and only candidate postings are
+    emitted.  Every block that holds a candidate decodes, so each
+    candidate's postings are complete and its score exact."""
+    return _decode_kept_blocks(matched, cand_sorted, counters)
+
+
 def decode_matched_rows_bmw(
     matched: DataFrame,
     cand_sorted: np.ndarray,
@@ -544,7 +607,6 @@ def decode_matched_rows_bmw(
     min_doc_len: float,
     davr: float,
     counters: dict | None = None,
-    cand_only: bool = False,
 ) -> DataFrame:
     """Heavy-list decode with distributed block-max (BMW-style) pruning
     — the set-at-a-time analog of local_query._disjunctive, using the
@@ -566,148 +628,121 @@ def decode_matched_rows_bmw(
     — a lower bound of the k-th best final score, again because heavy
     contributions cannot subtract.  For NEGATIVE-IDF heavy lists both
     halves of that argument invert (partial scores OVERestimate); the
-    caller handles them with ``cand_only=True`` — emit postings for
-    candidate docs ONLY (ride-alongs in candidate-bearing blocks are
-    dropped in-decoder, so every emitted doc is scored exactly) —
-    plus a driver-side bound check (see _try_bmw_or_decode).
-
-    ``counters``: optional {"decoded": acc, "total": acc} Spark
-    accumulators for pruning instrumentation (tests assert decoded <<
-    total on a selective query against a planted stopword).
+    caller decodes them with :func:`decode_candidate_blocks` plus a
+    driver-side bound check (see _try_bmw_or_decode).
     """
-    spark = matched.sparkSession
-    cand_bc = spark.sparkContext.broadcast(np.asarray(cand_sorted, np.int64))
-    acc_dec = counters.get("decoded") if counters else None
-    acc_tot = counters.get("total") if counters else None
+    k1_lenorm = BM25_K1 * ((1.0 - BM25_B) + BM25_B * min_doc_len / davr)
 
-    def explode(batches):
-        cand = cand_bc.value
-        for pdf in batches:
-            for r in pdf.itertuples(index=False):
-                last = np.asarray(r.last_doc_ids, dtype=np.int64)
-                mt = np.asarray(r.max_tf, dtype=np.float64)
-                df_score = int(r.term_df)
-                w = int(r.weight)
-                t_idf = float(_idf(df_score, n_docs))
-                if t_idf <= 0:
-                    ub = np.zeros(mt.size)
-                else:
-                    denom = (
-                        BM25_K1 * ((1.0 - BM25_B) + BM25_B * min_doc_len / davr)
-                        + mt
-                    )
-                    ub = w * t_idf * (BM25_K1 + 1.0) * mt / denom
-                keep_ub = ub >= (theta - others_ub[r.key])
-                # block b covers (lo[b], last[b]]; block 0's exclusive
-                # lower bound is the chunk's first doc - 1
-                first_lo = int(r.first_doc_id) - 1
-                lo = np.concatenate(([first_lo], last[:-1]))
-                left = np.searchsorted(cand, lo + 1, side="left")
-                right = np.searchsorted(cand, last, side="right")
-                keep = np.flatnonzero(keep_ub | (right > left))
-                if acc_tot is not None:
-                    acc_tot.add(int(last.size))
-                if acc_dec is not None:
-                    acc_dec.add(int(keep.size))
-                if keep.size == 0:
-                    continue
-                docs, tfs = decode_blocks_selected(
-                    bytes(r.payload),
-                    last,
-                    np.asarray(r.block_bytes, dtype=np.int64),
-                    np.asarray(r.block_counts, dtype=np.int64),
-                    keep,
-                    # sharded serving: block 0's chain base is the
-                    # shard's id offset (see decode_matched_rows);
-                    # blocks >0 re-base from the REBASED last_doc_ids
-                    prev_doc_id=int(getattr(r, "id_offset", 0)),
-                )
-                if cand_only and docs.size:
-                    # sorted-membership filter: keep candidate docs
-                    # only (ride-alongs must not emit partial scores)
-                    pos = np.searchsorted(cand, docs)
-                    pos[pos == cand.size] = 0
-                    sel = cand[pos] == docs
-                    docs, tfs = docs[sel], tfs[sel]
-                if not docs.size:
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "key": np.repeat(r.key, docs.size),
-                        "df": np.full(docs.size, df_score, dtype=np.int64),
-                        "weight": np.full(docs.size, w, dtype=np.int32),
-                        "doc_id": docs,
-                        "tf": tfs,
-                    }
-                )
+    def ub_keep(r, mt):
+        t_idf = float(_idf(int(r.term_df), n_docs))
+        if t_idf <= 0:
+            ub = np.zeros(mt.size)
+        else:
+            ub = int(r.weight) * t_idf * (BM25_K1 + 1.0) * mt / (k1_lenorm + mt)
+        return ub >= (theta - others_ub[r.key])
 
-    return matched.mapInPandas(explode, schema=_DECODED_SCHEMA)
+    return _decode_kept_blocks(matched, cand_sorted, counters, ub_keep)
 
 
-def _try_candidate_and_decode(
-    rows_for,
-    all_keys: list[str],
-    rare_key: str,
-    rare_df: int,
-    cand_limit: int,
-    counters: dict | None,
-) -> DataFrame | None:
-    """Conjunctive candidate-block pruning — the distributed form of
-    local_query._conjunctive's progressive intersection: the rarest
-    list decodes fully and its doc_ids become the candidate set; every
-    OTHER list then decodes only blocks whose doc range holds >= 1
-    candidate (any AND result doc is in the rarest list, and all its
-    postings in other lists live in candidate-overlapping blocks, so
-    this is exact — non-candidate docs that ride along in boundary
-    blocks are dropped by the all-keys-present filter).
+def _local_postings(spark: SparkSession, rows: list) -> DataFrame:
+    """Collected decoded-posting rows (key, df, weight, doc_id, tf) as a
+    local relation, so a plan that finishes over them re-reads no
+    chunk."""
+    n = len(rows)
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "key": [r["key"] for r in rows],
+                "df": np.fromiter((r["df"] for r in rows), np.int64, count=n),
+                "weight": np.fromiter(
+                    (r["weight"] for r in rows), np.int32, count=n
+                ),
+                "doc_id": np.fromiter(
+                    (r["doc_id"] for r in rows), np.int64, count=n
+                ),
+                "tf": np.fromiter((r["tf"] for r in rows), np.int64, count=n),
+            }
+        ),
+        schema=_DECODED_SCHEMA,
+    )
 
-    Returns ``(decoded, cand)`` — the pruned decoded frame plus the
-    sorted candidate doc_ids — or None (caller falls back to the
-    doc-range-bounded full decode) when the rarest list exceeds the
-    driver candidate bound.  Callers may narrow the scoring join's docs
-    frame to ``cand``: every AND result doc is in the rarest list by
-    definition, and a ride-along (non-candidate) row can never pass the
-    all-keys-present filter, so dropping its doc_len row from the join
-    is exact (r7 — turns the corpus-scale doc_len pass into a
-    doc_id-pushed row-group read when candidates are few).  Costs one
-    extra small job (the rare-list decode + O(rare_df) doc_id collect);
-    worth it exactly where a query pairs a selective term with a
-    stopword whose blocks would otherwise all decode — at 10^12 docs
-    that is ~10^10 skipped blocks.
 
-    ``rows_for(keys)``: factory returning matched rows whose SCAN
-    predicate covers only ``keys`` — a plain filter on the shared
-    matched frame keeps every query term's range in the pushed filter,
-    so the rare-list job would read (and discard) the heavy terms'
-    payload bytes; at 10M docs that unpushed read measured 2x the whole
-    full-decode query (BENCH/SCALE.md r4).
+def _local_doc_lens(spark: SparkSession, dl_map: dict[int, float]) -> DataFrame:
+    """A :func:`_doc_lens_for` map as a (doc_id, doc_len) local relation.
+    doc_len is a double holding exactly the source values: the scorer
+    casts a long doc_len to double anyway, so scores are bit-identical."""
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "doc_id": np.fromiter(dl_map.keys(), np.int64, count=len(dl_map)),
+                "doc_len": np.fromiter(
+                    dl_map.values(), np.float64, count=len(dl_map)
+                ),
+            }
+        ),
+        schema="doc_id long, doc_len double",
+    )
+
+
+def and_candidates_engaged(
+    winners: dict, rare_keys: list[str], force: bool = False
+) -> bool:
+    """The one engagement rule of :func:`and_candidate_pass`, for every
+    AND surface: the rare lists' postings (the candidate bound) fit
+    DOCLEN_PUSH_CAP, and the other keys' summed df reaches
+    AND_PRUNE_MIN_SKIPPABLE.  ``force`` skips the floor, never the
+    cap: the pass collects the rare postings to the driver."""
+    cand_total = sum(winners[k]["term_df"] for k in rare_keys)
+    skippable = sum(
+        w["term_df"] for k, w in winners.items() if k not in rare_keys
+    )
+    return cand_total <= DOCLEN_PUSH_CAP and (
+        force or skippable >= AND_PRUNE_MIN_SKIPPABLE
+    )
+
+
+def and_candidate_pass(
+    chunks: DataFrame,
+    winners: dict,
+    rare_keys: list[str],
+    strict: bool,
+    counters: dict | None = None,
+) -> tuple[DataFrame, np.ndarray]:
+    """Conjunctive candidate pass — the distributed form of
+    local_query._conjunctive's progressive intersection, for a batch of
+    queries (``rare_keys``: each query's rarest key; a single query or
+    a facet count is a batch of one).
+
+    The rare lists decode fully, once, and their postings (at most
+    DOCLEN_PUSH_CAP rows, see :func:`and_candidates_engaged`) collect
+    to the driver; their doc_ids are the candidates.  Every other key
+    of ``winners`` decodes only candidate-bearing blocks
+    (:func:`decode_candidate_blocks`), and chunks past the last
+    candidate leave its scan.  Exact: every AND result doc of a query
+    is in that query's rare list, and all its postings in other lists
+    live in candidate-bearing blocks.
+
+    Returns ``(decoded, cand)``: decoded postings — the rare ones as a
+    local relation, so the caller's final plan scans only the other
+    keys' chunks — and the sorted candidate doc_ids, a bound on every
+    result doc (callers read doc_lens or facets for those ids only).
     """
-    if rare_df > cand_limit:
-        return None
-    rare_rows = rows_for([rare_key])
-    other_rows = rows_for([k for k in all_keys if k != rare_key])
-    cand = np.sort(
-        np.array(
-            [
-                r["doc_id"]
-                for r in decode_matched_rows(rare_rows)
-                .select("doc_id")
-                .collect()
-            ],
-            dtype=np.int64,
+    rows = decode_matched_rows(
+        _winner_rows(chunks, winners, rare_keys, strict)
+    ).collect()
+    cand = np.unique(
+        np.fromiter((r["doc_id"] for r in rows), np.int64, count=len(rows))
+    )
+    decoded = _local_postings(chunks.sparkSession, rows)
+    others = [k for k in winners if k not in rare_keys]
+    if others and cand.size:
+        other_rows = _winner_rows(chunks, winners, others, strict).filter(
+            F.col("first_doc_id") <= F.lit(int(cand[-1]))
         )
-    )
-    if cand.size == 0:
-        return decode_matched_rows(rare_rows.limit(0)), cand
-    # theta=+inf with zero ub headroom degenerates the BMW keep rule to
-    # candidate-overlap only — the shared decoder does the block skips
-    import collections
-
-    other_dec = decode_matched_rows_bmw(
-        other_rows, cand, float("inf"), collections.defaultdict(float),
-        n_docs=1 << 62, min_doc_len=1.0, davr=1.0, counters=counters,
-    )
-    return decode_matched_rows(rare_rows).unionByName(other_dec), cand
+        decoded = decoded.unionByName(
+            decode_candidate_blocks(other_rows, cand, counters)
+        )
+    return decoded, cand
 
 
 def _try_bmw_or_decode(
@@ -741,9 +776,9 @@ def _try_bmw_or_decode(
       lesson);
     - fewer than k light candidates (theta would be -inf).
 
-    ``rows_for(keys)``: scan-pushed row factory (see
-    _try_candidate_and_decode) — so the light pass never reads the
-    heavy terms' payload bytes just to discard them.
+    ``rows_for(keys)``: scan-pushed row factory (see :func:`_winner_rows`)
+    — so the light pass never reads the heavy terms' payload bytes just
+    to discard them.
 
     ``ioprune(heavy_keys, theta, cand_sorted, others_ub, cand_only)``:
     chunk-granule scan-prune factory; returns a pushable Column over
@@ -819,11 +854,7 @@ def _try_bmw_or_decode(
                        {m["key"]: 0.0 for m in heavy}, True)
         if pred is not None:
             heavy_rows = heavy_rows.filter(pred)
-        heavy_cand = decode_matched_rows_bmw(
-            heavy_rows, cand_sorted, float("inf"),
-            {m["key"]: 0.0 for m in heavy},
-            n_docs, min_doc_len, davr, counters=counters, cand_only=True,
-        )
+        heavy_cand = decode_candidate_blocks(heavy_rows, cand_sorted, counters)
         # bound check driver-side: heavy_cand is candidate-only, so its
         # docs all sit in dl_map already — no docs pass at all (r7)
         hrows = heavy_cand.select(
@@ -859,47 +890,8 @@ def _try_bmw_or_decode(
         # inner-join parity.  Saves 2 jobs + one candidate-scan read
         # per pruned query; at 1M docs the forced-BMW entry's fixed
         # overhead is mostly these jobs.
-        dec_pdf = pd.DataFrame(
-            {
-                "key": [r["key"] for r in lrows] + [r["key"] for r in hrows],
-                "df": np.fromiter(
-                    (r["df"] for r in lrows + hrows), np.int64,
-                    count=len(lrows) + len(hrows),
-                ),
-                "weight": np.fromiter(
-                    (r["weight"] for r in lrows + hrows), np.int32,
-                    count=len(lrows) + len(hrows),
-                ),
-                "doc_id": np.fromiter(
-                    (r["doc_id"] for r in lrows + hrows), np.int64,
-                    count=len(lrows) + len(hrows),
-                ),
-                "tf": np.fromiter(
-                    (r["tf"] for r in lrows + hrows), np.int64,
-                    count=len(lrows) + len(hrows),
-                ),
-            }
-        )
-        decoded = F.broadcast(
-            spark.createDataFrame(dec_pdf, schema=_DECODED_SCHEMA)
-        )
-        docs_narrow = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "doc_id": np.fromiter(
-                        dl_map.keys(), np.int64, count=len(dl_map)
-                    ),
-                    # double, holding exactly the source values: the
-                    # scorer casts a long doc_len to double anyway, so
-                    # the computed scores are bit-identical
-                    "doc_len": np.fromiter(
-                        dl_map.values(), np.float64, count=len(dl_map)
-                    ),
-                }
-            ),
-            schema="doc_id long, doc_len double",
-        )
-        return decoded, docs_narrow
+        decoded = F.broadcast(_local_postings(spark, lrows + hrows))
+        return decoded, _local_doc_lens(spark, dl_map)
 
     total_ub = sum(full_ubs.values())
     others_ub = {key: total_ub - ub for key, ub in full_ubs.items()}
@@ -1062,9 +1054,10 @@ def topk_bm25_chunked(
     boundary; ranking on rounded scores with a doc_id tiebreak cannot).
     ``or_prune`` / ``and_prune``: exact disjunctive block-max and
     conjunctive candidate pruning (see decode_matched_rows_bmw and
-    _try_candidate_and_decode); "auto" engages them above the measured
-    crossovers, and every path falls back to full decode when pruning
-    cannot help.
+    and_candidate_pass); "auto" engages them above the measured
+    crossovers (and_candidates_engaged is the AND rule; True skips its
+    floor, never its cap), and every path falls back to full decode
+    when pruning cannot help.
 
     ``exclude``: NOT-terms — docs containing ANY of them leave the
     result (the boolean surface the reference lacks; applied as an
@@ -1079,8 +1072,7 @@ def topk_bm25_chunked(
 
     ``docs_shards``: sharded serving only (operators/sharding.py) — a
     list of ``(raw_shard_docs, id_offset, shard_n_docs)`` so the
-    bounded doc_id In-list reads (_doc_lens_for, the candidate-narrowed
-    scoring join) rebase per shard and stay parquet-pushed on the
+    bounded doc_id In-list reads (_doc_lens_for) rebase per shard and stay parquet-pushed on the
     physical doc_id column; the ``docs`` frame itself is then the
     shards' rebased union and serves only the corpus-scale join path.
     """
@@ -1121,9 +1113,7 @@ def topk_bm25_chunked(
             # heavy_df terms are decoded as light lists)
             if w["term_df"] > heavy_df
         )
-        or_prune = skippable >= _auto_floor(
-            spark, OR_PRUNE_MIN_HEAVY_CONF, AUTO_OR_PRUNE_MIN_HEAVY_POSTINGS
-        )
+        or_prune = skippable >= AUTO_OR_PRUNE_MIN_HEAVY_POSTINGS
         if not or_prune:
             # r7 rare-candidate rule: the decode-volume floor above
             # prices only skipped DECODE; the scan prune skips READS,
@@ -1145,10 +1135,6 @@ def topk_bm25_chunked(
                 0 < light_sum <= DOCLEN_PUSH_CAP
                 and est_chunks >= 2 * light_sum
             )
-    if and_prune == "auto":
-        and_prune = n_docs >= _auto_floor(
-            spark, AND_PRUNE_MIN_DOCS_CONF, AUTO_AND_PRUNE_MIN_DOCS
-        )
 
     # all pruning metadata below comes from the winners dict the
     # lookup already collected — NO further aggregate jobs / chunk
@@ -1166,42 +1152,21 @@ def topk_bm25_chunked(
         rare_key, rare = min(
             winners.items(), key=lambda kv: kv[1]["term_df"]
         )
-        if rare["term_df"] <= prune_collect_limit:
-            max_doc = rare["last_doc"]
-        if max_doc is not None:
+        if and_prune and and_candidates_engaged(
+            winners, [rare_key], force=and_prune is True
+        ):
+            decoded, cand = and_candidate_pass(
+                chunks, winners, [rare_key], strict, counters
+            )
+            # result docs ⊆ candidates: their doc_lens become a local
+            # relation too (a ride-along cannot pass the all-keys filter)
+            docs = _local_doc_lens(spark, _doc_lens_for(docs, cand, narrow))
+        elif rare["term_df"] <= prune_collect_limit:
             # chunks wholly above the rarest term's doc range never
             # even enter the decode stage (task-level pruning; block-
             # level pruning inside boundary chunks happens in decode)
+            max_doc = rare["last_doc"]
             matched = matched.filter(F.col("first_doc_id") <= F.lit(max_doc))
-        if and_prune and n_keys > 1:
-            # the rows_for frames get the same doc-range chunk pruning
-            # the shared matched frame has (pushed into their scans)
-            rf = rows_for
-            if max_doc is not None:
-                bound = max_doc
-
-                def rf(keys, _b=bound):
-                    return rows_for(keys).filter(
-                        F.col("first_doc_id") <= F.lit(_b)
-                    )
-
-            res = _try_candidate_and_decode(
-                rf, list(winners), rare_key, rare["term_df"],
-                cand_limit, counters,
-            )
-            if res is not None:
-                decoded, cand = res
-                if 0 < cand.size <= DOCLEN_PUSH_CAP:
-                    # exact (see _try_candidate_and_decode): result
-                    # docs ⊆ candidates, ride-alongs can't pass the
-                    # all-keys filter — narrow the doc_len scan
-                    docs = (
-                        narrow(cand)
-                        if narrow is not None
-                        else docs.filter(
-                            F.col("doc_id").isin([int(x) for x in cand])
-                        )
-                    )
     elif mode == "or" and or_prune:
         meta = [
             {"key": k, "df": w["term_df"], "weight": w["weight"],
@@ -1316,7 +1281,10 @@ def facet_counts(
     (count(*) == count_distinct(key): (key, doc_id) is unique per the
     _score_topk argument); the facet join shuffles only matched ids
     against the facet table; the final groupBy map-side-combines to
-    #distinct facet values.  No payload ever reaches the driver.
+    #distinct facet values.  No payload ever reaches the driver.  An
+    AND whose rare list is small (and_candidates_engaged) takes the
+    conjunctive candidate pass, and the facet read pushes the
+    candidate ids into its scan.
     """
     if mode not in ("and", "or"):
         # before any lookup/action: an invalid mode must not cost a job
@@ -1329,66 +1297,19 @@ def facet_counts(
             "n_docs", F.lit(0).cast("long")
         )
 
-    def _ordered(out: DataFrame) -> DataFrame:
-        out = out.orderBy(
-            F.col("n_docs").desc(), *[F.col(c).asc() for c in facet_cols]
-        )
-        return out.limit(top) if top is not None else out
-
-    if mode == "and" and exclude_doc_ids is None:
-        # r8 conjunctive candidate path: the match set is bounded by
-        # the rarest key's list.  Decode it fully, candidate-only
-        # decode the other keys (ride-alongs dropped in-decoder), and
-        # intersect DRIVER-side — every term of that work is
-        # O(candidates).  The facet read then pushes the matched ids
-        # into the scan (docs files are doc_id-contiguous by
-        # construction), replacing the corpus-scale facet scan + join.
-        rare_key, rare = min(winners.items(), key=lambda kv: kv[1]["term_df"])
-        skippable = sum(
-            w["term_df"] for k, w in winners.items() if k != rare_key
-        )
-        floor = spark.conf.get(FACET_AND_PRUNE_MIN_SKIPPABLE_CONF, None)
-        floor = FACET_AND_PRUNE_MIN_SKIPPABLE if floor is None else int(floor)
-        if rare["term_df"] <= DOCLEN_PUSH_CAP and skippable >= floor:
-            rare_rows = _winner_rows(chunks, winners, [rare_key], strict)
-            cand = np.sort(
-                np.array(
-                    [
-                        r["doc_id"]
-                        for r in decode_matched_rows(rare_rows)
-                        .select("doc_id")
-                        .collect()
-                    ],
-                    dtype=np.int64,
-                )
+    decoded = None
+    if mode == "and":
+        rare_key = min(winners, key=lambda k: winners[k]["term_df"])
+        if and_candidates_engaged(winners, [rare_key]):
+            decoded, cand = and_candidate_pass(chunks, winners, [rare_key], strict)
+            # the match set is a subset of the candidates: push them
+            # into the facet scan (docs files are doc_id-contiguous by
+            # construction) instead of a corpus-scale facet scan
+            facet_side = facet_side.filter(
+                F.col("doc_id").isin([int(x) for x in cand])
             )
-            counts = {int(d): 1 for d in cand}
-            if n_keys > 1:
-                import collections
-
-                others = decode_matched_rows_bmw(
-                    _winner_rows(
-                        chunks, winners,
-                        [k for k in winners if k != rare_key], strict,
-                    ),
-                    cand, float("inf"), collections.defaultdict(float),
-                    n_docs=1 << 62, min_doc_len=1.0, davr=1.0,
-                    cand_only=True,
-                )
-                for r in others.select("doc_id").collect():
-                    counts[r["doc_id"]] = counts.get(r["doc_id"], 0) + 1
-            match = [d for d, c in counts.items() if c == n_keys]
-            if not match:
-                return facet_side.drop("doc_id").limit(0).withColumn(
-                    "n_docs", F.lit(0).cast("long")
-                )
-            return _ordered(
-                facet_side.filter(F.col("doc_id").isin(match))
-                .groupBy(*facet_cols)
-                .agg(F.count("*").cast("long").alias("n_docs"))
-            )
-
-    decoded = decode_matched_rows(matched)
+    if decoded is None:
+        decoded = decode_matched_rows(matched)
     if mode == "and":
         match_ids = (
             decoded.groupBy("doc_id")
@@ -1408,8 +1329,10 @@ def facet_counts(
         # streams through a hash join instead of shuffling (r8)
         if min(w["term_df"] for w in winners.values()) <= 1_000_000:
             match_ids = F.broadcast(match_ids)
-    return _ordered(
+    out = (
         match_ids.join(facet_side, "doc_id")
         .groupBy(*facet_cols)
         .agg(F.count("*").cast("long").alias("n_docs"))
+        .orderBy(F.col("n_docs").desc(), *[F.col(c).asc() for c in facet_cols])
     )
+    return out.limit(top) if top is not None else out

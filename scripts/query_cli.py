@@ -57,13 +57,12 @@ def main() -> int:
                          "local_query.facet_counts_local)")
     ap.add_argument("--explain", action="store_true",
                     help="with --spark: print a JSON line of pruning "
-                         "evidence to stderr after each query — blocks "
-                         "decoded vs total on the pruned paths (Spark "
-                         "accumulators) plus the effective or/and prune "
-                         "decisions the auto thresholds made")
+                         "evidence to stderr after each query — whether "
+                         "a block-pruning decoder ran, and its blocks "
+                         "decoded vs total (Spark accumulators)")
     ap.add_argument("--force-prune", action="store_true",
                     help="with --explain: force or_prune/and_prune on "
-                         "below the auto threshold (measurement aid)")
+                         "below the auto floors (measurement aid)")
     ap.add_argument("--snippets-from", metavar="DOCS_SRC_PARQUET",
                     help="also print a best-window snippet per result, "
                          "re-reading content from the source table "
@@ -345,28 +344,6 @@ def _spark_runner(args):
         if counters is not None:
             import json as _json
 
-            from invertedindexbuilder_spark.operators.query_exec import (
-                AND_PRUNE_MIN_DOCS_CONF,
-                AUTO_AND_PRUNE_MIN_DOCS,
-                AUTO_OR_PRUNE_MIN_HEAVY_POSTINGS,
-                OR_PRUNE_MIN_HEAVY_CONF,
-                _auto_floor,
-            )
-
-            # AND auto keys on corpus size; OR auto keys on the
-            # query's summed heavy-list dfs (r5 posting-volume rule) —
-            # prune_engaged below is the ground truth of what ran.
-            # Floors resolve through the serving conf so the report
-            # shows what the session actually decided with
-            thr = (
-                _auto_floor(spark, AND_PRUNE_MIN_DOCS_CONF,
-                            AUTO_AND_PRUNE_MIN_DOCS)
-                if mode == "and"
-                else _auto_floor(spark, OR_PRUNE_MIN_HEAVY_CONF,
-                                 AUTO_OR_PRUNE_MIN_HEAVY_POSTINGS)
-            )
-            auto_on = (int(stats["n_docs"]) >= thr if mode == "and"
-                       else int(counters["total"].value) > 0)
             total = int(counters["total"].value)
             decoded = int(counters["decoded"].value)
             print(
@@ -378,10 +355,6 @@ def _spark_runner(args):
                         "blocks_total": total,
                         "blocks_decoded": decoded,
                         "blocks_skipped": total - decoded,
-                        "auto_prune_on": bool(auto_on or args.force_prune),
-                        "auto_rule": ("n_docs >= threshold" if mode == "and"
-                                      else "sum(heavy dfs) >= threshold"),
-                        "auto_threshold": thr,
                         "n_docs": int(stats["n_docs"]),
                         "ms": round(dt, 1),
                     }

@@ -8,6 +8,7 @@ reference BM25 spec (query.c:80-86) for query goldens.
 from __future__ import annotations
 
 import collections
+import math
 
 import numpy as np
 import pandas as pd
@@ -32,7 +33,12 @@ class CorpusOracle:
             for t, tf in collections.Counter(tokenize_text(r.content)).items():
                 self.postings[t][r.doc_id] = tf
         self.n_docs = len(pdf)
-        self.d_avr = float(pdf.doc_len.sum()) / (self.n_docs - 1)
+        # sum / (N - 1), a double division: +inf for a one-doc corpus
+        self.d_avr = (
+            float(pdf.doc_len.sum()) / (self.n_docs - 1)
+            if self.n_docs > 1
+            else math.inf
+        )
 
     def postings_table(self) -> pd.DataFrame:
         rows = [

@@ -370,49 +370,3 @@ def test_or_auto_rule_keys_on_heavy_posting_volume(spark, env, monkeypatch):
     off = run(acc2)
     assert acc2["total"].value == 0, "volume below threshold must full-decode"
     assert _key(engaged) == _key(off)
-
-
-def test_or_auto_floor_overridable_via_spark_conf(spark, env):
-    """VERDICT r6 #3: the auto-prune floors are measured constants for
-    THIS box's decode generation; a cluster operator applying a
-    bench_bmw.py recalibration sets them through Spark conf instead of
-    editing the module.  Same flip as the monkeypatch test above, but
-    through spark.iib.autoOrPruneMinHeavyPostings."""
-    from invertedindexbuilder_spark.operators.query_exec import (
-        OR_PRUNE_MIN_HEAVY_CONF,
-    )
-
-    def run(counters):
-        return topk_bm25_chunked(
-            spark, env["chunks"], env["docs"], env["stats"],
-            "rareone common", mode="or", k=10, round_digits=6,
-            or_prune="auto", counters=counters,
-        ).collect()
-
-    try:
-        acc = {
-            "decoded": spark.sparkContext.accumulator(0),
-            "total": spark.sparkContext.accumulator(0),
-        }
-        spark.conf.set(OR_PRUNE_MIN_HEAVY_CONF, "5000")
-        engaged = run(acc)
-        assert acc["total"].value > 0, "conf floor below volume must engage BMW"
-
-        acc2 = {
-            "decoded": spark.sparkContext.accumulator(0),
-            "total": spark.sparkContext.accumulator(0),
-        }
-        spark.conf.set(OR_PRUNE_MIN_HEAVY_CONF, "50000")
-        off = run(acc2)
-        assert acc2["total"].value == 0, "conf floor above volume must full-decode"
-        assert _key(engaged) == _key(off)
-    finally:
-        spark.conf.unset(OR_PRUNE_MIN_HEAVY_CONF)
-
-    # unset -> back to the (huge) module default: stays off
-    acc3 = {
-        "decoded": spark.sparkContext.accumulator(0),
-        "total": spark.sparkContext.accumulator(0),
-    }
-    run(acc3)
-    assert acc3["total"].value == 0

@@ -192,38 +192,42 @@ def test_local_facets_match_spark_surface(spark, built_root, query, mode):
     assert facet_counts_local(li, query, ["repo"], mode=mode) == want_t
 
 
-def test_and_candidate_path_forced_equals_unpruned(spark, env):
-    """r8 driver-side conjunctive facet path: with the skippable floor
-    forced to 0 the candidate route must engage on the chunked layout
+def test_and_candidate_path_forced_equals_unpruned(spark, env, monkeypatch):
+    """Conjunctive candidate facet path: with the skippable floor
+    forced to 0 the candidate pass must engage on the chunked layout
     and produce counts identical to the unpruned path and the brute
     expectation."""
-    from invertedindexbuilder_spark.operators.query_exec import (
-        FACET_AND_PRUNE_MIN_SKIPPABLE_CONF,
-    )
+    from invertedindexbuilder_spark.operators import query_exec as qe
+
+    calls = []
+    real = qe.and_candidate_pass
+
+    def spy(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
 
     want = _expect([d for d in range(90) if d % 6 == 0])
-    spark.conf.set(FACET_AND_PRUNE_MIN_SKIPPABLE_CONF, "0")
-    try:
-        pruned = facet_counts(
-            spark, env["chunks"], env["facets"], "data join",
-            ["lang", "source"], mode="and",
-        )
-        assert _got(pruned) == want
-        rows = pruned.collect()
-        keys = [(-r["n_docs"], r["lang"], r["source"]) for r in rows]
-        assert keys == sorted(keys)
-        # single-key query through the engaged path
-        single = facet_counts(
-            spark, env["chunks"], env["facets"], "join", ["lang"], mode="and",
-        )
-        assert _got(single, n_cols=1) == {
-            (k,): v
-            for (k,), v in _expect(
-                [d for d in range(90) if d % 3 == 0], cols=("lang",)
-            ).items()
-        }
-    finally:
-        spark.conf.unset(FACET_AND_PRUNE_MIN_SKIPPABLE_CONF)
+    monkeypatch.setattr(qe, "and_candidate_pass", spy)
+    monkeypatch.setattr(qe, "AND_PRUNE_MIN_SKIPPABLE", 0)
+    pruned = facet_counts(
+        spark, env["chunks"], env["facets"], "data join",
+        ["lang", "source"], mode="and",
+    )
+    assert _got(pruned) == want
+    rows = pruned.collect()
+    keys = [(-r["n_docs"], r["lang"], r["source"]) for r in rows]
+    assert keys == sorted(keys)
+    # single-key query through the engaged path
+    single = facet_counts(
+        spark, env["chunks"], env["facets"], "join", ["lang"], mode="and",
+    )
+    assert _got(single, n_cols=1) == {
+        (k,): v
+        for (k,), v in _expect(
+            [d for d in range(90) if d % 3 == 0], cols=("lang",)
+        ).items()
+    }
+    assert len(calls) == 2, "forced floor must engage the candidate pass"
 
 
 @pytest.mark.parametrize("mode", ["and", "or"])

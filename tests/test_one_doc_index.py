@@ -82,3 +82,54 @@ def test_one_doc_index_answers_on_every_surface(spark, one_doc, mode):
     for got in (local, dist, batch):
         assert [d for d, _ in got] == [0]
         assert got[0][1] == pytest.approx(want, rel=1e-12)
+
+
+def test_one_doc_index_engaged_and_candidate_pass(spark, one_doc, monkeypatch):
+    """N = 1 through the conjunctive candidate pass: single-query,
+    batch and facet AND equal their unpruned runs and the spec oracle."""
+    from invertedindexbuilder_spark.operators import query_exec as qe
+    from invertedindexbuilder_spark.operators.query_exec import facet_counts
+
+    from tests.oracle_util import CorpusOracle
+    from tests.test_and_candidate_pass import engaged_spy
+
+    stats = load_stats(spark, one_doc)
+    cat = Catalog(spark, one_doc)
+    chunks = cat.read("index_chunks")
+    docs = cat.read("docs")
+    qdf = spark.createDataFrame([(0, QUERY)], "query_id long, text string")
+
+    def run(and_prune):
+        dist = [
+            (r["doc_id"], r["score"])
+            for r in topk_bm25_chunked(
+                spark, chunks, docs, stats, QUERY, mode="and", k=10,
+                and_prune=and_prune,
+            ).collect()
+        ]
+        batch = [
+            (r["doc_id"], r["score"])
+            for r in topk_bm25_batch(
+                spark, chunks, docs, stats, qdf, mode="and", k=10
+            ).collect()
+        ]
+        facets = [
+            (r["repo"], r["n_docs"])
+            for r in facet_counts(
+                spark, chunks, docs, QUERY, ["repo"], mode="and"
+            ).collect()
+        ]
+        return dist, batch, facets
+
+    full = run(False)
+    calls = engaged_spy(monkeypatch)
+    engaged = run(True)
+    assert len(calls) == 3, "every surface must take the candidate pass"
+
+    oracle = CorpusOracle(1)
+    want = oracle.topk(qe.tokenize_query(QUERY), "and", 10)
+    assert [d for d, _ in want] == [0]
+    for got in (*full[:2], *engaged[:2]):
+        assert [d for d, _ in got] == [0]
+        assert got[0][1] == pytest.approx(want[0][1], rel=1e-12)
+    assert engaged[2] == full[2] == [(oracle.pdf.repo.iloc[0], 1)]

@@ -64,6 +64,32 @@ def test_chunk_lookup_single_payload_scan(tables):
     assert "PushedFilters" in plan and "GreaterThanOrEqual(term," in plan
 
 
+def test_engaged_and_scans_rare_list_once(spark, tables):
+    """The conjunctive candidate pass collects the rare list's postings
+    once: the final plan of an engaged single-query AND scans the chunk
+    table only for the other term, and the rare postings (and the
+    candidates' doc_lens) arrive as local relations."""
+    from invertedindexbuilder_spark.operators.query_exec import (
+        topk_bm25_chunked,
+    )
+
+    docs = tables["chunks"].sparkSession.range(400).select(
+        F.col("id").alias("doc_id"), F.lit(100).cast("long").alias("doc_len")
+    )
+    stats = {"n_docs": 400, "sum_doc_len": 40_000}
+    res = topk_bm25_chunked(
+        spark, tables["chunks"], docs, stats, "mid the", mode="and", k=5,
+        and_prune=True,
+    )
+    plan = _plan(res)
+    scans = re.findall(r"FileScan parquet [^\n]*", plan)
+    assert len(scans) == 1, plan
+    assert "(term,the" in scans[0], scans[0]
+    assert "mid" not in scans[0], scans[0]
+    assert "LocalTableScan" in plan, plan
+    assert len(res.collect()) == 5
+
+
 def test_bucketed_docs_join_shuffles_only_the_decoded_side(spark, tmp_path):
     """SCALE.md's doc_len-join fix: with the docs table BUCKETED by
     doc_id, the scoring join shuffles only the decoded-postings side —

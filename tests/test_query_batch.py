@@ -115,25 +115,26 @@ def test_batch_equals_per_query(spark, env, mode, table):
 def test_batch_and_candidate_prune_forced_equals_unpruned(
     spark, env, monkeypatch
 ):
-    """r8 batch conjunctive candidate pruning: with the skippable-volume
+    """Batch conjunctive candidate pruning: with the skippable-volume
     floor forced to 0 the pruned path must ENGAGE (asserted via a spy on
-    the candidate-block decoder; the query subset keeps the union rare
+    the shared candidate pass; the query subset keeps the union rare
     df under the doc_len push cap) and return per-query results
     identical to the unpruned batch and to the single-query operator."""
     import invertedindexbuilder_spark.operators.query_batch as qb
+    import invertedindexbuilder_spark.operators.query_exec as qe
 
     # rare dfs: 'data' ~273 + 'rare' ~12 -> cand_total < DOCLEN_PUSH_CAP
     queries = [(1, "data mid"), (2, "rare the"), (3, "data data the")]
     qdf = spark.createDataFrame(queries, "query_id long, text string")
 
     calls = []
-    real = qb.decode_matched_rows_bmw
+    real = qb.and_candidate_pass
 
     def spy(*a, **kw):
         calls.append(1)
         return real(*a, **kw)
 
-    monkeypatch.setattr(qb, "decode_matched_rows_bmw", spy)
+    monkeypatch.setattr(qb, "and_candidate_pass", spy)
 
     def run():
         out = qb.topk_bm25_batch(
@@ -147,13 +148,12 @@ def test_batch_and_candidate_prune_forced_equals_unpruned(
             )
         return got
 
-    spark.conf.set(qb.BATCH_AND_PRUNE_MIN_SKIPPABLE_CONF, "0")
-    try:
-        pruned = run()
-    finally:
-        spark.conf.unset(qb.BATCH_AND_PRUNE_MIN_SKIPPABLE_CONF)
+    floor = qe.AND_PRUNE_MIN_SKIPPABLE
+    monkeypatch.setattr(qe, "AND_PRUNE_MIN_SKIPPABLE", 0)
+    pruned = run()
     assert calls, "forced floor must engage the candidate-pruned path"
     calls.clear()
+    monkeypatch.setattr(qe, "AND_PRUNE_MIN_SKIPPABLE", floor)
     full = run()
     assert not calls, "default floor must keep the small batch unpruned"
     assert pruned == full and pruned

@@ -90,3 +90,46 @@ def test_spark_cli_batch_serves_default_build(
         got.setdefault(text, []).append((int(doc_id), float(score)))
     for text in ("alpha common", "beta"):
         assert got[text] == _want(spark, root, text, "or")
+
+
+@pytest.mark.parametrize("force", [False, True])
+@pytest.mark.parametrize("mode", ["and", "or"])
+def test_spark_cli_explain_reports_what_ran(
+    spark, root, mode, force, monkeypatch, capsys
+):
+    """--spark --explain prints one JSON line per query whose
+    prune_engaged says whether a block-pruning decoder ran.  On this
+    small build a forced AND takes the candidate pass; OR has no heavy
+    list, so even a forced OR decodes in full."""
+    import json
+
+    from invertedindexbuilder_spark.operators import query_exec as qe
+
+    ran = []
+    real = qe._decode_kept_blocks
+
+    def spy(*a, **kw):
+        ran.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(qe, "_decode_kept_blocks", spy)
+    monkeypatch.setattr(
+        sys, "argv",
+        ["query_cli.py", "--index", root, "--spark", "--mode", mode,
+         "--k", "5", "--cores", "8", "--explain"]
+        + (["--force-prune"] if force else [])
+        + ["alpha", "common"],
+    )
+    assert query_cli.main() == 0
+    out, err = capsys.readouterr()
+    got = [
+        (int(line.split("\t")[1]), float(line.split("\t")[0]))
+        for line in out.splitlines()
+    ]
+    assert got and got == _want(spark, root, "alpha common", mode)
+    [line] = [ln for ln in err.splitlines() if ln.startswith("{")]
+    rec = json.loads(line)
+    assert rec["query"] == "alpha common" and rec["mode"] == mode
+    assert rec["prune_engaged"] == bool(ran)
+    assert rec["prune_engaged"] == (force and mode == "and")
+    assert rec["blocks_skipped"] == rec["blocks_total"] - rec["blocks_decoded"]
