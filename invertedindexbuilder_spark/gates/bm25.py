@@ -120,12 +120,10 @@ def queries() -> dict:
         return out.select("doc_id", "score")
 
     def bm25_or_ioprune(spark, sf_dir):
-        # r7 two-phase disjunctive scan prune, forced ON (heavy_df
-        # lowered so sf-scale dfs classify as heavy; at sf0.01 every
-        # heavy term is negative-IDF, so this exercises the sound
-        # candidate-only branch + the chunk-granule scan skip).  The
-        # skip moves I/O, never results: the oracle is the plain OR
-        # twin.
+        # the OR candidate pass, forced ON (heavy_df lowered so
+        # sf-scale dfs classify as heavy) with its chunk scan filter.
+        # The skip moves I/O, never results: the oracle is the plain
+        # OR twin.
         from invertedindexbuilder_spark.operators.query_exec import (
             topk_bm25_chunked,
         )

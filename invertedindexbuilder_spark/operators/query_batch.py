@@ -44,7 +44,7 @@ from invertedindexbuilder_spark.operators.query_exec import (
     _doc_lens_for,
     _local_doc_lens,
     _lookup_chunk_meta,
-    and_candidate_pass,
+    candidate_pass,
     and_candidates_engaged,
     bm25_expr,
     decode_matched_rows,
@@ -149,7 +149,7 @@ def topk_bm25_batch(
             {min(ks, key=lambda k: winners[k]["term_df"]) for ks in by_q.values()}
         )
         if and_candidates_engaged(winners, rare_keys):
-            decoded, cand = and_candidate_pass(chunks, winners, rare_keys, strict)
+            decoded, cand = candidate_pass(chunks, winners, rare_keys, strict)
             docs_join = _local_doc_lens(spark, _doc_lens_for(docs, cand))
 
     if decoded is None:

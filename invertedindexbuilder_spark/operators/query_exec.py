@@ -22,31 +22,27 @@ Scale notes: the per-term chunk rows stay distributed (a stopword's
 chunks at 10^12 docs are GBs — never collected; driver metadata is
 O(#query terms) scalars); the docs join for doc_len shuffles on doc_id and
 benefits from bucketing the docs table by doc_id; stats is a broadcast
-scalar pair.  Conjunctive queries prune with the rarest term's doc
-range (the nextGEQ skip analog): whole chunks above the bound leave
-the plan, boundary chunks truncate blocks in the decoder.  When the
-rare list is small and the other lists are long (one rule,
-and_candidates_engaged, for single-query, batch and facet AND), the
-rare postings collect once and their doc_ids become an explicit
-candidate set: every other list decodes candidate-bearing blocks ONLY
-(and_candidate_pass + decode_candidate_blocks — the distributed form
-of the local session's progressive intersection), and the query
-finishes over local relations for the rare postings and doc_lens.
-Disjunctive queries get set-at-a-time block-max pruning
-(decode_matched_rows_bmw): light lists decode fully and seed theta (the
-k-th best partial score) plus the candidate set; heavy-list blocks
-decode only if they may hold a candidate or their stored-max_tf upper
-bound (plus the other heavy lists' full-list bounds) can still reach
-theta — the one-pass form of the driver-local session's adaptive BMW
-loop (local_query.py), on the same Ding & Suel (SIGIR 2011) idea.
-That rule is exact only while heavy contributions are non-negative;
-negative-IDF heavy lists (df > N/2) route through the same
-candidate-only decoder with a driver-side bound check and a full-decode
-fallback (see _try_bmw_or_decode — the r4 soundness fix).
-Queries with no light/heavy mix, or with candidate volume beyond the
-driver bound, fall back to full decode — embarrassingly parallel over
-chunks, and still reference-parity (the reference's OR has only docid
-skips, query.c:122-151).
+scalar pair.
+
+Both modes prune with one exact rule, the set-at-a-time form of the
+reference's nextGEQ skip (query.c:120-300): a candidate pass
+(candidate_pass).  A few short lists decode fully and collect to the
+driver; their doc_ids are the candidates.  Every other list decodes
+only its candidate-bearing blocks (decode_candidate_blocks), and with
+enough chunks a payload-free metadata job first drops the
+candidate-free chunks from the scan (_chunk_ioprune_filter), so
+skipped chunks are skipped reads.  AND takes the rarest list as the
+source (single-query, batch and facet AND share one rule,
+and_candidates_engaged): every result doc is a candidate.  OR takes
+the light lists (df <= heavy_df): the driver scores every candidate
+exactly, and the pass answers the query only if the k-th candidate
+beats the heavy lists' full-list upper bound, the most a doc in no
+light list can score.  That check holds for either IDF sign.  Either
+way the query finishes over local relations.  A non-engaged AND still
+bounds its decode by the rarest list's doc range on both sides;
+everything else decodes in full — embarrassingly parallel over chunks,
+and still reference-parity (the reference's OR has only docid skips,
+query.c:122-151).
 """
 
 from __future__ import annotations
@@ -69,14 +65,15 @@ from invertedindexbuilder_spark.functions.compress import (
 
 _QUERY_TOKEN_RE = re.compile(r"[A-Za-z0-9]+")
 
-# disjunctive queries: lists above this df get block-max pruning; the
-# light lists below it are decoded fully and seed the theta threshold
+# disjunctive queries: the light lists (df <= this) are the candidate
+# source of the OR candidate pass; the heavy lists above it decode only
+# their candidate-bearing blocks
 HEAVY_QUERY_DF = 8192
-# upper bound on candidate docs (sum of light dfs) collected to the
-# driver for the pruning pass; above it the OR falls back to full
+# upper bound on the light postings (sum of light dfs) the OR candidate
+# pass collects to the driver; above it the OR falls back to full
 # decode (which is correct, just does more IO)
-BMW_CANDIDATE_LIMIT = 200_000
-# or_prune="auto": engage BMW only where skipped decode pays for the
+OR_CANDIDATE_LIMIT = 200_000
+# or_prune="auto": engage the pass only where skipped decode pays for the
 # pruning pass's fixed extra-job overhead.  MEASURED r4 (scripts/
 # bench_bmw.py on the 1M-doc pinned corpus, local[32], k=10, 2 light +
 # N heavy ~0.95-df lists): full decode+score of ONE extra ~950k-posting
@@ -111,28 +108,28 @@ BMW_CANDIDATE_LIMIT = 200_000
 # BENCH/SCALE.md.
 AUTO_OR_PRUNE_MIN_HEAVY_POSTINGS = 500_000_000
 
-# Two-phase disjunctive I/O pruning (r7): the block-max keep rule is
-# evaluated per CHUNK against a payload-free metadata scan, and only
-# surviving chunks enter the payload scan's pushed (term, first_doc_id)
-# predicate — so skipped chunks are skipped READS, not just skipped
-# decode (the r7 cold campaign showed decode-level BMW reading
-# byte-for-byte what full decode reads; BENCH/SCALE.md).  Driver
-# metadata stays bounded: above META_CAP collected chunk-metadata rows
-# (5 scalars each) or MAX_IDS surviving literals the path falls back to
-# the unpruned scan (correct, reads more).  A keep fraction near 1
-# also falls back — a predicate that keeps everything is pure planning
-# overhead.
-OR_IOPRUNE_META_CAP = 100_000
-OR_IOPRUNE_MAX_IDS = 20_000
-OR_IOPRUNE_KEEP_FRAC = 0.95
-# Scan pruning operates at CHUNK granularity: with fewer heavy chunk
-# rows than this, the payload-free metadata job costs more than the
-# handful of reads it could skip (measured r8: the 1M-doc forced-BMW
-# bench query spans ~13 heavy chunks, every one candidate-bearing, so
-# the meta job always fell through to the unpruned scan) — skip the
-# job outright.  Exact chunk counts ride the lookup's existing
-# metadata aggregate, so this check is free.
-OR_IOPRUNE_MIN_CHUNKS = 16
+# Candidate chunk scan filter (r7, _chunk_ioprune_filter): the
+# candidate-overlap rule is evaluated per CHUNK against a payload-free
+# metadata scan, and only surviving chunks enter the payload scan's
+# pushed (term, first_doc_id) predicate — so skipped chunks are skipped
+# READS, not just skipped decode (the r7 cold campaign showed
+# decode-level skipping reading byte-for-byte what full decode reads;
+# BENCH/SCALE.md).  Driver metadata stays bounded: above META_CAP
+# collected chunk-metadata rows (2 scalars each) or MAX_IDS surviving
+# literals the pass keeps the unfiltered scan (correct, reads more).  A
+# keep fraction near 1 also keeps it — a predicate that keeps
+# everything is pure planning overhead.
+CANDIDATE_SCAN_META_CAP = 100_000
+CANDIDATE_SCAN_MAX_IDS = 20_000
+CANDIDATE_SCAN_KEEP_FRAC = 0.95
+# The filter operates at CHUNK granularity: with fewer chunk rows than
+# this, the payload-free metadata job costs more than the handful of
+# reads it could skip (measured r8: the 1M-doc forced OR bench query
+# spans ~13 heavy chunks, every one candidate-bearing, so the meta job
+# always fell through to the unfiltered scan) — skip the job outright.
+# Exact chunk counts ride the lookup's existing metadata aggregate, so
+# this check is free.
+CANDIDATE_SCAN_MIN_CHUNKS = 16
 # Candidate sets at or below this size fetch doc_lens through a
 # doc_id-PUSHED scan of the docs table (whose files are
 # doc_id-contiguous by construction: ids come from the build's range
@@ -144,13 +141,7 @@ OR_IOPRUNE_MIN_CHUNKS = 16
 # recursive Or chain, and a 8.8k-literal push stack-overflowed
 # executor tasks at 30M docs (r7).
 DOCLEN_PUSH_CAP = 1000
-# Chunk-count approximation for the rare-candidate auto rule: the
-# adaptive salter caps a chunk at ~1M postings, so a heavy term spans
-# about df/1M chunk rows.  Deliberately the CAP, not the build's
-# effective chunk size — underestimating chunk count only delays
-# engagement (never engages a hopeless prune).
-APPROX_CHUNK_POSTINGS = 1_000_000
-# Conjunctive candidate pass (and_candidate_pass), one rule for the
+# Conjunctive candidate pass (candidate_pass), one rule for the
 # single-query, batch and facet AND surfaces: engage when the rare
 # lists' postings fit the doc_len push cap AND the other keys' summed
 # df — the decode volume the pass can skip — reaches this floor.
@@ -378,7 +369,7 @@ def _driver_contribs(
 ) -> dict[int, float]:
     """Per-doc summed BM25 contributions for COLLECTED posting rows
     (doc_id, df, weight, tf) — float64 in :func:`bm25_expr`'s exact op
-    order, so driver-computed theta/bound decisions see the same values
+    order, so driver-computed bound decisions see the same values
     the distributed scorer would.  Docs absent from ``dl_map`` are
     skipped (inner-join parity with the old docs-join pass)."""
     p: dict[int, float] = {}
@@ -403,35 +394,29 @@ def _chunk_ioprune_filter(
     chunks: DataFrame,
     winners: dict,
     strict: bool,
-    heavy_keys: list[str],
-    theta: float,
+    keys: list[str],
     cand_sorted: np.ndarray,
-    others_ub: dict[str, float],
-    n_docs: int,
-    min_doc_len: float,
-    davr: float,
     counters: dict | None = None,
-    cand_only: bool = False,
 ):
-    """Chunk-granule form of the BMW keep rule, evaluated BEFORE the
-    payload read (r7) — returns a pushable Column over (term,
-    first_doc_id) selecting only the heavy chunks that can matter, or
-    None when pruning cannot help / cannot stay bounded (caller uses
-    the unpruned scan — correct, reads more).
+    """Chunk-granule candidate filter, evaluated BEFORE the payload
+    read (r7) — returns a pushable Column over (term, first_doc_id)
+    selecting only the chunks of ``keys`` whose doc range holds a
+    candidate, or None when the filter cannot help / cannot stay
+    bounded (the caller keeps the unfiltered scan — correct, reads
+    more).
 
-    One payload-free metadata job (parquet column pruning keeps the
-    scan to five scalar columns; the clustered layout prunes its files
-    by term) collects per-chunk (first_doc_id, last_doc, chunk max_tf)
-    for the heavy keys.  A chunk survives iff it may hold a CANDIDATE
-    doc or its chunk-level score upper bound plus the other heavy
-    lists' full-list bounds reaches theta.  The chunk upper bound is
-    the max of its blocks' bounds (the ub formula is monotonic in
-    max_tf), and chunk candidate-overlap contains block overlap, so
-    chunk-keep ⊇ block-keep: `decode_matched_rows_bmw` downstream sees
-    every block it would have kept — results are bit-identical, only
-    the bytes read change.  With ``cand_only`` (the negative-IDF
-    branch) the ub leg is dropped: that branch emits candidate
-    postings only, so candidate-free chunks contribute nothing.
+    Below CANDIDATE_SCAN_MIN_CHUNKS chunk rows (counted by the lookup)
+    it returns None without a job.  Otherwise one payload-free
+    metadata job (parquet column pruning keeps the scan to the two
+    scalar columns term and first_doc_id; the clustered layout prunes
+    its files by term) collects every chunk's first doc.  A term's
+    chunks hold disjoint, ordered doc ranges (the layout the local
+    loader also concatenates), so a chunk ends before the next one
+    starts and the last one at the term's last doc (from the lookup).
+    Overlap with that range contains block candidate overlap, so
+    :func:`decode_candidate_blocks` downstream sees every block it
+    would have decoded — results are bit-identical, only the bytes
+    read change.
 
     Reference anchor: the per-block skip metadata
     (inverted_list.c:36-77) exists for read-skipping; this is the form
@@ -439,62 +424,43 @@ def _chunk_ioprune_filter(
     bytes (pushed predicate + row-group/page stats), where the
     decode-level rule cannot (payload and metadata share rows).
     """
-    meta_scan = _winner_match(
-        chunks.select(
-            "term",
-            "first_doc_id",
-            F.element_at("last_doc_ids", -1).alias("last_doc"),
-            F.array_max("max_tf").alias("cmt"),
-        ),
-        winners,
-        heavy_keys,
-        strict,
-    )
+    if sum(winners[k]["n_chunks"] for k in keys) < CANDIDATE_SCAN_MIN_CHUNKS:
+        return None
     rows = (
-        meta_scan.select("key", "first_doc_id", "last_doc", "cmt")
-        .limit(OR_IOPRUNE_META_CAP + 1)
+        _winner_match(
+            chunks.select("term", "first_doc_id"), winners, keys, strict
+        )
+        .select("key", "first_doc_id")
+        .limit(CANDIDATE_SCAN_META_CAP + 1)
         .collect()
     )
-    if len(rows) > OR_IOPRUNE_META_CAP:
+    if len(rows) > CANDIDATE_SCAN_META_CAP:
         return None
     cand = np.asarray(cand_sorted, dtype=np.int64)
-    keys = np.array([r["key"] for r in rows])
+    row_keys = np.array([r["key"] for r in rows])
     first = np.array([r["first_doc_id"] for r in rows], dtype=np.int64)
-    last = np.array([r["last_doc"] for r in rows], dtype=np.int64)
-    cmt = np.array([r["cmt"] for r in rows], dtype=np.float64)
-
+    order = np.lexsort((first, row_keys))
+    row_keys, first = row_keys[order], first[order]
+    term_end = np.append(row_keys[1:] != row_keys[:-1], True)
+    last = np.where(
+        term_end,
+        [winners[k]["last_doc"] for k in row_keys],
+        np.append(first[1:] - 1, 0),
+    )
     # candidate overlap: any cand in [first, last]
-    has_cand = np.searchsorted(cand, last, side="right") > np.searchsorted(
+    keep = np.searchsorted(cand, last, side="right") > np.searchsorted(
         cand, first, side="left"
     )
-    keep = has_cand
-    if not cand_only:
-        keep = keep.copy()
-        for k in heavy_keys:
-            m = keys == k
-            if not m.any():
-                continue
-            w = winners[k]
-            t_idf = float(_idf(int(w["term_df"]), n_docs))
-            if t_idf <= 0:
-                ub = np.zeros(int(m.sum()))
-            else:
-                denom = (
-                    BM25_K1 * ((1.0 - BM25_B) + BM25_B * min_doc_len / davr)
-                    + cmt[m]
-                )
-                ub = w["weight"] * t_idf * (BM25_K1 + 1.0) * cmt[m] / denom
-            keep[m] |= ub >= (theta - others_ub.get(k, 0.0))
 
     total, kept = int(keep.size), int(keep.sum())
     if counters is not None:
         counters["chunks_total"] = counters.get("chunks_total", 0) + total
         counters["chunks_kept"] = counters.get("chunks_kept", 0) + kept
-    if kept > OR_IOPRUNE_MAX_IDS or kept >= OR_IOPRUNE_KEEP_FRAC * total:
+    if kept > CANDIDATE_SCAN_MAX_IDS or kept >= CANDIDATE_SCAN_KEEP_FRAC * total:
         return None
     cond = F.lit(False)
-    for k in heavy_keys:
-        ids = first[(keys == k) & keep]
+    for k in keys:
+        ids = first[(row_keys == k) & keep]
         if ids.size == 0:
             continue  # every chunk of this term skipped
         if ids.size <= DOCLEN_PUSH_CAP:
@@ -513,17 +479,16 @@ def _chunk_ioprune_filter(
     return cond
 
 
-def _decode_kept_blocks(
-    matched: DataFrame,
-    cand_sorted: np.ndarray,
-    counters: dict | None,
-    ub_keep=None,
+def decode_candidate_blocks(
+    matched: DataFrame, cand_sorted: np.ndarray, counters: dict | None = None
 ) -> DataFrame:
-    """Shared block-selecting decoder: a block of a matched chunk row
-    decodes iff its doc range holds a candidate doc (``cand_sorted``)
-    or ``ub_keep(row, max_tf)`` marks it.  Without ``ub_keep`` only
-    candidate postings are emitted: a ride-along doc in a
-    candidate-bearing block would carry a partial score.
+    """Candidate-only decode — the set-at-a-time form of the
+    reference's nextGEQ skip (query.c:120-300): a block of a matched
+    chunk row decodes iff its doc range holds a candidate doc
+    (``cand_sorted``), and only candidate postings are emitted (a
+    ride-along doc in a candidate-bearing block would carry a partial
+    score).  Every block that holds a candidate decodes, so each
+    candidate's postings are complete and its score exact.
 
     ``counters``: optional {"decoded": acc, "total": acc} Spark
     accumulators for pruning instrumentation (tests assert decoded <<
@@ -545,10 +510,7 @@ def _decode_kept_blocks(
                 lo = np.concatenate(([first_lo], last[:-1]))
                 left = np.searchsorted(cand, lo + 1, side="left")
                 right = np.searchsorted(cand, last, side="right")
-                mask = right > left
-                if ub_keep is not None:
-                    mask |= ub_keep(r, np.asarray(r.max_tf, dtype=np.float64))
-                keep = np.flatnonzero(mask)
+                keep = np.flatnonzero(right > left)
                 if acc_tot is not None:
                     acc_tot.add(int(last.size))
                 if acc_dec is not None:
@@ -566,7 +528,7 @@ def _decode_kept_blocks(
                     # blocks >0 re-base from the REBASED last_doc_ids
                     prev_doc_id=int(getattr(r, "id_offset", 0)),
                 )
-                if ub_keep is None and docs.size:
+                if docs.size:
                     # sorted-membership filter: candidate docs only
                     pos = np.searchsorted(cand, docs)
                     pos[pos == cand.size] = 0
@@ -585,63 +547,6 @@ def _decode_kept_blocks(
                 )
 
     return matched.mapInPandas(explode, schema=_DECODED_SCHEMA)
-
-
-def decode_candidate_blocks(
-    matched: DataFrame, cand_sorted: np.ndarray, counters: dict | None = None
-) -> DataFrame:
-    """Candidate-only decode — the set-at-a-time form of the
-    reference's nextGEQ skip (query.c:120-300): only blocks whose doc
-    range holds a candidate doc decode, and only candidate postings are
-    emitted.  Every block that holds a candidate decodes, so each
-    candidate's postings are complete and its score exact."""
-    return _decode_kept_blocks(matched, cand_sorted, counters)
-
-
-def decode_matched_rows_bmw(
-    matched: DataFrame,
-    cand_sorted: np.ndarray,
-    theta: float,
-    others_ub: dict[str, float],
-    n_docs: int,
-    min_doc_len: float,
-    davr: float,
-    counters: dict | None = None,
-) -> DataFrame:
-    """Heavy-list decode with distributed block-max (BMW-style) pruning
-    — the set-at-a-time analog of local_query._disjunctive, using the
-    stored per-block ``max_tf`` the chunk table already carries.
-
-    A block of heavy term t decodes iff it may contain a CANDIDATE doc
-    (one seen in a fully-decoded light list — candidates must be scored
-    exactly) or its score upper bound plus the other heavy terms'
-    full-list upper bounds could still reach ``theta``.  Exactness
-    REQUIRES every heavy contribution to be non-negative (positive
-    IDF); the caller enforces that.  The argument (one-pass form of
-    local_query's): for any doc d in the true top-k, every block
-    containing d satisfies ub_t(block) + sum(other full ubs) >=
-    score(d) >= theta_final >= theta, so d decodes fully; a doc with a
-    partially-decoded (under non-negative contributions,
-    UNDERestimated) score cannot displace a true top-k member, because
-    beating one would imply its true score is top-k — in which case it
-    decoded fully.  theta comes from the k-th best LIGHT-PARTIAL score
-    — a lower bound of the k-th best final score, again because heavy
-    contributions cannot subtract.  For NEGATIVE-IDF heavy lists both
-    halves of that argument invert (partial scores OVERestimate); the
-    caller decodes them with :func:`decode_candidate_blocks` plus a
-    driver-side bound check (see _try_bmw_or_decode).
-    """
-    k1_lenorm = BM25_K1 * ((1.0 - BM25_B) + BM25_B * min_doc_len / davr)
-
-    def ub_keep(r, mt):
-        t_idf = float(_idf(int(r.term_df), n_docs))
-        if t_idf <= 0:
-            ub = np.zeros(mt.size)
-        else:
-            ub = int(r.weight) * t_idf * (BM25_K1 + 1.0) * mt / (k1_lenorm + mt)
-        return ub >= (theta - others_ub[r.key])
-
-    return _decode_kept_blocks(matched, cand_sorted, counters, ub_keep)
 
 
 def _local_postings(spark: SparkSession, rows: list) -> DataFrame:
@@ -687,7 +592,7 @@ def _local_doc_lens(spark: SparkSession, dl_map: dict[int, float]) -> DataFrame:
 def and_candidates_engaged(
     winners: dict, rare_keys: list[str], force: bool = False
 ) -> bool:
-    """The one engagement rule of :func:`and_candidate_pass`, for every
+    """The one engagement rule of :func:`candidate_pass`, for every
     AND surface: the rare lists' postings (the candidate bound) fit
     DOCLEN_PUSH_CAP, and the other keys' summed df reaches
     AND_PRUNE_MIN_SKIPPABLE.  ``force`` skips the floor, never the
@@ -701,215 +606,53 @@ def and_candidates_engaged(
     )
 
 
-def and_candidate_pass(
+def candidate_pass(
     chunks: DataFrame,
     winners: dict,
-    rare_keys: list[str],
+    cand_keys: list[str],
     strict: bool,
     counters: dict | None = None,
 ) -> tuple[DataFrame, np.ndarray]:
-    """Conjunctive candidate pass — the distributed form of
-    local_query._conjunctive's progressive intersection, for a batch of
-    queries (``rare_keys``: each query's rarest key; a single query or
-    a facet count is a batch of one).
+    """The one candidate pass, for single-query, batch and facet AND and
+    for OR — the distributed form of the local session's progressive
+    intersection.  ``cand_keys`` are the candidate source: each AND
+    query's rarest key (a single query or a facet count is a batch of
+    one), or an OR query's light keys.
 
-    The rare lists decode fully, once, and their postings (at most
-    DOCLEN_PUSH_CAP rows, see :func:`and_candidates_engaged`) collect
-    to the driver; their doc_ids are the candidates.  Every other key
-    of ``winners`` decodes only candidate-bearing blocks
-    (:func:`decode_candidate_blocks`), and chunks past the last
-    candidate leave its scan.  Exact: every AND result doc of a query
-    is in that query's rare list, and all its postings in other lists
-    live in candidate-bearing blocks.
+    The ``cand_keys`` lists decode fully, once, and their postings
+    (bounded by the caller's engagement rule) collect to the driver;
+    their doc_ids are the candidates.  Every other key of ``winners``
+    decodes only candidate-bearing blocks
+    (:func:`decode_candidate_blocks`): the candidate-free chunks leave
+    its scan (:func:`_chunk_ioprune_filter`), or at least the chunks
+    past the last candidate do.  Every candidate's postings are
+    therefore complete.  That makes AND exact (every result doc is a
+    candidate); OR's caller checks the non-candidate bound.
 
-    Returns ``(decoded, cand)``: decoded postings — the rare ones as a
-    local relation, so the caller's final plan scans only the other
-    keys' chunks — and the sorted candidate doc_ids, a bound on every
-    result doc (callers read doc_lens or facets for those ids only).
+    Returns ``(decoded, cand)``: decoded postings — the source ones as
+    a local relation, so the caller's final plan scans only the other
+    keys' chunks — and the sorted candidate doc_ids (callers read
+    doc_lens or facets for those ids only).
     """
     rows = decode_matched_rows(
-        _winner_rows(chunks, winners, rare_keys, strict)
+        _winner_rows(chunks, winners, cand_keys, strict)
     ).collect()
     cand = np.unique(
         np.fromiter((r["doc_id"] for r in rows), np.int64, count=len(rows))
     )
     decoded = _local_postings(chunks.sparkSession, rows)
-    others = [k for k in winners if k not in rare_keys]
+    others = [k for k in winners if k not in cand_keys]
     if others and cand.size:
-        other_rows = _winner_rows(chunks, winners, others, strict).filter(
-            F.col("first_doc_id") <= F.lit(int(cand[-1]))
+        pred = _chunk_ioprune_filter(
+            chunks, winners, strict, others, cand, counters
         )
+        if pred is None:
+            pred = F.col("first_doc_id") <= F.lit(int(cand[-1]))
+        other_rows = _winner_rows(chunks, winners, others, strict).filter(pred)
         decoded = decoded.unionByName(
             decode_candidate_blocks(other_rows, cand, counters)
         )
     return decoded, cand
-
-
-def _try_bmw_or_decode(
-    spark: SparkSession,
-    rows_for,
-    ioprune,
-    meta: list,
-    docs: DataFrame,
-    stats: dict,
-    n_docs: int,
-    davr: float,
-    k: int,
-    heavy_df: int,
-    cand_limit: int,
-    counters: dict | None,
-    round_digits: int | None = None,
-    narrow=None,
-) -> DataFrame | None:
-    """Disjunctive pruning orchestration.  ``meta`` = one dict per key
-    with (key, df, weight, mt = list-wide max tf).  Returns
-    ``(decoded, docs_narrow)`` — the pruned decoded-postings frame plus
-    an optional candidate-restricted docs frame for the scoring join
-    (non-None only on the candidate-only branch, whose bound check
-    PROVES every result doc is a candidate) — or None when pruning
-    cannot help / cannot stay bounded (caller falls back to full decode
-    — always correct):
-
-    - no heavy list (nothing to prune) or no light list (no theta seed);
-    - light candidate volume above ``cand_limit`` (driver stays O(k +
-      candidates) by contract — the r1 verdict's unbounded-collect
-      lesson);
-    - fewer than k light candidates (theta would be -inf).
-
-    ``rows_for(keys)``: scan-pushed row factory (see :func:`_winner_rows`)
-    — so the light pass never reads the heavy terms' payload bytes just
-    to discard them.
-
-    ``ioprune(heavy_keys, theta, cand_sorted, others_ub, cand_only)``:
-    chunk-granule scan-prune factory; returns a pushable Column over
-    the heavy scan or None.  Applied AFTER theta is known and BEFORE
-    the heavy payload read, so skipped chunks are skipped bytes (r7;
-    see _chunk_ioprune_filter).
-    """
-    heavy = [m for m in meta if m["df"] > heavy_df]
-    light = [m for m in meta if m["df"] <= heavy_df]
-    if not heavy or not light:
-        return None
-    if sum(m["df"] for m in light) > cand_limit:
-        return None
-
-    light_keys = [m["key"] for m in light]
-    heavy_keys = [m["key"] for m in heavy]
-    light_rows = rows_for(light_keys)
-    heavy_rows = rows_for(heavy_keys)
-
-    # pass 1: exact partial scores from the light lists -> theta + the
-    # candidate doc set.  The light postings are cand_limit-bounded
-    # (checked above), so they collect to the driver and the partial
-    # sums compute there (_driver_contribs, bm25_expr's float64 op
-    # order); doc_lens come from a doc_id-PUSHED scan of the docs table
-    # (_doc_lens_for) instead of a full corpus-scale doc_len join — the
-    # r7 needle campaign measured the old path's three full doc_len
-    # passes (theta, bound check, scoring) as MOST of the pruned
-    # query's cold bytes at 30M docs (BENCH/SCALE.md).
-    light_dec = decode_matched_rows(light_rows)
-    lrows = light_dec.select("key", "doc_id", "df", "weight", "tf").collect()
-    if not lrows:
-        return None
-    cand_ids = np.unique(np.array([r["doc_id"] for r in lrows], np.int64))
-    dl_map = _doc_lens_for(docs, cand_ids, narrow=narrow)
-    partials = _driver_contribs(lrows, dl_map, n_docs, davr)
-    if len(partials) < k:
-        return None
-    theta = sorted(partials.values(), reverse=True)[k - 1]
-    cand_sorted = np.sort(
-        np.fromiter(partials.keys(), dtype=np.int64, count=len(partials))
-    )
-
-    min_doc_len = float(stats.get("min_doc_len", 1.0))
-    full_ubs = {
-        m["key"]: _full_list_ub(
-            float(m["mt"]), int(m["df"]), int(m["weight"]),
-            n_docs, min_doc_len, davr,
-        )
-        for m in heavy
-    }
-
-    if any(float(_idf(int(m["df"]), n_docs)) <= 0 for m in heavy):
-        # NEGATIVE-IDF heavy list(s) (df > N/2): the one-pass keep rule
-        # below is UNSOUND here — heavy contributions are negative, so
-        # a non-candidate doc riding along in ONE list's candidate
-        # block gets a partially-decoded (OVERestimated) score and can
-        # displace the true top-k (observed at 10M docs with 5
-        # stopword-scale lists: ride-alongs at -2.8 displaced the true
-        # -30.7 top-k; regression-pinned in test_bmw_or.py).  Sound
-        # variant: decode candidate-bearing heavy blocks ONLY, keep
-        # candidate postings only (ride-alongs dropped — candidates'
-        # scores are then EXACT since every block holding a candidate
-        # decodes), and verify driver-side that no heavy-only doc can
-        # reach the top-k: score(non-candidate) <= sum of the heavy
-        # lists' full ubs (0 for negative idf), so if the k-th best
-        # candidate FINAL exceeds that bound the candidate-only answer
-        # is exact; otherwise fall back to full decode (correct, and
-        # genuinely required — the top-k then hinges on tiny
-        # differences among near-identical negative sums).
-        # candidate-only decode ⇒ candidate-free chunks contribute
-        # nothing; skip their payload at the scan (r7)
-        pred = ioprune(heavy_keys, float("inf"), cand_sorted,
-                       {m["key"]: 0.0 for m in heavy}, True)
-        if pred is not None:
-            heavy_rows = heavy_rows.filter(pred)
-        heavy_cand = decode_candidate_blocks(heavy_rows, cand_sorted, counters)
-        # bound check driver-side: heavy_cand is candidate-only, so its
-        # docs all sit in dl_map already — no docs pass at all (r7)
-        hrows = heavy_cand.select(
-            "key", "doc_id", "df", "weight", "tf"
-        ).collect()
-        hmap = _driver_contribs(hrows, dl_map, n_docs, davr)
-        finals = sorted(
-            (v + hmap.get(d, 0.0) for d, v in partials.items()),
-            reverse=True,
-        )
-        theta_c = finals[k - 1]
-        ub_noncand = sum(full_ubs.values())
-        # rounding-aware margin (ADVICE r4): the final ranking rounds
-        # scores to round_digits, so a non-candidate doc whose RAW
-        # score sits within half a rounding quantum of theta_c could
-        # ROUND into a tie with the k-th candidate and win the
-        # smaller-doc_id tiebreak; require strict clearance beyond the
-        # quantum before accepting the candidate-only answer
-        margin = 0.0 if round_digits is None else 0.5 * 10.0 ** (-round_digits)
-        if theta_c <= ub_noncand + margin:
-            return None
-        # driver-local finish (r8): every posting row that can reach
-        # the result is ALREADY on the driver (lrows from the theta
-        # pass, hrows from the bound check — both cand_limit-bounded by
-        # contract), and the bound check just PROVED every result doc
-        # is a candidate whose doc_len sits in dl_map.  So the scoring
-        # tail's inputs become LOCAL relations: no localCheckpoint of
-        # the heavy decode, no second decode execution, and no second
-        # pushed docs scan (the r7 path re-read candidate doc_lens it
-        # had already fetched).  Scores are unchanged — _score_topk
-        # still computes them in bm25_expr over the same values; docs
-        # absent from dl_map (doc_filter) stay absent, preserving
-        # inner-join parity.  Saves 2 jobs + one candidate-scan read
-        # per pruned query; at 1M docs the forced-BMW entry's fixed
-        # overhead is mostly these jobs.
-        decoded = F.broadcast(_local_postings(spark, lrows + hrows))
-        return decoded, _local_doc_lens(spark, dl_map)
-
-    total_ub = sum(full_ubs.values())
-    others_ub = {key: total_ub - ub for key, ub in full_ubs.items()}
-
-    # chunk-granule keep rule pushed into the heavy scan — the
-    # block-level rule below sees every block it would have kept
-    # (chunk-keep ⊇ block-keep), only the bytes read change (r7)
-    pred = ioprune(heavy_keys, float(theta), cand_sorted, others_ub, False)
-    if pred is not None:
-        heavy_rows = heavy_rows.filter(pred)
-    heavy_dec = decode_matched_rows_bmw(
-        heavy_rows, cand_sorted, float(theta), others_ub,
-        n_docs, min_doc_len, davr, counters=counters,
-    )
-    # no docs narrowing here: a heavy-only doc (in no light list) can
-    # legitimately reach the top-k through the ub-kept blocks, and it
-    # is not in the candidate set
-    return decode_matched_rows(light_rows).unionByName(heavy_dec), None
 
 
 def bm25_expr(n_docs: int, davr: float):
@@ -948,7 +691,8 @@ def _lookup_chunk_meta(
     re-serialize the heavy-term decode this layout exists to spread
     (pinned by test_chunk_rows_decode_in_multiple_tasks).
 
-    Winner dict values carry: term, term_df, weight, last_doc, mt.
+    Winner dict values carry: term, term_df, weight, first_doc,
+    last_doc, mt, n_chunks.
     """
     weights = _key_weights(terms, strict)
     empty = (
@@ -965,6 +709,7 @@ def _lookup_chunk_meta(
         .agg(
             F.sum("df").cast("long").alias("term_df"),
             F.max("weight").alias("weight"),
+            F.min("first_doc_id").alias("first_doc"),
             F.max(F.element_at("last_doc_ids", -1)).alias("last_doc"),
             F.max(F.array_max("max_tf")).alias("mt"),
             F.count("*").alias("n_chunks"),
@@ -979,6 +724,7 @@ def _lookup_chunk_meta(
                 "term": r["term"],
                 "term_df": int(r["term_df"]),
                 "weight": int(r["weight"]),
+                "first_doc": int(r["first_doc"]),
                 "last_doc": int(r["last_doc"]),
                 "mt": int(r["mt"]),
                 "n_chunks": int(r["n_chunks"]),
@@ -1023,12 +769,10 @@ def topk_bm25_chunked(
     mode: str = "and",
     k: int = 10,
     strict: bool = True,
-    prune_collect_limit: int = 100_000,
     round_digits: int | None = None,
     or_prune: bool | str = "auto",
     and_prune: bool | str = "auto",
     heavy_df: int = HEAVY_QUERY_DF,
-    cand_limit: int = BMW_CANDIDATE_LIMIT,
     counters: dict | None = None,
     exclude: str | None = None,
     doc_filter=None,
@@ -1052,12 +796,12 @@ def topk_bm25_chunked(
     top-k ordering (cross-engine-comparable results: ranking on raw
     doubles could differ between float implementations at the k
     boundary; ranking on rounded scores with a doc_id tiebreak cannot).
-    ``or_prune`` / ``and_prune``: exact disjunctive block-max and
-    conjunctive candidate pruning (see decode_matched_rows_bmw and
-    and_candidate_pass); "auto" engages them above the measured
-    crossovers (and_candidates_engaged is the AND rule; True skips its
-    floor, never its cap), and every path falls back to full decode
-    when pruning cannot help.
+    ``or_prune`` / ``and_prune``: the exact candidate pass (see
+    candidate_pass) for OR (light lists, df <= ``heavy_df``, as the
+    source) and AND (the rarest list); "auto" engages it above the
+    measured crossovers (and_candidates_engaged is the AND rule; True
+    skips its floor, never its cap), and every path falls back to full
+    decode when the pass cannot answer.
 
     ``exclude``: NOT-terms — docs containing ANY of them leave the
     result (the boolean surface the reference lacks; applied as an
@@ -1087,11 +831,11 @@ def topk_bm25_chunked(
     )
     exclude_docs = exclude_doc_ids
     if exclude or exclude_docs is not None:
-        # BMW OR-pruning is UNSOUND under exclusion: theta seeds from
-        # light-list candidates INCLUDING soon-to-be-excluded docs, so
-        # an inflated theta could prune heavy blocks holding docs that
-        # belong in the post-exclusion top-k.  Force the (exact) full
-        # decode; AND-mode pruning is score-free and stays on.
+        # the OR bound check would count excluded candidates: the
+        # k-th candidate it compares could be a doc the exclusion
+        # removes, and a heavy-only doc could then belong in the
+        # top-k.  Force the (exact) full decode; AND-mode pruning is
+        # score-free and stays on.
         or_prune = False
     if exclude:
         ex_rows = lookup_chunk_rows(chunks, tokenize_query(exclude), strict=strict)
@@ -1104,43 +848,27 @@ def topk_bm25_chunked(
 
     n_docs = int(stats["n_docs"])
     davr = d_avr(stats["sum_doc_len"], n_docs)
+    light = [t for t, w in winners.items() if w["term_df"] <= heavy_df]
+    heavy = [t for t in winners if t not in light]
+    light_df = sum(winners[t]["term_df"] for t in light)
     if or_prune == "auto":
         # posting-volume rule, free here: the single-scan lookup
         # already collected every matched term's full df
-        skippable = sum(
-            w["term_df"] for w in winners.values()
-            # strict > matches the decoder's heavy classifier (df ==
-            # heavy_df terms are decoded as light lists)
-            if w["term_df"] > heavy_df
+        skippable = sum(winners[t]["term_df"] for t in heavy)
+        # r7 rare-candidate rule: the volume floor prices only skipped
+        # DECODE; the chunk scan filter skips READS, which win far
+        # below it when candidates are rare relative to the heavy chunk
+        # count (a chunk is skippable only if candidate-free — kept ≈
+        # |cands|).  Engage when the light lists are genuinely rare
+        # (their summed df bounds the candidate count, within the
+        # doc_len pushdown cap) and the heavy side spans at least 2x
+        # that many chunks; measured at 30M docs this regime reads 241
+        # vs 546 MB cold and halves the wall (BENCH/SCALE.md needle
+        # campaign).
+        heavy_chunks = sum(winners[t]["n_chunks"] for t in heavy)
+        or_prune = skippable >= AUTO_OR_PRUNE_MIN_HEAVY_POSTINGS or (
+            0 < light_df <= DOCLEN_PUSH_CAP and heavy_chunks >= 2 * light_df
         )
-        or_prune = skippable >= AUTO_OR_PRUNE_MIN_HEAVY_POSTINGS
-        if not or_prune:
-            # r7 rare-candidate rule: the decode-volume floor above
-            # prices only skipped DECODE; the scan prune skips READS,
-            # which win far below it when candidates are rare relative
-            # to the heavy chunk count (a chunk is skippable only if
-            # candidate-free — kept ≈ |cands| of ~df/1M chunks).
-            # Engage when the light lists are genuinely rare (their
-            # summed df bounds the candidate count, within the doc_len
-            # pushdown cap) and the heavy side spans at least ~2x that
-            # many salter-cap-sized chunks; measured at 30M docs this
-            # regime reads 241 vs 546 MB cold and halves the wall
-            # (BENCH/SCALE.md needle campaign).
-            light_sum = sum(
-                w["term_df"] for w in winners.values()
-                if w["term_df"] <= heavy_df
-            )
-            est_chunks = skippable // APPROX_CHUNK_POSTINGS
-            or_prune = (
-                0 < light_sum <= DOCLEN_PUSH_CAP
-                and est_chunks >= 2 * light_sum
-            )
-
-    # all pruning metadata below comes from the winners dict the
-    # lookup already collected — NO further aggregate jobs / chunk
-    # scans (r3 VERDICT #4: single-scan chunk lookup)
-    def rows_for(keys: list[str]) -> DataFrame:
-        return _winner_rows(chunks, winners, keys, strict)
 
     min_doc, max_doc = 0, None
     n_keys = None
@@ -1155,49 +883,51 @@ def topk_bm25_chunked(
         if and_prune and and_candidates_engaged(
             winners, [rare_key], force=and_prune is True
         ):
-            decoded, cand = and_candidate_pass(
+            decoded, cand = candidate_pass(
                 chunks, winners, [rare_key], strict, counters
             )
             # result docs ⊆ candidates: their doc_lens become a local
             # relation too (a ride-along cannot pass the all-keys filter)
             docs = _local_doc_lens(spark, _doc_lens_for(docs, cand, narrow))
-        elif rare["term_df"] <= prune_collect_limit:
-            # chunks wholly above the rarest term's doc range never
-            # even enter the decode stage (task-level pruning; block-
-            # level pruning inside boundary chunks happens in decode)
-            max_doc = rare["last_doc"]
-            matched = matched.filter(F.col("first_doc_id") <= F.lit(max_doc))
-    elif mode == "or" and or_prune:
-        meta = [
-            {"key": k, "df": w["term_df"], "weight": w["weight"],
-             "mt": w["mt"]}
-            for k, w in winners.items()
-        ]
-        min_dl = float(stats.get("min_doc_len", 1.0))
-
-        def ioprune(heavy_keys, theta, cand_sorted, others_ub, cand_only):
-            # chunk-granule prune can skip at most n_chunks reads: with
-            # too few heavy chunks the metadata job cannot pay for
-            # itself (r8; the lookup already collected exact counts)
-            if sum(
-                winners[k]["n_chunks"] for k in heavy_keys
-            ) < OR_IOPRUNE_MIN_CHUNKS:
-                return None
-            return _chunk_ioprune_filter(
-                chunks, winners, strict, heavy_keys, theta,
-                cand_sorted, others_ub, n_docs, min_dl, davr,
-                counters=counters, cand_only=cand_only,
+        else:
+            # every result doc lies in the rarest list's doc range:
+            # chunks wholly outside it never enter the decode stage, and
+            # the decoder skips the blocks outside it in boundary chunks
+            min_doc, max_doc = rare["first_doc"], rare["last_doc"]
+            matched = matched.filter(
+                (F.col("first_doc_id") <= F.lit(max_doc))
+                & (F.element_at("last_doc_ids", -1) >= F.lit(min_doc))
             )
-
-        res = _try_bmw_or_decode(
-            spark, rows_for, ioprune, meta, docs, stats, n_docs, davr,
-            k, heavy_df, cand_limit, counters,
-            round_digits=round_digits, narrow=narrow,
+    elif (
+        mode == "or" and or_prune and heavy
+        and k <= light_df <= OR_CANDIDATE_LIMIT
+    ):
+        dec, cand = candidate_pass(chunks, winners, light, strict, counters)
+        rows = dec.collect()
+        dl_map = _doc_lens_for(docs, cand, narrow=narrow)
+        scores = sorted(
+            _driver_contribs(rows, dl_map, n_docs, davr).values(), reverse=True
         )
-        if res is not None:
-            decoded, docs_narrow = res
-            if docs_narrow is not None:
-                docs = docs_narrow
+        # a doc in no light list scores at most the heavy lists' full
+        # bounds (0 for a negative-IDF list); candidates' scores are
+        # exact.  The final ranking rounds to round_digits, so the k-th
+        # candidate must clear the bound by half a rounding quantum, or
+        # a non-candidate could round into a tie and win the doc_id
+        # tiebreak.
+        min_dl = float(stats.get("min_doc_len", 1.0))
+        bound = sum(
+            _full_list_ub(
+                float(winners[t]["mt"]), winners[t]["term_df"],
+                winners[t]["weight"], n_docs, min_dl, davr,
+            )
+            for t in heavy
+        )
+        margin = 0.0 if round_digits is None else 0.5 * 10.0 ** (-round_digits)
+        if len(scores) >= k and scores[k - 1] > bound + margin:
+            # every result doc is a candidate whose postings and doc_len
+            # are already on the driver: finish over local relations
+            decoded = F.broadcast(_local_postings(spark, rows))
+            docs = _local_doc_lens(spark, dl_map)
 
     if decoded is None:
         decoded = decode_matched_rows(
@@ -1301,7 +1031,7 @@ def facet_counts(
     if mode == "and":
         rare_key = min(winners, key=lambda k: winners[k]["term_df"])
         if and_candidates_engaged(winners, [rare_key]):
-            decoded, cand = and_candidate_pass(chunks, winners, [rare_key], strict)
+            decoded, cand = candidate_pass(chunks, winners, [rare_key], strict)
             # the match set is a subset of the candidates: push them
             # into the facet scan (docs files are doc_id-contiguous by
             # construction) instead of a corpus-scale facet scan

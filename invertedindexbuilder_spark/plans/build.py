@@ -436,8 +436,8 @@ def build(
                     int(dph["sum_doc_len"]),
                     int(iph["terms"]),
                     int(iph["postings"]),
-                    # min_doc_len: the BM25 block-max upper bound's
-                    # doc_len floor (query_exec.decode_matched_rows_bmw)
+                    # min_doc_len: the doc_len floor of the OR
+                    # candidate pass's heavy-list bound (query_exec)
                     int(dph["min_doc_len"]),
                 )
             ],

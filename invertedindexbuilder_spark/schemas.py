@@ -90,8 +90,8 @@ STATS = T.StructType(
         T.StructField("sum_doc_len", T.LongType(), False),
         T.StructField("n_terms", T.LongType(), False),
         T.StructField("n_postings", T.LongType(), False),
-        # corpus-wide doc_len floor: the BM25 upper bound used by
-        # block-max OR pruning (query_exec.decode_matched_rows_bmw)
+        # corpus-wide doc_len floor: the heavy lists' BM25 upper bound
+        # in the OR candidate pass's bound check (query_exec)
         T.StructField("min_doc_len", T.LongType(), False),
     ]
 )

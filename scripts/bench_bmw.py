@@ -1,8 +1,8 @@
-"""Measure the BMW OR-pruning wall-clock crossover (VERDICT r3 #2).
+"""Measure the OR/AND candidate-pass wall-clock crossover (VERDICT r3 #2).
 
-The block-max OR path (query_exec.decode_matched_rows_bmw) is exact and
+The candidate pass (query_exec.candidate_pass) is exact and
 decode-skipping by construction (tests/test_bmw_or.py pins both), but
-its 2 extra small driver jobs cost real seconds — so the ``or_prune=
+its extra small driver jobs cost real seconds — so the ``or_prune=
 "auto"`` threshold must come from DATA, not an estimate.  This script
 builds chunk-only indexes at several corpus sizes from the FIXTURES.md
 synthetic source-code generator (token_range (200, 1601) — the
@@ -14,7 +14,8 @@ conjunctive candidate-decode path ON vs OFF.
                                 [--cores 32] [--reps 3] [--keep] [--cold]
 
 Prints one JSON line per size plus a summary line; indexes cached under
-/tmp/iib_bmw (``--keep`` leaves them for reuse across runs).
+iib_bmw in the temp directory (``TMPDIR``; ``--keep`` leaves them for
+reuse across runs).
 
 Every variant also reports the JVM's READ BYTES (benchmetrics.JvmIOMeter,
 VERDICT r6 #2): ``*_rchar_mb`` = total bytes MOVED through read
@@ -37,11 +38,12 @@ import json
 import os
 import shutil
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-WORK = "/tmp/iib_bmw"
+WORK = os.path.join(tempfile.gettempdir(), "iib_bmw")
 
 OR_QUERY = "rare0007 rare0123 common"   # 2 light lists + 1 heavy stopword
 AND_QUERY = "rare0007 common"           # rarest-list candidate decode
@@ -145,8 +147,8 @@ def main() -> int:
                          "JUST above the default, so every 30M OR "
                          "measurement on the current index silently "
                          "fell back to full decode (no light list, no "
-                         "theta).  Pass e.g. 16384 so the rare class "
-                         "is light again and BMW actually engages.")
+                         "candidates).  Pass e.g. 16384 so the rare "
+                         "class is light again and the pass engages.")
     ap.add_argument("--heavies", type=int, default=1,
                     help="number of ~0.95N-df heavy lists in the OR "
                          "query (default 1 = just 'common'); >1 appends "

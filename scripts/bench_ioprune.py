@@ -1,4 +1,4 @@
-"""Measure the r7 two-phase disjunctive scan prune in its winning
+"""Measure the candidate pass's chunk scan filter in its winning
 regime (BENCH/SCALE.md "needle campaign").
 
 The synthetic bench corpus has no genuinely rare terms (its rare class
@@ -16,7 +16,8 @@ JVM bytes; ``--cold`` drops the page cache before every rep.
 
 The pruned OR path must auto-engage (the r7 rare-candidate auto rule);
 the script asserts result identity between pruned and full before
-timing, and prints the chunks_kept/chunks_total engage proof.
+timing, and prints the chunks_kept/chunks_total engage proof of the
+auto OR and the forced AND.
 """
 
 from __future__ import annotations
@@ -86,11 +87,12 @@ def main() -> int:
 
     # identity + engage proof before any timing (auto must engage)
     counters: dict = {}
+    and_counters: dict = {}
     key = lambda rows: [(r["doc_id"], round(r["score"], 6)) for r in rows]
     assert key(run("or", counters=counters)) == key(
         run("or", or_prune=False)), "OR pruned != full"
-    assert key(run("and")) == key(run("and", and_prune=False)), \
-        "AND pruned != full"
+    assert key(run("and", counters=and_counters, and_prune=True)) == key(
+        run("and", and_prune=False)), "AND pruned != full"
     assert counters.get("chunks_total", 0) > 0, \
         "auto rule failed to engage the scan prune"
 
@@ -100,6 +102,8 @@ def main() -> int:
         "stopword": args.stopword, "cold": bool(args.cold),
         "chunks_kept": counters.get("chunks_kept"),
         "chunks_total": counters.get("chunks_total"),
+        "and_chunks_kept": and_counters.get("chunks_kept"),
+        "and_chunks_total": and_counters.get("chunks_total"),
         "canary_sec": cpu_canary(1),
     }
     for name, mode, kw in (

@@ -58,8 +58,10 @@ def main() -> int:
     ap.add_argument("--explain", action="store_true",
                     help="with --spark: print a JSON line of pruning "
                          "evidence to stderr after each query — whether "
-                         "a block-pruning decoder ran, and its blocks "
-                         "decoded vs total (Spark accumulators)")
+                         "the candidate decoder ran, its blocks decoded "
+                         "vs total (Spark accumulators) and the chunks "
+                         "its scan filter kept vs total (0 when the "
+                         "filter did not run)")
     ap.add_argument("--force-prune", action="store_true",
                     help="with --explain: force or_prune/and_prune on "
                          "below the auto floors (measurement aid)")
@@ -355,6 +357,8 @@ def _spark_runner(args):
                         "blocks_total": total,
                         "blocks_decoded": decoded,
                         "blocks_skipped": total - decoded,
+                        "chunks_total": counters.get("chunks_total", 0),
+                        "chunks_kept": counters.get("chunks_kept", 0),
                         "n_docs": int(stats["n_docs"]),
                         "ms": round(dt, 1),
                     }

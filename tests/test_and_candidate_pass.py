@@ -1,4 +1,4 @@
-"""The conjunctive candidate pass (query_exec.and_candidate_pass) on
+"""The conjunctive candidate pass (query_exec.candidate_pass) on
 edge inputs.  Single-query, batch and facet AND each run it engaged
 (and_prune=True, or the skippable floor forced to 0) and must equal
 both their unpruned run and the spec oracle (CorpusOracle): a
@@ -46,14 +46,14 @@ def env(spark, tmp_path_factory):
 def engaged_spy(monkeypatch):
     """Force the AND floor to 0 and count candidate passes."""
     calls = []
-    real = qe.and_candidate_pass
+    real = qe.candidate_pass
 
     def spy(*a, **kw):
         calls.append(1)
         return real(*a, **kw)
 
-    monkeypatch.setattr(qe, "and_candidate_pass", spy)
-    monkeypatch.setattr(qb, "and_candidate_pass", spy)
+    monkeypatch.setattr(qe, "candidate_pass", spy)
+    monkeypatch.setattr(qb, "candidate_pass", spy)
     monkeypatch.setattr(qe, "AND_PRUNE_MIN_SKIPPABLE", 0)
     return calls
 

@@ -200,14 +200,14 @@ def test_and_candidate_path_forced_equals_unpruned(spark, env, monkeypatch):
     from invertedindexbuilder_spark.operators import query_exec as qe
 
     calls = []
-    real = qe.and_candidate_pass
+    real = qe.candidate_pass
 
     def spy(*a, **kw):
         calls.append(1)
         return real(*a, **kw)
 
     want = _expect([d for d in range(90) if d % 6 == 0])
-    monkeypatch.setattr(qe, "and_candidate_pass", spy)
+    monkeypatch.setattr(qe, "candidate_pass", spy)
     monkeypatch.setattr(qe, "AND_PRUNE_MIN_SKIPPABLE", 0)
     pruned = facet_counts(
         spark, env["chunks"], env["facets"], "data join",

@@ -124,22 +124,21 @@ def test_bucketed_docs_join_shuffles_only_the_decoded_side(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS docs_bucketed_test")
 
 
-def test_or_ioprune_pushes_scan_filters(spark, tmp_path):
-    """r7 two-phase OR prune plan contract: (a) the surviving-chunk
-    In-list reaches the heavy payload scan's PushedFilters (skipped
-    chunks are skipped READS), and (b) the candidate-only branch's
-    scoring tail narrows the docs scan with a pushed doc_id In-list and
-    broadcast-joins the bounded decoded frame (no corpus-scale doc_len
-    shuffle)."""
-    from invertedindexbuilder_spark.operators.query_exec import (
-        topk_bm25_chunked,
-    )
+def test_or_ioprune_pushes_scan_filters(spark, tmp_path, monkeypatch):
+    """OR candidate pass plan contract, for either IDF sign of the
+    heavy list: (a) the surviving-chunk In-list reaches the heavy
+    candidate scan's PushedFilters (skipped chunks are skipped READS),
+    and (b) once the bound check passes, every surviving posting row
+    and candidate doc_len is already on the driver, so the returned
+    frame reads LOCAL relations only — no parquet scan at all and no
+    corpus-scale doc_len shuffle."""
+    from invertedindexbuilder_spark.operators import query_exec as qe
 
     rows = []
     for d in range(4000):
-        if d % 2 == 0:  # df = N/2: idf == 0 -> the sound cand-only
-            rows.append(("stopneg", d, 1 + d % 3))  # branch engages
-        if d % 4 == 0:  # df = N/4: idf > 0 -> the one-pass ub branch
+        if d % 2 == 0:  # df = N/2: idf == 0
+            rows.append(("stopneg", d, 1 + d % 3))
+        if d % 4 == 0:  # df = N/4: idf > 0
             rows.append(("stoppos", d, 1 + d % 3))
         if d % 400 == 7:
             rows.append(("needle", d, 2))  # df 10, scattered, idf > 0
@@ -155,28 +154,66 @@ def test_or_ioprune_pushes_scan_filters(spark, tmp_path):
     docs = spark.read.parquet(str(tmp_path / "docs"))
     stats = {"n_docs": 4000, "sum_doc_len": sum(50 + d % 9 for d in range(4000)),
              "min_doc_len": 50}
-    # positive-IDF heavy: the returned frame still holds the heavy
-    # scan, so the surviving-chunk In-list is visible in its plan
-    pos = topk_bm25_chunked(
-        spark, chunks, docs, stats, "needle stoppos", mode="or", k=10,
-        or_prune=True, heavy_df=64,
+
+    heavy_scans = []
+    real = qe.decode_candidate_blocks
+
+    def spy(matched, *a, **kw):
+        heavy_scans.append(_plan(matched))
+        return real(matched, *a, **kw)
+
+    monkeypatch.setattr(qe, "decode_candidate_blocks", spy)
+    for heavy in ("stoppos", "stopneg"):
+        heavy_scans.clear()
+        res = qe.topk_bm25_chunked(
+            spark, chunks, docs, stats, f"needle {heavy}", mode="or", k=10,
+            or_prune=True, heavy_df=64,
+        )
+        [scan] = heavy_scans
+        assert re.search(r"PushedFilters: \[[^\]]*In\(first_doc_id", scan), scan
+        plan = _plan(res)
+        assert "LocalTableScan" in plan, plan
+        assert "Scan parquet" not in plan, plan
+        assert "SortMergeJoin" not in plan, plan
+        assert len(res.collect()) == 10
+
+
+def test_and_doc_range_bound_is_two_sided(spark, tmp_path):
+    """A non-engaged AND bounds its chunk scan by the rarest list's doc
+    range on BOTH sides: chunks past its last doc and chunks before its
+    first doc leave the plan before the decode.  Results equal the spec
+    oracle."""
+    from invertedindexbuilder_spark.catalog import Catalog
+    from invertedindexbuilder_spark.operators.query_exec import (
+        tokenize_query,
+        topk_bm25_chunked,
     )
-    plan = _plan(pos)
-    assert re.search(r"PushedFilters: \[[^\]]*In\(first_doc_id", plan), plan
-    # negative-IDF heavy (r8 driver-local finish): after the bound
-    # check, every surviving posting row and candidate doc_len is
-    # already on the driver, so the returned frame's scoring tail must
-    # read LOCAL relations only — no parquet scan at all (the r7
-    # contract was a candidate-In-pushed docs scan; r8 removes even
-    # that read) and no corpus-scale doc_len shuffle
-    neg = topk_bm25_chunked(
-        spark, chunks, docs, stats, "needle stopneg", mode="or", k=10,
-        or_prune=True, heavy_df=64,
+    from invertedindexbuilder_spark.plans.build import build, load_stats
+    from invertedindexbuilder_spark.sources.docs_src import synthetic_docs_src
+
+    from tests.oracle_util import CorpusOracle
+
+    out = str(tmp_path / "idx")
+    build(spark, synthetic_docs_src(spark, 400), out, merged=False)
+    cat = Catalog(spark, out)
+    oracle = CorpusOracle(400)
+    query = "hello common"
+    rare = sorted(oracle.postings["hello"])
+    assert 0 < rare[0] and rare[-1] < 399
+    res = topk_bm25_chunked(
+        spark, cat.read("index_chunks"), cat.read("docs"),
+        load_stats(spark, out), query, mode="and", k=10, and_prune=False,
     )
-    plan = _plan(neg)
-    assert "LocalTableScan" in plan, plan
-    assert "Scan parquet" not in plan, plan
-    assert "SortMergeJoin" not in plan, plan
+    plan = _plan(res)
+    assert "(first_doc_id#" in plan and f"<= {rare[-1]})" in plan, plan
+    assert re.search(
+        rf"element_at\(last_doc_ids#\d+, -1[^)]*\) >= {rare[0]}\)", plan
+    ), plan
+    got = [(r["doc_id"], r["score"]) for r in res.collect()]
+    want = oracle.topk(tokenize_query(query), "and", 10)
+    assert [d for d, _ in got] == [d for d, _ in want]
+    for (_, gs), (_, ws) in zip(got, want):
+        assert gs == pytest.approx(ws, rel=1e-9, abs=1e-12)
 
 
 def test_chunk_table_files_are_term_clustered(spark, tmp_path):

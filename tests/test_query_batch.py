@@ -128,13 +128,13 @@ def test_batch_and_candidate_prune_forced_equals_unpruned(
     qdf = spark.createDataFrame(queries, "query_id long, text string")
 
     calls = []
-    real = qb.and_candidate_pass
+    real = qb.candidate_pass
 
     def spy(*a, **kw):
         calls.append(1)
         return real(*a, **kw)
 
-    monkeypatch.setattr(qb, "and_candidate_pass", spy)
+    monkeypatch.setattr(qb, "candidate_pass", spy)
 
     def run():
         out = qb.topk_bm25_batch(

@@ -98,7 +98,7 @@ def test_spark_cli_explain_reports_what_ran(
     spark, root, mode, force, monkeypatch, capsys
 ):
     """--spark --explain prints one JSON line per query whose
-    prune_engaged says whether a block-pruning decoder ran.  On this
+    prune_engaged says whether the candidate decoder ran.  On this
     small build a forced AND takes the candidate pass; OR has no heavy
     list, so even a forced OR decodes in full."""
     import json
@@ -106,13 +106,13 @@ def test_spark_cli_explain_reports_what_ran(
     from invertedindexbuilder_spark.operators import query_exec as qe
 
     ran = []
-    real = qe._decode_kept_blocks
+    real = qe.decode_candidate_blocks
 
     def spy(*a, **kw):
         ran.append(1)
         return real(*a, **kw)
 
-    monkeypatch.setattr(qe, "_decode_kept_blocks", spy)
+    monkeypatch.setattr(qe, "decode_candidate_blocks", spy)
     monkeypatch.setattr(
         sys, "argv",
         ["query_cli.py", "--index", root, "--spark", "--mode", mode,
@@ -133,3 +133,5 @@ def test_spark_cli_explain_reports_what_ran(
     assert rec["prune_engaged"] == bool(ran)
     assert rec["prune_engaged"] == (force and mode == "and")
     assert rec["blocks_skipped"] == rec["blocks_total"] - rec["blocks_decoded"]
+    # too few chunks for the scan filter: it does not run
+    assert rec["chunks_total"] == rec["chunks_kept"] == 0
