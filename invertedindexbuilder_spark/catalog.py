@@ -22,8 +22,11 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
+
+from invertedindexbuilder_spark.schemas import TABLE_SCHEMAS
 
 _POINTER_FILE = "tables.json"
 
@@ -158,9 +161,18 @@ class Catalog:
         return self.spark.table(name)
 
     def read(self, name: str) -> DataFrame:
+        """Logical table ``name``, or one generation dir of it
+        (``index_chunks.g3``).  The engine's own tables are read with
+        their declared schema (schemas.TABLE_SCHEMAS): no footer-
+        inference job, and a column an older table lacks reads as
+        null."""
         if self.iceberg:
             return self.spark.read.table(f"{self.iceberg}.{name}")
-        return self.spark.read.parquet(self.path(name))
+        reader = self.spark.read
+        schema = TABLE_SCHEMAS.get(re.sub(r"\.g\d+$", "", name))
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(self.path(name))
 
     def exists(self, name: str) -> bool:
         if self.iceberg:

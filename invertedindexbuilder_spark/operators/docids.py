@@ -13,13 +13,13 @@ between re-runs (resumability).
 
 Implementation: one range-repartition shuffle on the sort key, a tiny
 per-partition count aggregation, driver-side prefix sums, then a
-narrow Arrow-batched pass adding ``offset[pid] + local_rank``.  This
-avoids the classic ``row_number() OVER ()`` single-partition trap.
+narrow JVM projection adding ``offset[pid] + local_rank``.  This
+avoids the classic ``row_number() OVER ()`` single-partition trap, and
+no Python task runs.
 """
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -145,26 +145,22 @@ def _assign(
     }
     # RangePartitioner orders partitions by key range, so prefix sums over
     # pid give each partition's starting global rank.
-    offsets: dict[int, int] = {}
+    offsets = []
     acc = 0
     for pid in range(num_partitions):
-        offsets[pid] = acc
+        offsets.append(acc)
         acc += counts.get(pid, 0)
 
-    out_schema = df.schema.add("doc_id", "long", False)
-
-    def add_ids(batches):
-        next_id = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if next_id is None:
-                next_id = offsets[int(pdf["_pid"].iloc[0])]
-            n = len(pdf)
-            pdf = pdf.drop(columns=["_pid"])
-            pdf["doc_id"] = np.arange(next_id, next_id + n, dtype=np.int64)
-            next_id += n
-            yield pdf
-
-    result = ranged.mapInPandas(add_ids, schema=out_schema)
+    # local rank = the row's position in its sorted partition:
+    # monotonically_increasing_id() is (partition index << 33) + row
+    # position, and the projection is narrow over the persisted ranged
+    # partitions, so its partition index is the _pid they were counted
+    # under
+    local_rank = F.monotonically_increasing_id() - F.shiftleft(
+        F.spark_partition_id().cast("long"), 33
+    )
+    doc_id = F.element_at(
+        F.array(*[F.lit(o).cast("long") for o in offsets]), F.col("_pid") + 1
+    ) + local_rank
+    result = ranged.select(*df.columns, doc_id.cast("long").alias("doc_id"))
     return result, acc

@@ -93,6 +93,28 @@ def _resolve_from_tdf(
     return salt_threshold, chunk_blocks, heavy
 
 
+def salting_floor_policy(
+    n_docs: int, salt_threshold: int | None, chunk_blocks: int | None
+):
+    """The salting policy of a corpus too small for any term to be
+    heavy, or None when the corpus is large enough to need resolving.
+
+    A term's df is at most ``n_docs`` (a sampled estimate too: count x
+    n_docs / n_sample), and every resolved threshold is at least the
+    floor — ``MIN_SALT_THRESHOLD``, or the caller's ``salt_threshold``
+    as given.  So with ``n_docs`` <= the floor no term is heavy, and
+    the resolution's sample, tokenize and count jobs can be skipped:
+    heavy is ``[]``, the floor is the threshold that applied, and the
+    chunk rows are the ones a resolved policy gives (``chunk_blocks``
+    only shapes heavy terms).  The one rule for build and fold."""
+    floor = MIN_SALT_THRESHOLD if salt_threshold is None else salt_threshold
+    if n_docs > floor:
+        return None
+    if chunk_blocks is None:
+        chunk_blocks = max(64, floor // BLOCK_SIZE)
+    return floor, chunk_blocks, []
+
+
 def resolve_salting(
     postings: DataFrame,
     num_partitions: int,
@@ -215,10 +237,16 @@ def encode_chunks(
     heavy: list[str] | None = None,
     spill_postings: int = SPILL_POSTINGS,
 ) -> DataFrame:
-    """postings -> INDEX_CHUNK rows (salt=0 single chunk for light terms)."""
-    spark = postings.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    """postings -> INDEX_CHUNK rows (salt=0 single chunk for light terms).
+
+    Partition sizing: an explicit ``num_partitions`` fixes the encode
+    shuffle's partition count (the build passes its partition target,
+    so its encode keeps one task per core however small the corpus).
+    Without it the shuffle is keyed on (term, salt) alone and AQE
+    coalesces its partitions to the advisory size: a small fold delta
+    encodes in one Python task instead of a wave of near-empty ones,
+    and lands in one file.  Chunk rows are the same either way — every
+    (term, salt) run is whole within one partition."""
     if heavy is None:
         heavy = heavy_terms(postings, salt_threshold)
 
@@ -239,8 +267,11 @@ def encode_chunks(
     # sortWithinPartitions provides.  repartitionByRange would sample
     # its child for boundaries — re-executing the whole scan+tokenize
     # lineage a second time (observed: a duplicate 64-task stage).
-    ranged = salted.repartition(
-        num_partitions, F.col("term"), F.col("salt")
+    keys = [F.col("term"), F.col("salt")]
+    ranged = (
+        salted.repartition(*keys)
+        if num_partitions is None
+        else salted.repartition(num_partitions, *keys)
     ).sortWithinPartitions("term", "salt", "doc_id")
 
     def encoder(batches):
@@ -595,6 +626,7 @@ def compact_chunks(
     num_partitions: int | None = None,
     salt_threshold: int | None = None,
     chunk_blocks: int | None = None,
+    n_delta_docs: int | None = None,
 ) -> DataFrame:
     """Incremental index maintenance: fold a postings DELTA (new docs,
     doc_ids strictly greater than every already-indexed doc) into an
@@ -612,13 +644,23 @@ def compact_chunks(
     folds its micro-batch deltas through — old data is never touched,
     which at 100 TB is the difference between an hourly compaction and
     a full re-shuffle of the corpus.
+
+    ``n_delta_docs``: the delta's document count, when the caller knows
+    it; a delta no larger than the salting floor skips the skew
+    resolution (:func:`salting_floor_policy`).
     """
-    spark = delta_postings.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if salt_threshold is None:
+    policy = (
+        None if n_delta_docs is None
+        else salting_floor_policy(n_delta_docs, salt_threshold, chunk_blocks)
+    )
+    if policy is not None:
+        salt_threshold, chunk_blocks, heavy = policy
+    elif salt_threshold is None:
+        par = num_partitions or int(
+            delta_postings.sparkSession.conf.get("spark.sql.shuffle.partitions")
+        )
         salt_threshold, chunk_blocks, heavy = resolve_salting(
-            delta_postings, num_partitions, salt_threshold, chunk_blocks
+            delta_postings, par, salt_threshold, chunk_blocks
         )
     else:
         if chunk_blocks is None:

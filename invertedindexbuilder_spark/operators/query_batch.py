@@ -51,6 +51,7 @@ from invertedindexbuilder_spark.operators.query_exec import (
     lookup_chunk_rows,
     tokenize_query,
 )
+from invertedindexbuilder_spark.session import local_frame
 
 _QKEYS_SCHEMA = "query_id long, key string, weight int"
 
@@ -124,8 +125,10 @@ def topk_bm25_batch(
     qk_rows = qkeys.collect()
     distinct_keys = {r["key"]: 1 for r in qk_rows}
     if not distinct_keys:
-        return spark.createDataFrame(
-            [], schema="query_id long, doc_id long, score double, rank int"
+        return local_frame(
+            spark,
+            {"query_id": [], "doc_id": [], "score": [], "rank": []},
+            "query_id long, doc_id long, score double, rank int",
         )
     # the single-query metadata lookup: ONE payload-free collect
     # derives collision winners + per-key stats on the driver and joins
@@ -172,9 +175,13 @@ def topk_bm25_batch(
         # count = distinct keys that matched at least one chunk row,
         # already on the driver from the lookup metadata (pre-decode),
         # so the decode pipeline runs exactly once
-        found = spark.createDataFrame(
-            [(q, len(ks)) for q, ks in by_q.items()],
-            schema="query_id long, _need long",
+        found = local_frame(
+            spark,
+            {
+                "query_id": list(by_q),
+                "_need": [len(ks) for ks in by_q.values()],
+            },
+            "query_id long, _need long",
         )
         agg = agg.join(F.broadcast(found), "query_id").filter(
             F.col("_nk") == F.col("_need")

@@ -62,6 +62,7 @@ from invertedindexbuilder_spark.functions.compress import (
     decode_blocks_pruned,
     decode_blocks_selected,
 )
+from invertedindexbuilder_spark.session import local_frame
 
 _QUERY_TOKEN_RE = re.compile(r"[A-Za-z0-9]+")
 
@@ -357,9 +358,7 @@ def _doc_lens_for(
         )
         rows = src.collect()
     else:
-        ids_df = docs.sparkSession.createDataFrame(
-            [(int(x),) for x in ids], "doc_id long"
-        )
+        ids_df = local_frame(docs.sparkSession, {"doc_id": ids}, "doc_id long")
         rows = base.join(F.broadcast(ids_df), "doc_id").collect()
     return {r["doc_id"]: float(r["doc_len"]) for r in rows}
 
@@ -554,21 +553,16 @@ def _local_postings(spark: SparkSession, rows: list) -> DataFrame:
     local relation, so a plan that finishes over them re-reads no
     chunk."""
     n = len(rows)
-    return spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "key": [r["key"] for r in rows],
-                "df": np.fromiter((r["df"] for r in rows), np.int64, count=n),
-                "weight": np.fromiter(
-                    (r["weight"] for r in rows), np.int32, count=n
-                ),
-                "doc_id": np.fromiter(
-                    (r["doc_id"] for r in rows), np.int64, count=n
-                ),
-                "tf": np.fromiter((r["tf"] for r in rows), np.int64, count=n),
-            }
-        ),
-        schema=_DECODED_SCHEMA,
+    return local_frame(
+        spark,
+        {
+            "key": [r["key"] for r in rows],
+            "df": np.fromiter((r["df"] for r in rows), np.int64, count=n),
+            "weight": np.fromiter((r["weight"] for r in rows), np.int32, count=n),
+            "doc_id": np.fromiter((r["doc_id"] for r in rows), np.int64, count=n),
+            "tf": np.fromiter((r["tf"] for r in rows), np.int64, count=n),
+        },
+        _DECODED_SCHEMA,
     )
 
 
@@ -576,16 +570,13 @@ def _local_doc_lens(spark: SparkSession, dl_map: dict[int, float]) -> DataFrame:
     """A :func:`_doc_lens_for` map as a (doc_id, doc_len) local relation.
     doc_len is a double holding exactly the source values: the scorer
     casts a long doc_len to double anyway, so scores are bit-identical."""
-    return spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": np.fromiter(dl_map.keys(), np.int64, count=len(dl_map)),
-                "doc_len": np.fromiter(
-                    dl_map.values(), np.float64, count=len(dl_map)
-                ),
-            }
-        ),
-        schema="doc_id long, doc_len double",
+    return local_frame(
+        spark,
+        {
+            "doc_id": np.fromiter(dl_map.keys(), np.int64, count=len(dl_map)),
+            "doc_len": np.fromiter(dl_map.values(), np.float64, count=len(dl_map)),
+        },
+        "doc_id long, doc_len double",
     )
 
 
@@ -876,7 +867,9 @@ def topk_bm25_chunked(
     if mode == "and":
         n_keys = len(winners)
         if n_keys == 0:
-            return spark.createDataFrame([], schema="doc_id long, score double")
+            return local_frame(
+                spark, {"doc_id": [], "score": []}, "doc_id long, score double"
+            )
         rare_key, rare = min(
             winners.items(), key=lambda kv: kv[1]["term_df"]
         )
@@ -914,7 +907,9 @@ def topk_bm25_chunked(
         # candidate must clear the bound by half a rounding quantum, or
         # a non-candidate could round into a tie and win the doc_id
         # tiebreak.
-        min_dl = float(stats.get("min_doc_len", 1.0))
+        # a stats table older than min_doc_len reads it as null
+        min_dl = stats.get("min_doc_len")
+        min_dl = 1.0 if min_dl is None else float(min_dl)
         bound = sum(
             _full_list_ub(
                 float(winners[t]["mt"]), winners[t]["term_df"],

@@ -40,11 +40,13 @@ from invertedindexbuilder_spark.operators.index_build import (
     merge_chunks,
     resolve_salting,
     resolve_salting_sampled,
+    salting_floor_policy,
 )
 from invertedindexbuilder_spark.operators.postings import (
     build_postings,
     build_postings_jvm,
 )
+from invertedindexbuilder_spark.session import local_frame
 from invertedindexbuilder_spark.sources.docs_src import with_url
 
 
@@ -319,7 +321,12 @@ def build(
         and (not merged or cat.exists("index"))
     )
     if not index_done:
-        if checkpoint_postings:
+        # a corpus no larger than the salting floor has no heavy term:
+        # no sample, no count (the rule compact's fold uses too)
+        policy = salting_floor_policy(n_docs, salt_threshold, chunk_blocks)
+        if policy is not None:
+            eff_threshold, eff_chunk_blocks, heavy = policy
+        elif checkpoint_postings:
             # postings are materialized: exact skew detection is cheap
             eff_threshold, eff_chunk_blocks, heavy = resolve_salting(
                 postings, min_par, salt_threshold, chunk_blocks
@@ -333,7 +340,8 @@ def build(
             )
         chunks = encode_chunks(
             postings,
-            num_partitions=num_partitions,
+            # explicit: one encode task per core whatever the corpus size
+            num_partitions=min_par,
             salt_threshold=eff_threshold,
             chunk_blocks=eff_chunk_blocks,
             heavy=heavy,
@@ -429,21 +437,10 @@ def build(
                 F.sum("df").alias("postings"),
             ).collect()[0]
             iph = {"terms": i["terms"], "postings": i["postings"]}
-        stats_df = spark.createDataFrame(
-            [
-                (
-                    int(dph["rows"]),
-                    int(dph["sum_doc_len"]),
-                    int(iph["terms"]),
-                    int(iph["postings"]),
-                    # min_doc_len: the doc_len floor of the OR
-                    # candidate pass's heavy-list bound (query_exec)
-                    int(dph["min_doc_len"]),
-                )
-            ],
-            schema=_STATS_SCHEMA,
+        _write_stats(
+            spark, cat, int(dph["rows"]), int(dph["sum_doc_len"]), iph,
+            int(dph["min_doc_len"]),
         )
-        cat.write(stats_df, "stats")
         manifest.record("stats", fp, {"wall_s": round(time.time() - t0, 3)})
 
     return manifest.data
@@ -562,13 +559,20 @@ def build_search_tables(
     ).collect()[0]
     counts["n_docs"] = int(dstat["n"])
     cat.write(
-        spark.createDataFrame(
-            [(counts["n_docs"], max_dist, int(dstat["mx"]))],
-            "n_docs long, max_dist int, max_doc_id long",
-        ),
+        _search_stats_frame(spark, counts["n_docs"], max_dist, int(dstat["mx"])),
         "search_stats",
     )
     return counts
+
+
+def _search_stats_frame(
+    spark: SparkSession, n_docs: int, max_dist: int, max_doc_id: int
+) -> DataFrame:
+    return local_frame(
+        spark,
+        {"n_docs": [n_docs], "max_dist": [max_dist], "max_doc_id": [max_doc_id]},
+        "n_docs long, max_dist int, max_doc_id long",
+    )
 
 
 def compact_search_tables(
@@ -701,9 +705,8 @@ def compact_search_tables(
     counts["n_docs_delta"] = delta_docs.select(id_col).distinct().count()
     counts["n_docs"] = n_docs_old + counts["n_docs_delta"]
     phys_stats = f"search_stats.g{gen}"
-    spark.createDataFrame(
-        [(counts["n_docs"], max_dist, max(stored_max, delta_max))],
-        "n_docs long, max_dist int, max_doc_id long",
+    _search_stats_frame(
+        spark, counts["n_docs"], max_dist, max(stored_max, delta_max)
     ).write.mode("overwrite").parquet(os.path.join(out_root, phys_stats))
     orphans = cat.publish(
         {"term_dfs": phys_dfs, "search_stats": phys_stats}
@@ -770,6 +773,24 @@ def compact(
     required for the docs-table append (doc_len / sha256 / url come
     from content).
 
+    What a fold runs (parquet backend), each step sized to the delta
+    except where noted:
+
+    - ``load_stats`` and one validation action (orphans, replay and
+      in-delta duplicates grouped together over the docs and delta
+      keys — O(docs) keys, like the replay check must be);
+    - the delta's doc ids (one range shuffle of its keys, ranked in the
+      JVM) and the docs append;
+    - one aggregate over the appended rows: count, doc_len sum and min,
+      and the key fingerprint recorded in the manifest;
+    - the delta tokenize and encode.  A delta with no more docs than the
+      salting floor has no heavy term, so no skew-resolution job runs,
+      and without ``num_partitions`` AQE coalesces the encode shuffle
+      (one Python task and one file for a small delta);
+    - the rewrite of ``index_chunks`` into a new generation (O(index)),
+      one metadata aggregate over it for ``n_terms``/``n_postings``,
+      the stats row as a local relation, and one pointer flip.
+
     Durability (parquet backend): every rewritten table — index_chunks,
     index, AND stats — is written to a fresh ``<name>.g<N>`` generation
     directory and then published with ONE atomic ``os.replace`` of
@@ -802,10 +823,8 @@ def compact(
     t0 = time.time()
     journal = manifest.data.get("compact_journal")
     if validate:
-        orphans_exist = bool(
-            cat.read("docs").filter(F.col("doc_id") >= n_old).limit(1).count()
-        )
-        if orphans_exist:
+        check = _delta_checks(cat.read("docs"), delta_src, n_old)
+        if check["orphans"]:
             # stats/index/chunks publish atomically TOGETHER (one
             # tables.json flip), so docs rows beyond stats.n_docs can
             # only mean a crash BEFORE the flip: the published view
@@ -824,24 +843,12 @@ def compact(
             # and crashed before clearing bookkeeping — safe to clear
             manifest.clear_journal()
             journal = None
-        dup = (
-            delta_src.select(*SORT_KEYS)
-            .join(cat.read("docs").select(*SORT_KEYS), SORT_KEYS, "left_semi")
-            .limit(1)
-            .count()
-        )
-        if dup:
+        if check["replay"]:
             raise ValueError(
                 "delta contains keys already present in the docs table "
                 "(replayed or overlapping delta)"
             )
-        if (
-            delta_src.groupBy(*SORT_KEYS)
-            .count()
-            .filter(F.col("count") > 1)
-            .limit(1)
-            .count()
-        ):
+        if check["dup"]:
             raise ValueError(
                 "delta contains duplicate (repo, path, commit) keys — "
                 "the id-map join would fan out and double-count postings"
@@ -873,6 +880,7 @@ def compact(
         F.count("*").alias("n"),
         F.sum("doc_len").alias("sdl"),
         F.min("doc_len").alias("mdl"),
+        F.bit_xor(F.xxhash64(*SORT_KEYS)).alias("h"),
     ).collect()[0]
     n_delta = int(dagg["n"])
     if n_delta == 0:
@@ -931,9 +939,10 @@ def compact(
         if delta_tok.rdd.getNumPartitions() < delta_par:
             delta_tok = delta_tok.repartition(delta_par)
         tokenize = build_postings_jvm if tokenizer == "jvm" else build_postings
-        # persist: with adaptive salting, compact_chunks runs two skew-
-        # detection collects before the encode shuffle — unpersisted,
-        # each would re-execute the delta tokenize
+        # persist: when the delta is larger than the salting floor,
+        # compact_chunks runs two skew-detection collects before the
+        # encode shuffle — unpersisted, each would re-execute the delta
+        # tokenize
         postings = tokenize(delta_tok).persist()
 
     # ---- new generation: old chunks pass through untouched ----
@@ -943,6 +952,7 @@ def compact(
         num_partitions=num_partitions,
         salt_threshold=salt_threshold,
         chunk_blocks=chunk_blocks,
+        n_delta_docs=n_delta,
     )
 
     if cat.iceberg:
@@ -973,7 +983,7 @@ def compact(
         cat.write(new_chunks, chunks_phys,
                   row_group_bytes=CHUNK_ROW_GROUP_BYTES)
         postings.unpersist()
-        new_chunks_tbl = spark.read.parquet(cat.path(chunks_phys))
+        new_chunks_tbl = cat.read(chunks_phys)
         publish_map = {"index_chunks": chunks_phys}
         if has_merged:
             index_phys = f"index.g{gen}"
@@ -1001,7 +1011,10 @@ def compact(
             shutil.rmtree(d, ignore_errors=True)
 
     # ---- manifest bookkeeping ----
-    fp = _fingerprint(docs_tbl, SORT_KEYS)
+    # the delta's own fingerprint, from the delta aggregate above: no
+    # O(docs) pass (nothing reads it back; build's resume reads only
+    # the docs phase's)
+    fp = f"n={n_delta},h={dagg['h']}"
     manifest.data["generation"] = gen
     manifest.record(
         "compact",
@@ -1016,6 +1029,37 @@ def compact(
     )
     manifest.clear_journal()
     return manifest.data
+
+
+def _delta_checks(docs: DataFrame, delta_src: DataFrame, n_old: int):
+    """compact()'s three validation checks as ONE action over the docs
+    keys and the delta keys grouped together: ``orphans`` (docs rows at
+    doc_id >= n_old, left by a compact that crashed before its
+    publish), ``replay`` (a delta key already in the docs table) and
+    ``dup`` (a key twice within the delta)."""
+    keys = (
+        docs.select(
+            *SORT_KEYS,
+            (F.col("doc_id") >= n_old).alias("_orphan"),
+            F.lit(0).alias("_new"),
+        )
+        .unionByName(
+            delta_src.select(
+                *SORT_KEYS, F.lit(False).alias("_orphan"), F.lit(1).alias("_new")
+            )
+        )
+        .groupBy(*SORT_KEYS)
+        .agg(
+            F.max("_orphan").alias("_orphan"),
+            F.sum("_new").alias("_new"),
+            F.count("*").alias("_n"),
+        )
+    )
+    return keys.agg(
+        F.max("_orphan").alias("orphans"),
+        F.max((F.col("_new") > 0) & (F.col("_n") > F.col("_new"))).alias("replay"),
+        F.max(F.col("_new") > 1).alias("dup"),
+    ).collect()[0]
 
 
 def merge_builds(
@@ -1128,9 +1172,18 @@ def _write_stats(
     min_doc_len: int,
     table: str = "stats",
 ) -> None:
-    stats_df = spark.createDataFrame(
-        [(n_docs, sum_doc_len, int(m["terms"]), int(m["postings"]),
-          int(min_doc_len))],
-        schema=_STATS_SCHEMA,
+    """The one-row stats table.  ``m``: the index metrics (``terms``,
+    ``postings``).  min_doc_len is the doc_len floor of the OR
+    candidate pass's heavy-list bound (query_exec)."""
+    stats_df = local_frame(
+        spark,
+        {
+            "n_docs": [int(n_docs)],
+            "sum_doc_len": [int(sum_doc_len)],
+            "n_terms": [int(m["terms"])],
+            "n_postings": [int(m["postings"])],
+            "min_doc_len": [int(min_doc_len)],
+        },
+        _STATS_SCHEMA,
     )
     cat.write(stats_df, table)

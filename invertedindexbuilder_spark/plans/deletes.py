@@ -57,9 +57,11 @@ from invertedindexbuilder_spark.plans.build import (
     CHUNK_ROW_GROUP_BYTES,
     SEARCH_TABLES,
     BuildManifest,
+    _search_stats_frame,
     _write_stats,
     load_stats,
 )
+from invertedindexbuilder_spark.session import local_frame
 
 TOMBSTONES = "deleted_docs"
 
@@ -73,8 +75,8 @@ def _ids_frame(spark: SparkSession, doc_ids) -> DataFrame:
     if isinstance(doc_ids, DataFrame):
         return doc_ids.select(F.col("doc_id").cast("long"))
     if isinstance(doc_ids, Iterable):
-        return spark.createDataFrame(
-            [(int(i),) for i in doc_ids], schema="doc_id long"
+        return local_frame(
+            spark, {"doc_id": [int(i) for i in doc_ids]}, "doc_id long"
         )
     raise TypeError(f"doc_ids must be a DataFrame or iterable, got {type(doc_ids)}")
 
@@ -133,7 +135,7 @@ def delete_docs(
     gen = _next_gen(cat, manifest)
     phys = f"{TOMBSTONES}.g{gen}"
     cat.write(ids, phys)
-    total = int(spark.read.parquet(cat.path(phys)).count())
+    total = int(cat.read(phys).count())
     orphans = cat.publish({TOMBSTONES: phys})
     manifest.data["generation"] = gen
     manifest.record(
@@ -235,7 +237,7 @@ def purge_deletes(
     new_docs = survivors.withColumn("doc_id", remap(F.col("doc_id")))
     docs_phys = f"docs.g{gen}"
     cat.write(new_docs, docs_phys)
-    new_docs_tbl = spark.read.parquet(cat.path(docs_phys))
+    new_docs_tbl = cat.read(docs_phys)
     dagg = new_docs_tbl.agg(
         F.count("*").alias("n"),
         F.sum("doc_len").alias("sdl"),
@@ -273,7 +275,7 @@ def purge_deletes(
     chunks_phys = f"index_chunks.g{gen}"
     cat.write(purge_chunks(cat.read("index_chunks"), deleted),
               chunks_phys, row_group_bytes=CHUNK_ROW_GROUP_BYTES)
-    new_chunks_tbl = spark.read.parquet(cat.path(chunks_phys))
+    new_chunks_tbl = cat.read(chunks_phys)
     publish_map = {
         "docs": docs_phys, "id_remap": remap_phys, "index_chunks": chunks_phys,
     }
@@ -325,12 +327,12 @@ def purge_deletes(
         dt_phys = f"doc_terms.g{gen}"
         cat.write(_range_sorted(dt, "t", "doc_id", partition=partition), dt_phys)
         publish_map["doc_terms"] = dt_phys
-        dfs_new = term_dfs(spark.read.parquet(cat.path(dt_phys)))
+        dfs_new = term_dfs(cat.read(dt_phys))
         dfs_phys = f"term_dfs.g{gen}"
         cat.write(_range_sorted(dfs_new, "t", partition=partition), dfs_phys)
         publish_map["term_dfs"] = dfs_phys
         fv = cat.read("fuzzy_variants").join(
-            spark.read.parquet(cat.path(dfs_phys)).select(
+            cat.read(dfs_phys).select(
                 F.col("t").alias("term")
             ),
             "term",
@@ -344,19 +346,14 @@ def purge_deletes(
         st = cat.read("search_stats").collect()[0].asDict()
         ss_phys = f"search_stats.g{gen}"
         cat.write(
-            spark.createDataFrame(
-                [(n_new, int(st["max_dist"]), n_new - 1)],
-                "n_docs long, max_dist int, max_doc_id long",
-            ),
+            _search_stats_frame(spark, n_new, int(st["max_dist"]), n_new - 1),
             ss_phys,
         )
         publish_map["search_stats"] = ss_phys
 
     # ---- clear tombstones in the SAME flip ----
     tomb_phys = f"{TOMBSTONES}.g{gen}"
-    cat.write(
-        spark.createDataFrame([], schema="doc_id long"), tomb_phys
-    )
+    cat.write(local_frame(spark, {"doc_id": []}, "doc_id long"), tomb_phys)
     orphans = cat.publish(
         {**publish_map, "stats": stats_phys, TOMBSTONES: tomb_phys}
     )

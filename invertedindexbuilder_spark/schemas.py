@@ -16,6 +16,11 @@ otherwise):
   row per term, the reference-parity artifact for oracle runs and
   introspection; no query path reads it.
 - ``stats``    — singleton corpus aggregates used by the scorer.
+- ``deleted_docs`` — tombstoned doc ids (plans/deletes.py).
+
+``TABLE_SCHEMAS`` maps the engine's table names to these schemas:
+``catalog.Catalog.read`` passes the schema, so opening one of them
+runs no parquet footer-inference job.
 """
 
 from __future__ import annotations
@@ -95,3 +100,13 @@ STATS = T.StructType(
         T.StructField("min_doc_len", T.LongType(), False),
     ]
 )
+
+DELETED_DOCS = T.StructType([T.StructField("doc_id", T.LongType(), True)])
+
+TABLE_SCHEMAS = {
+    "docs": DOCS,
+    "index_chunks": INDEX_CHUNK,
+    "index": INDEX,
+    "stats": STATS,
+    "deleted_docs": DELETED_DOCS,
+}

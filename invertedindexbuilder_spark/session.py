@@ -1,10 +1,12 @@
-"""SparkSession factory with the engine's scale-oriented defaults."""
+"""SparkSession factory with the engine's scale-oriented defaults, and
+the one way the engine turns driver-held rows into a DataFrame."""
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def get_spark(
@@ -81,3 +83,21 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
     )
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, columns: dict, schema: str | T.StructType
+) -> DataFrame:
+    """Driver-held columns (name -> list or numpy array) as a local
+    relation: one Arrow table the JVM holds in the plan
+    (``LocalTableScan``), so building, scanning or writing it runs no
+    Python task.  ``createDataFrame(list)`` goes through an RDD of
+    pickled rows instead, one Python task per core, and a pandas frame
+    falls back to that RDD when it is empty."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if not isinstance(schema, T.StructType):
+        schema = T.StructType.fromDDL(schema)
+    table = pa.table(columns, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema=schema)

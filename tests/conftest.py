@@ -1,3 +1,4 @@
+import os
 import shutil
 
 import pytest
@@ -7,7 +8,11 @@ from invertedindexbuilder_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="iib-tests", cores=8, shuffle_partitions=8)
+    # cores: the host's, as the tier-1 command exports them (8 when
+    # unset); shuffle_partitions stays 8 whatever the core count, so
+    # tests that pin multi-task stage shapes keep them
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    s = get_spark(app_name="iib-tests", cores=cores, shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

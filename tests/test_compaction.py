@@ -339,3 +339,105 @@ def test_compact_delta_repartition_bounded_by_cores(spark, tmp_path, monkeypatch
     cores = spark.sparkContext.defaultParallelism
     assert seen, "tokenize path not exercised"
     assert all(1 <= p <= cores for p in seen), (seen, cores)
+
+
+def _jobs_run_by(spark, fn) -> int:
+    """Spark jobs ``fn`` submits, counted through the status tracker
+    under a job group of its own."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{id(fn)}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# jobs a 20-doc fold into a 200-doc chunk-only build runs: load_stats 1,
+# validation 3, delta doc ids 6, docs append 2, delta aggregate 2, delta
+# encode + chunk generation write 5, index metadata aggregate 3, stats
+# write 1, other 1; measured at 24 on 4 and 8 cores
+FOLD_JOB_BUDGET = 24
+
+
+def test_small_fold_job_budget(spark, tmp_path):
+    """The fold's job diet: a small delta runs no salting resolution,
+    one validation action, no docs fingerprint pass and no schema-
+    inference jobs."""
+    from invertedindexbuilder_spark.plans.build import build, compact, load_stats
+    from invertedindexbuilder_spark.sources.docs_src import synthetic_docs_src
+
+    root = str(tmp_path / "idx")
+    build(spark, synthetic_docs_src(spark, 200), root, merged=False)
+    delta = synthetic_docs_src(spark, 20, start=200)
+    jobs = _jobs_run_by(spark, lambda: compact(spark, delta, root))
+    assert load_stats(spark, root)["n_docs"] == 220
+    assert jobs <= FOLD_JOB_BUDGET, jobs
+
+
+def test_salting_floor_skip_gives_resolved_chunk_rows(spark, frames, monkeypatch):
+    """A delta with no more docs than the salting floor skips the skew
+    resolution and encodes exactly the chunk rows a resolved policy
+    gives; a larger one (or a lower caller threshold) still resolves."""
+    import invertedindexbuilder_spark.operators.index_build as ib
+
+    schema = "term string, doc_id long, tf long"
+    delta = spark.createDataFrame(_postings_rows(N_OLD, N_ALL), schema)
+    old = encode_chunks(
+        spark.createDataFrame(_postings_rows(0, N_OLD), schema), heavy=[]
+    )
+    n_delta = N_ALL - N_OLD
+    assert ib.salting_floor_policy(n_delta, None, None) == (
+        ib.MIN_SALT_THRESHOLD, ib.MIN_SALT_THRESHOLD // ib.BLOCK_SIZE, []
+    )
+    assert ib.salting_floor_policy(ib.MIN_SALT_THRESHOLD + 1, None, None) is None
+    assert ib.salting_floor_policy(n_delta, 64, 1) is None  # 300 docs > 64
+
+    def rows(df):
+        return sorted(
+            (r["term"], r["salt"], r["first_doc_id"], r["df"],
+             list(r["last_doc_ids"]), list(r["block_bytes"]),
+             list(r["block_counts"]), list(r["max_tf"]), bytes(r["payload"]))
+            for r in df.collect()
+        )
+
+    resolved = rows(compact_chunks(old, delta))  # resolution forced
+    calls = []
+    real = ib.resolve_salting
+    monkeypatch.setattr(
+        ib, "resolve_salting", lambda *a, **k: calls.append(1) or real(*a, **k)
+    )
+    skipped = rows(compact_chunks(old, delta, n_delta_docs=n_delta))
+    assert not calls
+    assert skipped == resolved
+    # a caller threshold below the delta size keeps the exact counts
+    salted = compact_chunks(
+        old, delta, salt_threshold=64, chunk_blocks=1, n_delta_docs=n_delta
+    )
+    assert decoded_lists(salted) == decoded_lists(frames["compacted_chunks"])
+    assert salted.filter(F.col("salt") > 0).count() > 0
+
+
+def test_compact_stats_without_min_doc_len_falls_back(spark, tmp_path):
+    """A stats table written before min_doc_len existed reads that
+    column as null under the catalog's schema'd reads, and compact()
+    recomputes the running minimum from the old docs."""
+    from invertedindexbuilder_spark.catalog import Catalog
+    from invertedindexbuilder_spark.plans.build import build, compact, load_stats
+    from invertedindexbuilder_spark.sources.docs_src import synthetic_docs_src
+
+    root = str(tmp_path / "idx")
+    build(spark, synthetic_docs_src(spark, 120), root, merged=False)
+    cat = Catalog(spark, root)
+    old_stats = load_stats(spark, root)
+    legacy = spark.createDataFrame(
+        [tuple(old_stats[c] for c in ("n_docs", "sum_doc_len", "n_terms", "n_postings"))],
+        "n_docs long, sum_doc_len long, n_terms long, n_postings long",
+    )
+    legacy.write.mode("overwrite").parquet(cat.path("stats"))
+    assert load_stats(spark, root)["min_doc_len"] is None
+    compact(spark, synthetic_docs_src(spark, 30, start=120), root)
+    want = cat.read("docs").agg(F.min("doc_len")).collect()[0][0]
+    assert load_stats(spark, root)["min_doc_len"] == want
