@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from invertedindexbuilder_spark.session import local_frame
+
 
 def _as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -285,6 +287,17 @@ def embedding_near_dup(
 ANN_TABLES = ("ann_vectors", "ann_stats")
 
 
+def _ann_stats_frame(spark, n_vectors: int, dims: int, trained: bool,
+                     max_vec_id: int) -> DataFrame:
+    """The one-row ``ann_stats`` table as a local relation."""
+    return local_frame(
+        spark,
+        {"n_vectors": [n_vectors], "dims": [dims], "trained": [trained],
+         "max_vec_id": [max_vec_id]},
+        "n_vectors long, dims int, trained boolean, max_vec_id long",
+    )
+
+
 def build_ann_tables(
     spark,
     embeddings: DataFrame,
@@ -326,8 +339,10 @@ def build_ann_tables(
     cat.write(vecs, "ann_vectors", partition_by=["cell"])
     if centroids is not None:
         cat.write(
-            spark.createDataFrame(
-                [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
+            local_frame(
+                spark,
+                {"cell": list(range(len(centroids))),
+                 "centroid": [[float(x) for x in c] for c in centroids]},
                 "cell int, centroid array<double>",
             ),
             "ann_centroids",
@@ -336,10 +351,9 @@ def build_ann_tables(
         F.count("*").alias("n"), F.max(id_col).alias("mx")
     ).collect()[0]
     cat.write(
-        spark.createDataFrame(
-            [(int(st["n"]), dims, centroids is not None,
-              int(st["mx"]) if st["mx"] is not None else -1)],
-            "n_vectors long, dims int, trained boolean, max_vec_id long",
+        _ann_stats_frame(
+            spark, int(st["n"]), dims, centroids is not None,
+            int(st["mx"]) if st["mx"] is not None else -1,
         ),
         "ann_stats",
     )
@@ -405,10 +419,9 @@ def compact_ann_tables(
     ]
     gen = max([*referenced, 0]) + 1
     phys = f"ann_stats.g{gen}"
-    spark.createDataFrame(
-        [(int(st["n_vectors"]) + int(rng["n"]), int(st["dims"]),
-          bool(st["trained"]), int(rng["mx"]))],
-        "n_vectors long, dims int, trained boolean, max_vec_id long",
+    _ann_stats_frame(
+        spark, int(st["n_vectors"]) + int(rng["n"]), int(st["dims"]),
+        bool(st["trained"]), int(rng["mx"]),
     ).write.mode("overwrite").parquet(_os.path.join(out_root, phys))
     for o in cat.publish({"ann_stats": phys}):
         _shutil.rmtree(o, ignore_errors=True)
@@ -448,8 +461,8 @@ def delete_ann_vectors(spark, out_root: str, vec_ids, validate: bool = True) -> 
     if isinstance(vec_ids, DataFrame):
         ids = vec_ids.select(F.col("vec_id").cast("long"))
     elif isinstance(vec_ids, _Iterable):
-        ids = spark.createDataFrame(
-            [(int(i),) for i in vec_ids], schema="vec_id long"
+        ids = local_frame(
+            spark, {"vec_id": [int(i) for i in vec_ids]}, "vec_id long"
         )
     else:
         raise TypeError(f"vec_ids must be a DataFrame or iterable, got {type(vec_ids)}")
@@ -561,12 +574,12 @@ def purge_ann_deletes(spark, out_root: str) -> dict:
     ]
     gen = max([*referenced, 0]) + 1
     stats_phys = f"ann_stats.g{gen}"
-    spark.createDataFrame(
-        [(n_new, int(st["dims"]), bool(st["trained"]), int(st["max_vec_id"]))],
-        "n_vectors long, dims int, trained boolean, max_vec_id long",
+    _ann_stats_frame(
+        spark, n_new, int(st["dims"]), bool(st["trained"]),
+        int(st["max_vec_id"]),
     ).write.mode("overwrite").parquet(_os.path.join(out_root, stats_phys))
     tomb_phys = f"{ANN_TOMBSTONES}.g{gen}"
-    cat.write(spark.createDataFrame([], schema="vec_id long"), tomb_phys)
+    cat.write(local_frame(spark, {"vec_id": []}, "vec_id long"), tomb_phys)
     for o in cat.publish({"ann_stats": stats_phys, ANN_TOMBSTONES: tomb_phys}):
         _shutil.rmtree(o, ignore_errors=True)
     return {"n_purged": n_del, "n_vectors": n_new, "cells_rewritten": len(cells)}

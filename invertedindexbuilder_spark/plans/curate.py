@@ -39,6 +39,7 @@ from invertedindexbuilder_spark.operators.dedup import (
 )
 from invertedindexbuilder_spark.operators.docids import SORT_KEYS, attach_doc_ids, doc_id_map
 from invertedindexbuilder_spark.plans.build import BuildManifest, _fingerprint
+from invertedindexbuilder_spark.session import local_frame
 
 
 def _ids_with_text(docs_src: DataFrame) -> DataFrame:
@@ -137,7 +138,8 @@ def curate(
     removals = (
         removal_frames[0]
         if removal_frames
-        else spark.createDataFrame([], "doc_id long, reason string")
+        else local_frame(spark, {"doc_id": [], "reason": []},
+                         "doc_id long, reason string")
     )
     for f in removal_frames[1:]:
         removals = removals.unionByName(f)

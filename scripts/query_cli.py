@@ -10,6 +10,7 @@ line k, second line mode (0=AND, 1=OR), then one query per line.
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import sys
 import time
@@ -56,12 +57,14 @@ def main() -> int:
                          "query_exec.facet_counts; local: "
                          "local_query.facet_counts_local)")
     ap.add_argument("--explain", action="store_true",
-                    help="with --spark: print a JSON line of pruning "
-                         "evidence to stderr after each query — whether "
-                         "the candidate decoder ran, its blocks decoded "
-                         "vs total (Spark accumulators) and the chunks "
-                         "its scan filter kept vs total (0 when the "
-                         "filter did not run)")
+                    help="print a JSON line of evidence to stderr after "
+                         "each query.  With --spark: whether the "
+                         "candidate decoder ran, its blocks decoded vs "
+                         "total (Spark accumulators) and the chunks its "
+                         "scan filter kept vs total (0 when the filter "
+                         "did not run).  Local runner: query, mode, "
+                         "cached (answered from the session's result "
+                         "cache), blocks_decoded by this query and ms")
     ap.add_argument("--force-prune", action="store_true",
                     help="with --explain: force or_prune/and_prune on "
                          "below the auto floors (measurement aid)")
@@ -136,6 +139,7 @@ def main() -> int:
                 print(f"# {len(rows)} facet rows in {dt:.0f} ms",
                       file=sys.stderr)
                 return
+            hits, blocks = li.cache_hits, li.blocks_decoded
             res = topk_local(li, query, mode=mode, k=k,
                              strict=not args.no_strict,
                              apply_tombstones=not args.ignore_tombstones)
@@ -160,6 +164,14 @@ def main() -> int:
                         s, snip = best_window(row[0], tokenize_query(query))
                         print(f"    [{s}] {snip[:200]}")
             print(f"# {len(res)} results in {dt:.0f} ms", file=sys.stderr)
+            if args.explain:
+                print(json.dumps({
+                    "query": query,
+                    "mode": mode,
+                    "cached": li.cache_hits > hits,
+                    "blocks_decoded": li.blocks_decoded - blocks,
+                    "ms": round(dt, 3),
+                }), file=sys.stderr)
 
     if args.terms:
         run(" ".join(args.terms), args.mode, args.k)
@@ -344,12 +356,10 @@ def _spark_runner(args):
             print(f"{r['score']:.6f}\t{r['doc_id']}\t{r['url']}")
         print(f"# {len(rows)} results in {dt:.0f} ms", file=sys.stderr)
         if counters is not None:
-            import json as _json
-
             total = int(counters["total"].value)
             decoded = int(counters["decoded"].value)
             print(
-                _json.dumps(
+                json.dumps(
                     {
                         "query": query,
                         "mode": mode,

@@ -18,9 +18,12 @@ from invertedindexbuilder_spark.operators.local_query import (
     LocalIndex,
     topk_local,
 )
-from invertedindexbuilder_spark.operators.query_exec import topk_bm25_chunked
+from invertedindexbuilder_spark.operators.query_exec import (
+    tokenize_query,
+    topk_bm25_chunked,
+)
 
-from tests.oracle_util import decoded_lists
+from tests.oracle_util import CorpusOracle, decoded_lists
 
 N_OLD, N_ALL = 600, 900
 
@@ -122,6 +125,9 @@ def test_plan_compact_matches_full_rebuild(spark, tmp_path):
     root_c = str(tmp_path / "compacted")
     root_f = str(tmp_path / "full")
     build(spark, synthetic_docs_src(spark, 300), root_c)
+    # a session opened before the fold caches its snapshot's answer
+    before = LocalIndex(root_c)
+    cached = topk_local(before, "alpha beta", mode="and", k=100_000)
     compact(spark, synthetic_docs_src(spark, 100, start=300), root_c)
     build(spark, synthetic_docs_src(spark, 400), root_f)
 
@@ -169,6 +175,20 @@ def test_plan_compact_matches_full_rebuild(spark, tmp_path):
     assert [u for u, _ in local] == [u for u, _ in want]
     for (_, s), (_, r) in zip(local, want):
         assert abs(s - r) <= 1e-6
+    # the folded snapshot answers the query the old session had cached
+    # with its own results: the 400-doc oracle's; the old session keeps
+    # its 300-doc answer
+    oracle = CorpusOracle(400)
+    ourl = oracle.pdf.url.to_numpy()
+    want_o = sorted(
+        (ourl[d], s)
+        for d, s in oracle.topk(tokenize_query("alpha beta"), "and", 100_000)
+    )
+    assert [u for u, _ in local] == [u for u, _ in want_o]
+    for (_, s), (_, r) in zip(local, want_o):
+        assert abs(s - r) <= 1e-9 * max(1.0, abs(r))
+    assert topk_local(before, "alpha beta", mode="and", k=100_000) == cached
+    assert before.cache_hits == 1 and len(cached) < len(local)
 
     # replaying the same delta must be rejected
     with pytest.raises(ValueError, match="replayed or overlapping"):

@@ -30,7 +30,10 @@ from invertedindexbuilder_spark.operators.local_query import (
     topk_local,
 )
 from invertedindexbuilder_spark.operators.postings import build_postings
-from invertedindexbuilder_spark.operators.query_exec import topk_bm25_chunked
+from invertedindexbuilder_spark.operators.query_exec import (
+    tokenize_query,
+    topk_bm25_chunked,
+)
 from invertedindexbuilder_spark.plans.build import build, compact, load_stats
 from invertedindexbuilder_spark.plans.deletes import (
     delete_docs,
@@ -39,7 +42,7 @@ from invertedindexbuilder_spark.plans.deletes import (
 )
 from invertedindexbuilder_spark.sources.docs_src import synthetic_docs_src
 
-from tests.oracle_util import decoded_lists
+from tests.oracle_util import CorpusOracle, decoded_lists
 
 N_DOCS = 300
 DELETED = sorted({3, 17, 42, 120, 121, 122, 250, 299})
@@ -97,6 +100,9 @@ def test_tombstoned_docs_leave_every_surface(spark, tmp_out):
     ).collect()
     assert base, "query must match something for the test to mean anything"
     victims = [r["doc_id"] for r in base[:3]]
+    # a session opened before the delete caches its snapshot's answer
+    before = LocalIndex(tmp_out)
+    cached = topk_local(before, "alpha common", mode="or", k=200)
     delete_docs(spark, tmp_out, victims)
 
     tomb = load_tombstones(spark, tmp_out)
@@ -118,6 +124,21 @@ def test_tombstoned_docs_leave_every_surface(spark, tmp_out):
     local = topk_local(li, "alpha common", mode="or", k=200)
     assert not ({d for d, _ in local} & set(victims))
     assert {d for d, _ in local} == got
+    # the new snapshot answers the query the old session had cached with
+    # the new snapshot's results (the oracle without the victims); the
+    # old session keeps answering from its own snapshot
+    want = [
+        (d, sc)
+        for d, sc in CorpusOracle(200).topk(
+            tokenize_query("alpha common"), "or", 200
+        )
+        if d not in victims
+    ]
+    assert [d for d, _ in local] == [d for d, _ in want]
+    for (_, gs), (_, ws) in zip(local, want):
+        assert abs(gs - ws) <= 1e-9 * max(1.0, abs(ws))
+    assert topk_local(before, "alpha common", mode="or", k=200) == cached
+    assert before.cache_hits == 1 and set(victims) <= {d for d, _ in cached}
     # and can be asked not to
     raw = topk_local(li, "alpha common", mode="or", k=200,
                      apply_tombstones=False)

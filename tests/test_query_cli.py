@@ -135,3 +135,33 @@ def test_spark_cli_explain_reports_what_ran(
     assert rec["blocks_skipped"] == rec["blocks_total"] - rec["blocks_decoded"]
     # too few chunks for the scan filter: it does not run
     assert rec["chunks_total"] == rec["chunks_kept"] == 0
+
+
+def test_local_cli_explain_reports_cache_hits(spark, root, monkeypatch, capsys):
+    """--explain on the local runner: one JSON line per query; the same
+    query asked again in one session is a result-cache hit that decodes
+    no block, with the same answer."""
+    import io
+    import json
+
+    monkeypatch.setattr(
+        sys, "argv", ["query_cli.py", "--index", root, "--explain"]
+    )
+    monkeypatch.setattr(
+        sys, "stdin", io.StringIO("5\n0\nalpha common\nalpha common\n")
+    )
+    assert query_cli.main() == 0
+    out, err = capsys.readouterr()
+    recs = [json.loads(ln) for ln in err.splitlines() if ln.startswith("{")]
+    assert [(r["query"], r["mode"]) for r in recs] == [("alpha common", "and")] * 2
+    assert recs[0]["cached"] is False and recs[0]["blocks_decoded"] > 0
+    assert recs[1]["cached"] is True and recs[1]["blocks_decoded"] == 0
+    assert all(r["ms"] >= 0 for r in recs)
+    # the interactive prompts print before the first result line
+    out = out.replace("top-k: ", "").replace("mode (0=AND,1=OR): ", "")
+    got = [
+        (int(line.split("\t")[1]), float(line.split("\t")[0]))
+        for line in out.splitlines()
+    ]
+    want = _want(spark, root, "alpha common", "and")
+    assert want and got == want + want
