@@ -9,13 +9,14 @@ matching ``spark.sql.catalog.*`` configs + runtime jar on the cluster)
 switches every read/write to Iceberg SQL with no code changes.
 
 Generations (parquet backend): a table's PHYSICAL directory may be a
-generation dir (``index.g3``) recorded in ``tables.json`` at the root.
-``publish()`` rewrites that one file with ``os.replace`` — an atomic
-multi-table pointer flip, so a compaction can swap ``index`` and
-``index_chunks`` together and a reader resolving through the catalog
-sees either the old generation of BOTH or the new generation of BOTH,
-never a mix (the Iceberg backend gets per-table snapshot atomicity from
-createOrReplace instead, and needs no pointer file).
+generation dir (``index_chunks.g3``) recorded in ``tables.json`` at the
+root.  ``publish()`` rewrites that one file with ``os.replace`` — an
+atomic multi-table pointer flip, so a compaction can swap
+``index_chunks`` and ``stats`` together and a reader resolving through
+the catalog sees either the old generation of BOTH or the new
+generation of BOTH, never a mix (the Iceberg backend gets per-table
+snapshot atomicity from createOrReplace instead, and needs no pointer
+file).
 """
 
 from __future__ import annotations

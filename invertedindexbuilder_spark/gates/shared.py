@@ -329,15 +329,15 @@ def embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 # produces ragged-but-self-describing tail blocks that would legitimately
 # differ.  Gate builds therefore pin salting OFF (one chunk per term,
 # served by the plain bm25 entries; the index_meta gates read the
-# merged export of those chunks); the salted multi-chunk layout is
-# gate-covered separately via the bm25_*_chunked entries, whose results
-# are layout-independent.
+# per-term merge_chunks view of those chunks); the salted multi-chunk
+# layout is gate-covered separately via the bm25_*_chunked entries,
+# whose results are layout-independent.
 UNSALTED = 1 << 62
 
 
 def built(spark: SparkSession, sf_dir: str) -> dict:
-    """Build (once per sf_dir) the unsalted chunks, their merged export,
-    docs and stats over documents."""
+    """Build (once per sf_dir) the unsalted chunks, their per-term
+    merge_chunks view, docs and stats over documents."""
     if sf_dir in _INDEX_CACHE:
         return _INDEX_CACHE[sf_dir]
     from invertedindexbuilder_spark.operators.index_build import (

@@ -33,8 +33,9 @@ merge patches chunk k's first varbyte to ``first_doc - prev_chunk_last``
 tests/test_varbyte.py::test_chunked_encoding_equals_whole_list).
 
 At 100 TB the chunked table is also the better SERVING layout (parallel
-decode of heavy terms); the merged one-row-per-term ``index`` is the
-reference-parity artifact.
+decode of heavy terms), and it is the only index table stored: the
+one-row-per-term reference-parity view is :func:`merge_chunks` over it,
+computed on demand.
 """
 
 from __future__ import annotations
@@ -402,9 +403,6 @@ class _ChunkRowBuffer:
         return batch
 
 
-DEFAULT_MERGE_FANIN = 256  # max chunk rows concatenated by one merge task
-
-
 def _merge_sorted_frame(pdf: pd.DataFrame) -> dict:
     """Merge a first_doc_id-SORTED frame of one term's chunks into a
     single logical chunk (fields as plain python values).  Shared by the
@@ -525,10 +523,9 @@ def merge_chunks(chunks: DataFrame, fanin: int | None = None) -> DataFrame:
     (:func:`_partial_merge`) so the final per-term group holds at most
     ``ceil(n_chunks / fanin)`` super-chunk rows instead of ~10^6 raw
     chunk rows for a stopword term at 10^12 docs.  (The final merged
-    row still holds the term's whole payload — that is the artifact's
-    definition; builds that don't need reference-parity bytes should
-    skip the merge entirely and serve from chunks: ``plans.build(...,
-    merged=False)``.)  Only terms exceeding ``fanin`` pay the extra
+    row still holds the term's whole payload — that is the view's
+    definition, which is why no build stores it and every query serves
+    from chunks.)  Only terms exceeding ``fanin`` pay the extra
     shuffle — the tiny count aggregate routes everything else straight
     to the final merge.
 

@@ -2,7 +2,7 @@
 launching a Spark job (the analog of the reference's -q session,
 query.c:29-300 — load once, then answer from memory + targeted reads).
 The session loads the serving chunk table (index_chunks) into flat
-columns (LocalIndex) and never reads the merged ``index`` export.
+columns (LocalIndex).
 
 Two exact pruning mechanisms over the block metadata:
 
@@ -315,7 +315,7 @@ def topk_local(
     Answers are cached on ``li`` (module docstring): a repeated query
     returns a fresh list of the same tuples and decodes no block."""
     matched = _match_rows(li, query, strict)
-    if not matched:
+    if not matched or k == 0:
         return []
 
     key = (tuple((row["term"], w) for row, w in matched), mode, k,

@@ -1,5 +1,5 @@
 """End-to-end index build plan: docs_src -> docs, postings*, index_chunks,
-index (optional export), stats.
+stats.
 
 Phase mapping to the reference (SURVEY §3.1) — each materialized table
 is the analog of one of its file boundaries, and each is a resumable
@@ -35,9 +35,7 @@ from invertedindexbuilder_spark.operators.docids import (
     doc_id_map,
 )
 from invertedindexbuilder_spark.operators.index_build import (
-    DEFAULT_MERGE_FANIN,
     encode_chunks,
-    merge_chunks,
     resolve_salting,
     resolve_salting_sampled,
     salting_floor_policy,
@@ -161,20 +159,20 @@ def build(
     checkpoint_postings: bool = False,
     num_partitions: int | None = None,
     tokenizer: str = "arrow",
-    merged: bool = True,
+    merged: bool = False,
 ) -> dict:
     """Run (or resume) the full build.  Returns the manifest dict.
 
-    Every build persists INDEX_CHUNK (``index_chunks``), the one
-    serving layout: a heavy term's payload never materializes in one
-    task (query_exec.topk_bm25_chunked), where at 10^12 docs a
-    one-row-per-term list is a multi-GB parquet cell.  ``merged=True``
-    also exports the one-row-per-term INDEX (``index``) as the
-    reference-parity artifact for oracle runs and introspection — no
-    query path reads it.  The export is tree-merged from the stored
-    chunks (operators.index_build.merge_chunks fanin) so no single task
-    concatenates more than DEFAULT_MERGE_FANIN chunk rows per level.
-    ``merged=False`` skips it: the at-scale posture.
+    A build persists INDEX_CHUNK (``index_chunks``), the one index
+    table: a heavy term's payload never materializes in one task
+    (query_exec.topk_bm25_chunked), where at 10^12 docs a
+    one-row-per-term list is a multi-GB parquet cell.  The
+    reference-parity one-row-per-term INDEX view is computed on demand,
+    ``merge_chunks(Catalog(spark, out_root).read("index_chunks"))``.
+
+    ``merged`` accepts only False.  It stays a keyword because two
+    callers outside the engine, perfbench/workloads.py and the legacy
+    bench.py, still pass ``merged=False``.
 
     Job-count discipline (it dominates wall time once stages scale):
     the input is scanned exactly twice on a fresh build (range-partition
@@ -184,6 +182,12 @@ def build(
     input-side fingerprint scan only happens on RESUME, where it is the
     point.
     """
+    if merged:
+        raise ValueError(
+            "build writes no merged index export; compute the per-term "
+            "view on demand with "
+            'merge_chunks(Catalog(spark, root).read("index_chunks"))'
+        )
     cat = Catalog(spark, out_root)
     manifest = BuildManifest(out_root)
 
@@ -315,12 +319,7 @@ def build(
 
     # ---- phase 3: index (SORT+MERGE shuffle + FINAL BUILD encode) ----
     t0 = time.time()
-    index_done = (
-        manifest.phase_done("index", fp)
-        and cat.exists("index_chunks")
-        and (not merged or cat.exists("index"))
-    )
-    if not index_done:
+    if not (manifest.phase_done("index", fp) and cat.exists("index_chunks")):
         # a corpus no larger than the salting floor has no heavy term:
         # no sample, no count (the rule compact's fold uses too)
         policy = salting_floor_policy(n_docs, salt_threshold, chunk_blocks)
@@ -348,8 +347,7 @@ def build(
         )
         # persist the chunked table — the SERVING artifact (heavy
         # terms decode one chunk per task; see
-        # query_exec.topk_bm25_chunked) — and derive the merged export
-        # FROM it, so encode runs once.
+        # query_exec.topk_bm25_chunked).
         #
         # TERM-RANGE-CLUSTERED layout (r7): the encode shuffle is
         # hash(term, salt), so without this every parquet file holds a
@@ -385,8 +383,6 @@ def build(
             )
             chunks.unpersist()
         chunks = cat.read("index_chunks")
-        if merged:
-            cat.write(merge_chunks(chunks, fanin=DEFAULT_MERGE_FANIN), "index")
         # metrics from the chunk table (sum(df) over chunks is exactly
         # the posting count; a term is counted once however many chunks
         # it spans)
@@ -407,7 +403,6 @@ def build(
                 "salted_terms": len(heavy),
                 "salt_threshold": eff_threshold,
                 "chunk_blocks": eff_chunk_blocks,
-                "merged": merged,
                 "wall_s": round(time.time() - t0, 3),
             },
         )
@@ -749,8 +744,7 @@ def compact(
     old postings are never re-tokenized or re-encoded
     (operators/index_build.compact_chunks); only the delta is, plus an
     O(index-size) rewrite of ``index_chunks`` and an append to the docs
-    table.  A build that keeps the merged export (``merged=True``) also
-    re-derives ``index``.
+    table.
 
     Delta doc_ids continue after the old maximum in delta-key order —
     arrival order, exactly how the reference numbers appended input
@@ -791,8 +785,8 @@ def compact(
       one metadata aggregate over it for ``n_terms``/``n_postings``,
       the stats row as a local relation, and one pointer flip.
 
-    Durability (parquet backend): every rewritten table — index_chunks,
-    index, AND stats — is written to a fresh ``<name>.g<N>`` generation
+    Durability (parquet backend): both rewritten tables — index_chunks
+    AND stats — are written to a fresh ``<name>.g<N>`` generation
     directory and then published with ONE atomic ``os.replace`` of
     ``tables.json`` (catalog.Catalog.publish).  Readers resolving
     through the catalog see the old generation of everything or the new
@@ -809,14 +803,10 @@ def compact(
     cross-table atomicity there is per-table only — the documented
     tradeoff until a multi-table transaction API lands.
     """
-    from invertedindexbuilder_spark.operators.index_build import (
-        compact_chunks,
-        merge_chunks,
-    )
+    from invertedindexbuilder_spark.operators.index_build import compact_chunks
 
     cat = Catalog(spark, out_root)
     manifest = BuildManifest(out_root)
-    has_merged = cat.exists("index")
     stats = load_stats(spark, out_root)
     n_old = int(stats["n_docs"])
 
@@ -825,7 +815,7 @@ def compact(
     if validate:
         check = _delta_checks(cat.read("docs"), delta_src, n_old)
         if check["orphans"]:
-            # stats/index/chunks publish atomically TOGETHER (one
+            # stats/chunks publish atomically TOGETHER (one
             # tables.json flip), so docs rows beyond stats.n_docs can
             # only mean a crash BEFORE the flip: the published view
             # still describes exactly the old corpus.
@@ -962,13 +952,7 @@ def compact(
         cat.write(new_chunks, "index_chunks",
                   row_group_bytes=CHUNK_ROW_GROUP_BYTES)
         postings.unpersist()
-        if has_merged:
-            cat.write(
-                merge_chunks(cat.read("index_chunks"), fanin=DEFAULT_MERGE_FANIN),
-                "index",
-            )
-        chunks_for_stats = cat.read("index_chunks")
-        m = chunks_for_stats.agg(
+        m = cat.read("index_chunks").agg(
             F.count_distinct("term").alias("terms"), F.sum("df").alias("postings")
         ).collect()[0]
         _write_stats(
@@ -983,16 +967,7 @@ def compact(
         cat.write(new_chunks, chunks_phys,
                   row_group_bytes=CHUNK_ROW_GROUP_BYTES)
         postings.unpersist()
-        new_chunks_tbl = cat.read(chunks_phys)
-        publish_map = {"index_chunks": chunks_phys}
-        if has_merged:
-            index_phys = f"index.g{gen}"
-            cat.write(
-                merge_chunks(new_chunks_tbl, fanin=DEFAULT_MERGE_FANIN),
-                index_phys,
-            )
-            publish_map["index"] = index_phys
-        m = new_chunks_tbl.agg(
+        m = cat.read(chunks_phys).agg(
             F.count_distinct("term").alias("terms"), F.sum("df").alias("postings")
         ).collect()[0]
         stats_phys = f"stats.g{gen}"
@@ -1001,7 +976,9 @@ def compact(
             int(stats["sum_doc_len"]) + sdl_delta, m, new_min,
             table=stats_phys,
         )
-        orphan_dirs = cat.publish({**publish_map, "stats": stats_phys})
+        orphan_dirs = cat.publish(
+            {"index_chunks": chunks_phys, "stats": stats_phys}
+        )
         # persist the generation counter in the SAME flush as the
         # post-flip journal stage: a crash right after this line leaves
         # both facts on disk together
@@ -1067,7 +1044,6 @@ def merge_builds(
     root_a: str,
     root_b: str,
     out_root: str,
-    merged: bool = False,
     validate: bool = True,
 ) -> dict:
     """FEDERATED index merge: two independent builds over
@@ -1083,10 +1059,8 @@ def merge_builds(
     stats plus one metadata aggregate over the unioned chunk table.
     No postings are decoded, re-sorted, or re-encoded.
 
-    ``merged=True`` additionally derives the one-row-per-term
-    reference-parity index (tree-merged).  ``validate`` rejects shards
-    sharing any (repo, path, commit) key — a doc present in both
-    shards would be indexed twice under two ids.
+    ``validate`` rejects shards sharing any (repo, path, commit) key —
+    a doc present in both shards would be indexed twice under two ids.
     """
     from invertedindexbuilder_spark.operators.index_build import shift_chunks
 
@@ -1124,13 +1098,6 @@ def merge_builds(
         shift_chunks(cat_b.read("index_chunks"), n_a)
     )
     cat.write(chunks, "index_chunks")
-    if merged:
-        from invertedindexbuilder_spark.operators.index_build import merge_chunks
-
-        cat.write(
-            merge_chunks(cat.read("index_chunks"), fanin=DEFAULT_MERGE_FANIN),
-            "index",
-        )
     m = cat.read("index_chunks").agg(
         F.count_distinct("term").alias("terms"), F.sum("df").alias("postings")
     ).collect()[0]
@@ -1150,7 +1117,6 @@ def merge_builds(
             "n_docs": n_a + int(sb["n_docs"]),
             "terms": int(m["terms"]),
             "postings": int(m["postings"]),
-            "merged": merged,
             "wall_s": round(time.time() - t0, 3),
         },
     )

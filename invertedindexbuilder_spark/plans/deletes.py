@@ -28,7 +28,7 @@ shape object stores and LSM engines use:
 
 Equivalence contract (pinned in tests/test_deletes.py): a purged build
 serves exactly what a fresh build over the surviving corpus serves —
-same merged posting lists, same docs table, same stats, same top-k.
+same per-term posting lists, same docs table, same stats, same top-k.
 
 NOTE for pre-assigned-id ingestion (plans/build.build with a source
 ``doc_id`` column): a purge REMAPS ids, so the upstream system's ids no
@@ -156,12 +156,11 @@ def purge_deletes(
     """Physically remove every tombstoned doc from the build at
     ``out_root`` and clear the tombstone set.
 
-    Rewrites docs / index_chunks / index (the merged export, if
-    present) / stats into
-    fresh generation dirs and publishes them together with the emptied
-    tombstone table in ONE atomic tables.json flip — a crash mid-purge
-    leaves the previous generation fully live (tombstones still
-    applied at query time, so no deleted doc ever resurfaces).
+    Rewrites docs / index_chunks / stats into fresh generation dirs
+    and publishes them together with the emptied tombstone table in ONE
+    atomic tables.json flip — a crash mid-purge leaves the previous
+    generation fully live (tombstones still applied at query time, so
+    no deleted doc ever resurfaces).
 
     Stored search tables (build_search_tables) purge in the SAME flip
     at O(search-table bytes), never O(corpus re-tokenize): the per-doc
@@ -175,11 +174,7 @@ def purge_deletes(
     ``partition`` mirrors build_search_tables (False skips the
     range-boundary sampling jobs at test scale).
     """
-    from invertedindexbuilder_spark.operators.index_build import (
-        DEFAULT_MERGE_FANIN,
-        merge_chunks,
-        purge_chunks,
-    )
+    from invertedindexbuilder_spark.operators.index_build import purge_chunks
 
     cat = Catalog(spark, out_root)
     manifest = BuildManifest(out_root)
@@ -270,8 +265,7 @@ def purge_deletes(
         remap_phys,
     )
 
-    # ---- index: shift-or-reencode per chunk; the merged export (if
-    # the build keeps one) re-derives from the purged chunks ----
+    # ---- index: shift-or-reencode per chunk ----
     chunks_phys = f"index_chunks.g{gen}"
     cat.write(purge_chunks(cat.read("index_chunks"), deleted),
               chunks_phys, row_group_bytes=CHUNK_ROW_GROUP_BYTES)
@@ -279,13 +273,6 @@ def purge_deletes(
     publish_map = {
         "docs": docs_phys, "id_remap": remap_phys, "index_chunks": chunks_phys,
     }
-    if cat.exists("index"):
-        index_phys = f"index.g{gen}"
-        cat.write(
-            merge_chunks(new_chunks_tbl, fanin=DEFAULT_MERGE_FANIN),
-            index_phys,
-        )
-        publish_map["index"] = index_phys
 
     m = new_chunks_tbl.agg(
         F.count_distinct("term").alias("terms"),

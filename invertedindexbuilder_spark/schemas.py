@@ -11,12 +11,14 @@ otherwise):
 - ``postings`` — (term, doc_id, tf); intermediate, checkpointable.
 - ``index_chunks`` — the serving layout: one row per (term, salt)
   doc-range chunk (``first_doc_id`` + df + block metadata + compressed
-  payload whose first gap is absolute); every query path reads it.
-- ``index``    — optional merged export (``build(merged=True)``): one
-  row per term, the reference-parity artifact for oracle runs and
-  introspection; no query path reads it.
+  payload whose first gap is absolute); the one index table every
+  write path maintains and every query path reads.
 - ``stats``    — singleton corpus aggregates used by the scorer.
 - ``deleted_docs`` — tombstoned doc ids (plans/deletes.py).
+
+``INDEX`` is not a stored table: it is the one-row-per-term
+reference-parity view that ``operators.index_build.merge_chunks``
+computes on demand from ``index_chunks``.
 
 ``TABLE_SCHEMAS`` maps the engine's table names to these schemas:
 ``catalog.Catalog.read`` passes the schema, so opening one of them
@@ -106,7 +108,6 @@ DELETED_DOCS = T.StructType([T.StructField("doc_id", T.LongType(), True)])
 TABLE_SCHEMAS = {
     "docs": DOCS,
     "index_chunks": INDEX_CHUNK,
-    "index": INDEX,
     "stats": STATS,
     "deleted_docs": DELETED_DOCS,
 }

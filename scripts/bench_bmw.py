@@ -4,8 +4,8 @@ The candidate pass (query_exec.candidate_pass) is exact and
 decode-skipping by construction (tests/test_bmw_or.py pins both), but
 its extra small driver jobs cost real seconds — so the ``or_prune=
 "auto"`` threshold must come from DATA, not an estimate.  This script
-builds chunk-only indexes at several corpus sizes from the FIXTURES.md
-synthetic source-code generator (token_range (200, 1601) — the
+builds indexes at several corpus sizes from the FIXTURES.md synthetic
+source-code generator (token_range (200, 1601) — the
 bench/scaling corpus profile, 'common' is a ~95%-df stopword) and times
 the same disjunctive query with pruning forced ON vs OFF, plus the
 conjunctive candidate-decode path ON vs OFF.
@@ -99,9 +99,8 @@ def ensure_index(spark, n_docs: int) -> str:
             with_ids=True,
         ),
         out,
-        merged=False,
     )
-    print(f"# built chunks-only idx_{n_docs} in {time.time() - t0:.1f}s",
+    print(f"# built idx_{n_docs} in {time.time() - t0:.1f}s",
           file=sys.stderr)
     return out
 

@@ -48,13 +48,8 @@ def ensure_index(spark, n_docs: int) -> str:
             return out
     shutil.rmtree(out, ignore_errors=True)
     t0 = time.time()
-    build(
-        spark,
-        synthetic_docs_src(spark, n_docs, with_ids=True),
-        out,
-        merged=False,
-    )
-    print(f"# built chunks-only idx_{n_docs} in {time.time() - t0:.1f}s",
+    build(spark, synthetic_docs_src(spark, n_docs, with_ids=True), out)
+    print(f"# built idx_{n_docs} in {time.time() - t0:.1f}s",
           file=sys.stderr)
     return out
 

@@ -64,9 +64,9 @@ def main() -> int:
     ap.add_argument("--frac", type=float, default=0.01)
     ap.add_argument("--cores", type=int, default=32)
     ap.add_argument("--index",
-                    help="use an existing chunk-only build (e.g. the "
-                         "cached 30M bench_bmw index) instead of "
-                         "building one; --docs must match its corpus")
+                    help="use an existing build (e.g. the cached 30M "
+                         "bench_bmw index) instead of building one; "
+                         "--docs must match its corpus")
     ap.add_argument("--patterns", default="clustered,scattered")
     args = ap.parse_args()
 

@@ -124,7 +124,7 @@ def ensure_index(spark, n_docs: int, keep: bool) -> str:
                 return out
     shutil.rmtree(out, ignore_errors=True)
     t0 = time.time()
-    build(spark, synthetic_docs_src(spark, n_docs), out, merged=False)
+    build(spark, synthetic_docs_src(spark, n_docs), out)
     print(f"# built idx_{n_docs} (chunks) in {time.time()-t0:.1f}s",
           file=sys.stderr)
     return out

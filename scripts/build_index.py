@@ -32,11 +32,6 @@ def main() -> int:
     ap.add_argument("--chunk-blocks", type=int, default=None,
                     help="blocks per salted chunk (default: adaptive)")
     ap.add_argument("--checkpoint-postings", action="store_true")
-    ap.add_argument("--chunks-only", action="store_true",
-                    help="skip the merged one-row-per-term export "
-                         "(build merged=False); every build serves from "
-                         "the chunk table (index_chunks) either way — "
-                         "the at-scale posture")
     ap.add_argument("--compact", action="store_true",
                     help="treat the input as a DELTA of new files and "
                          "fold it into the existing build at --out; old "
@@ -167,7 +162,6 @@ def main() -> int:
         chunk_blocks=args.chunk_blocks,
         checkpoint_postings=args.checkpoint_postings,
         tokenizer=args.tokenizer,
-        merged=not args.chunks_only,
     )
     wall = time.time() - t0
     search_counts = None

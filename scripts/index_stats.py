@@ -5,7 +5,7 @@
 Reports corpus stats, per-table file footprints (through the catalog's
 generation pointers), posting-list distribution (df percentiles, block
 counts, payload bytes), the heaviest terms, and which optional
-artifacts (merged index, chunked index, search tables) are present —
+artifacts (search tables, tombstones) are present —
 the operational "what is this index" view an operator wants before
 serving or compacting it.  Everything is computed with aggregates over
 the stored tables; nothing corpus-sized reaches the driver.
@@ -55,7 +55,7 @@ def build_report(spark, index_root: str, top: int = 10) -> dict:
         if "compact_journal" in m:
             report["compact_journal"] = m["compact_journal"]
 
-    tables = ["docs", "index", "index_chunks", "search_stats",
+    tables = ["docs", "index_chunks", "search_stats",
               "deleted_docs", "id_remap", *SEARCH_TABLES]
     footprints = {}
     for t in tables:
@@ -89,17 +89,10 @@ def build_report(spark, index_root: str, top: int = 10) -> dict:
             "BM25 serving keeps as-indexed N/d_avr until a purge",
         }
 
-    # posting-list distribution from whichever index artifact exists —
-    # chunk rows aggregate to full terms first so both layouts report
-    # the same per-term numbers
+    # posting-list distribution: chunk rows aggregate to full terms
+    # first, so a multi-chunk term reports its whole list
     src = None
-    if "index" in footprints:
-        src = cat.read("index").select(
-            "term", "df",
-            F.size("last_doc_ids").alias("n_blocks"),
-            F.length("payload").cast("long").alias("payload_bytes"),
-        )
-    elif "index_chunks" in footprints:
+    if "index_chunks" in footprints:
         src = (
             cat.read("index_chunks")
             .groupBy("term")

@@ -1,7 +1,7 @@
 """spark-submit entry point: federated merge of two shard builds.
 
     python scripts/merge_indexes.py --a /path/shardA --b /path/shardB \
-        --out /path/merged [--merged-index]
+        --out /path/merged
 
 Both shards are builds over DISJOINT corpora; the merge is
 metadata-only (one varbyte rewritten per chunk of shard B).  Prints
@@ -23,8 +23,6 @@ def main() -> int:
     ap.add_argument("--a", required=True, help="shard A index root")
     ap.add_argument("--b", required=True, help="shard B index root")
     ap.add_argument("--out", required=True, help="merged index root")
-    ap.add_argument("--merged-index", action="store_true",
-                    help="also derive the one-row-per-term index")
     ap.add_argument("--no-validate", action="store_true",
                     help="skip the shard-key-overlap check")
     ap.add_argument("--cores", type=int, default=None)
@@ -44,8 +42,7 @@ def main() -> int:
     from invertedindexbuilder_spark.plans.build import merge_builds
 
     manifest = merge_builds(
-        spark, args.a, args.b, args.out,
-        merged=args.merged_index, validate=not args.no_validate,
+        spark, args.a, args.b, args.out, validate=not args.no_validate
     )
     print(json.dumps(manifest["phases"]["merge_builds"]))
     spark.stop()

@@ -83,10 +83,10 @@ class CorpusOracle:
 
 
 def decoded_lists(table) -> dict[str, tuple[list[int], list[int]]]:
-    """term -> (doc_ids, tfs) decoded from a merged INDEX export or an
-    INDEX_CHUNK frame.  A chunk's first gap is absolute, so chunks
-    decode alone and concatenate in first_doc_id order: both layouts
-    compare directly."""
+    """term -> (doc_ids, tfs) decoded from a merged INDEX frame
+    (``merge_chunks``) or an INDEX_CHUNK frame.  A chunk's first gap is
+    absolute, so chunks decode alone and concatenate in first_doc_id
+    order: both layouts compare directly."""
     chunked = "first_doc_id" in table.columns
     parts: dict[str, list] = collections.defaultdict(list)
     for r in table.collect():

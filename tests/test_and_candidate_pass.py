@@ -29,7 +29,7 @@ RARE = "0xdeadbeef"  # a SPECIALS token: df ~ N/44
 @pytest.fixture(scope="module")
 def env(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("andcand") / "idx")
-    build(spark, synthetic_docs_src(spark, N_DOCS), out, merged=False)
+    build(spark, synthetic_docs_src(spark, N_DOCS), out)
     cat = Catalog(spark, out)
     oracle = CorpusOracle(N_DOCS)
     rare_docs = sorted(oracle.postings[RARE])

@@ -384,7 +384,7 @@ def oracle_env(spark, tmp_path_factory):
     from tests.oracle_util import CorpusOracle
 
     out = str(tmp_path_factory.mktemp("bmw_oracle") / "idx")
-    build(spark, synthetic_docs_src(spark, 400), out, merged=False)
+    build(spark, synthetic_docs_src(spark, 400), out)
     cat = Catalog(spark, out)
     return {
         "chunks": cat.read("index_chunks"),

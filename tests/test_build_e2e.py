@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from invertedindexbuilder_spark.catalog import Catalog
 from invertedindexbuilder_spark.functions.compress import decode_posting_list
+from invertedindexbuilder_spark.operators.index_build import merge_chunks
 from invertedindexbuilder_spark.plans.build import build, load_stats
 from invertedindexbuilder_spark.sources.docs_src import synthetic_docs_src
 
@@ -31,7 +32,7 @@ def oracle():
 
 
 def decoded_index(spark, out) -> dict:
-    rows = Catalog(spark, out).read("index").collect()
+    rows = merge_chunks(Catalog(spark, out).read("index_chunks")).collect()
     got = {}
     for r in rows:
         docs, tfs = decode_posting_list(

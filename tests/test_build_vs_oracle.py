@@ -16,6 +16,7 @@ import pytest
 
 from invertedindexbuilder_spark.catalog import Catalog
 from invertedindexbuilder_spark.functions.compress import decode_posting_list
+from invertedindexbuilder_spark.operators.index_build import merge_chunks
 from invertedindexbuilder_spark.plans.build import build
 from invertedindexbuilder_spark.sources.docs_src import (
     synthetic_docs_src,
@@ -63,7 +64,9 @@ def test_doc_table_exact(spark, ref_output, our_index):
 
 def test_index_exact_modulo_d2(spark, ref_output, our_index):
     ref = read_reference_index(ref_output)
-    rows = Catalog(spark, our_index).read("index").collect()
+    rows = merge_chunks(
+        Catalog(spark, our_index).read("index_chunks")
+    ).collect()
     got = {}
     for r in rows:
         docs, tfs = decode_posting_list(

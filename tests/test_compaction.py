@@ -112,8 +112,9 @@ def test_plan_compact_matches_full_rebuild(spark, tmp_path):
     compact 100 more in, compare against a clean 400-doc build.  Doc
     ids may differ (compaction uses arrival order), so identity is
     checked on id-invariant artifacts: term stats, corpus stats, and
-    (url, score) query results.  The rewritten merged export must
-    still decode to the same lists as the rewritten index_chunks."""
+    (url, score) query results.  The per-term view merged on demand
+    from the rewritten index_chunks must decode to the same lists as
+    those chunks."""
     from invertedindexbuilder_spark.catalog import Catalog
     from invertedindexbuilder_spark.plans.build import (
         build,
@@ -132,12 +133,12 @@ def test_plan_compact_matches_full_rebuild(spark, tmp_path):
     build(spark, synthetic_docs_src(spark, 400), root_f)
 
     cc, cf = Catalog(spark, root_c), Catalog(spark, root_f)
-    a = {r["term"]: r["df"] for r in cc.read("index").select("term", "df").collect()}
-    b = {r["term"]: r["df"] for r in cf.read("index").select("term", "df").collect()}
+    merged_c = merge_chunks(cc.read("index_chunks"))
+    merged_f = merge_chunks(cf.read("index_chunks"))
+    a = {r["term"]: r["df"] for r in merged_c.select("term", "df").collect()}
+    b = {r["term"]: r["df"] for r in merged_f.select("term", "df").collect()}
     assert a == b
-    assert decoded_lists(cc.read("index")) == decoded_lists(
-        cc.read("index_chunks")
-    )
+    assert decoded_lists(merged_c) == decoded_lists(cc.read("index_chunks"))
     ids = sorted(r["doc_id"] for r in cc.read("docs").select("doc_id").collect())
     assert ids == list(range(400))
     assert load_stats(spark, root_c) == load_stats(spark, root_f)
@@ -242,7 +243,7 @@ def test_compacted_serves_identical_queries(spark, frames):
 def test_compact_crash_before_publish_keeps_old_view(spark, tmp_path, monkeypatch):
     """Kill-between-writes simulation: a crash BEFORE the tables.json
     flip must leave readers on the old generation of EVERY table
-    (chunks+index+stats publish together), and the next compact's
+    (chunks+stats publish together), and the next compact's
     orphan guard must name the pre-publish remediation."""
     from invertedindexbuilder_spark.catalog import Catalog
     from invertedindexbuilder_spark.plans.build import build, compact, load_stats
@@ -252,9 +253,14 @@ def test_compact_crash_before_publish_keeps_old_view(spark, tmp_path, monkeypatc
     build(spark, synthetic_docs_src(spark, 300), root)
     cat = Catalog(spark, root)
     stats_before = load_stats(spark, root)
-    terms_before = {
-        r["term"]: r["df"] for r in cat.read("index").select("term", "df").collect()
-    }
+
+    def term_dfs():
+        return {
+            r["term"]: r["sum(df)"]
+            for r in cat.read("index_chunks").groupBy("term").sum("df").collect()
+        }
+
+    terms_before = term_dfs()
 
     with monkeypatch.context() as m:
         def boom(self, mapping):
@@ -266,10 +272,7 @@ def test_compact_crash_before_publish_keeps_old_view(spark, tmp_path, monkeypatc
 
     # old view fully intact: generation dirs exist but are unreferenced
     assert load_stats(spark, root) == stats_before
-    terms_after = {
-        r["term"]: r["df"] for r in cat.read("index").select("term", "df").collect()
-    }
-    assert terms_after == terms_before
+    assert term_dfs() == terms_before
 
     # orphan guard: names the pre-publish state and the docs remediation
     with pytest.raises(ValueError, match="crashed before publishing"):
@@ -284,7 +287,7 @@ def test_compact_crash_before_publish_keeps_old_view(spark, tmp_path, monkeypatc
 
 def test_compact_crash_after_publish_is_consistent(spark, tmp_path, monkeypatch):
     """A crash AFTER the pointer flip (before manifest bookkeeping)
-    leaves a fully consistent NEW view — docs, index and stats all
+    leaves a fully consistent NEW view — docs, index_chunks and stats all
     contain the delta — and the next compact clears the stale journal
     and proceeds."""
     from invertedindexbuilder_spark.catalog import Catalog
@@ -390,7 +393,7 @@ def test_small_fold_job_budget(spark, tmp_path):
     from invertedindexbuilder_spark.sources.docs_src import synthetic_docs_src
 
     root = str(tmp_path / "idx")
-    build(spark, synthetic_docs_src(spark, 200), root, merged=False)
+    build(spark, synthetic_docs_src(spark, 200), root)
     delta = synthetic_docs_src(spark, 20, start=200)
     jobs = _jobs_run_by(spark, lambda: compact(spark, delta, root))
     assert load_stats(spark, root)["n_docs"] == 220
@@ -449,7 +452,7 @@ def test_compact_stats_without_min_doc_len_falls_back(spark, tmp_path):
     from invertedindexbuilder_spark.sources.docs_src import synthetic_docs_src
 
     root = str(tmp_path / "idx")
-    build(spark, synthetic_docs_src(spark, 120), root, merged=False)
+    build(spark, synthetic_docs_src(spark, 120), root)
     cat = Catalog(spark, root)
     old_stats = load_stats(spark, root)
     legacy = spark.createDataFrame(

@@ -4,9 +4,10 @@ Contracts pinned here (plans/deletes.py):
 
 - tombstoned docs vanish from every query surface (Spark single-query,
   Spark batch, driver-local) while stats stay as-indexed;
-- purge == fresh rebuild over the surviving corpus: identical merged
-  posting lists (decode), docs table, stats, and top-k answers, and
-  the rewritten merged export decodes like the rewritten chunk table;
+- purge == fresh rebuild over the surviving corpus: identical per-term
+  posting lists (decode of the on-demand ``merge_chunks`` view), docs
+  table, stats, and top-k answers, and that view decodes like the
+  rewritten chunk table;
 - chunks with no tombstone inside their doc range take the
   one-varbyte first-gap rebase (payload tail byte-identical), only
   overlapping chunks re-encode;
@@ -49,7 +50,7 @@ DELETED = sorted({3, 17, 42, 120, 121, 122, 250, 299})
 
 
 def _decode_all(index_df):
-    """merged index -> {term: [(doc_id, tf), ...]}"""
+    """merged per-term INDEX rows -> {term: [(doc_id, tf), ...]}"""
     out = {}
     for r in index_df.collect():
         docs, tfs = decode_posting_list(
@@ -204,12 +205,13 @@ def test_purge_equals_rebuild(spark, purged_and_rebuilt):
     sa, sb = load_stats(spark, out), load_stats(spark, out_ref)
     assert sa == sb
 
-    # merged index: identical decoded posting lists
-    assert _decode_all(cat.read("index")) == _decode_all(ref.read("index"))
-    # the purged export and the purged chunk table agree
-    assert decoded_lists(cat.read("index")) == decoded_lists(
-        cat.read("index_chunks")
+    # per-term view merged on demand: identical decoded posting lists
+    merged = merge_chunks(cat.read("index_chunks"))
+    assert _decode_all(merged) == _decode_all(
+        merge_chunks(ref.read("index_chunks"))
     )
+    # the purged view and the purged chunk table agree
+    assert decoded_lists(merged) == decoded_lists(cat.read("index_chunks"))
 
     # end to end: identical top-k from both builds
     for mode in ("and", "or"):

@@ -48,7 +48,7 @@ def test_build_report_smoke(spark, tmp_out):
 
     assert report["stats"]["n_docs"] == 40
     # footprints resolve through the catalog for every present table
-    for t in ("docs", "index", "index_chunks", "term_dfs", "search_stats"):
+    for t in ("docs", "index_chunks", "term_dfs", "search_stats"):
         assert report["tables"][t]["bytes"] > 0, t
     # posting distribution + heaviest terms come from the index artifact
     assert report["postings"]["terms"] > 0

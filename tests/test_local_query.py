@@ -158,6 +158,17 @@ def test_disjunctive_multi_negative_heavy_exact(li):
         lq.HEAVY_QUERY_DF = old
 
 
+@pytest.mark.parametrize("mode", ["and", "or"])
+def test_k0_returns_empty(li, monkeypatch, mode):
+    """k=0 answers [] in both modes, as the Spark path's limit(0) does,
+    also when every matched list is heavy (OR's threshold has no k-th
+    score to take)."""
+    import invertedindexbuilder_spark.operators.local_query as lq
+
+    monkeypatch.setattr(lq, "HEAVY_QUERY_DF", 64)
+    assert topk_local(li, "common alpha", mode=mode, k=0) == []
+
+
 # ------------------------------------------------------------ result cache
 
 # D5 collision pair members (one 14-char key), duplicate and unknown terms

@@ -166,17 +166,21 @@ def test_merge_refuses_in_place_output(spark, merged_roots, tmp_path):
 
 
 def test_merge_accepts_default_builds(spark, tmp_path):
-    """Two default build() roots (no flags) merge directly; with
-    merged=True the output's merged export decodes like its chunks."""
+    """Two default build() roots (no flags) merge directly; the output
+    stores no merged ``index`` table, and its per-term view merged on
+    demand decodes like its chunks."""
+    from invertedindexbuilder_spark.operators.index_build import merge_chunks
+
     from tests.oracle_util import decoded_lists
 
     ra, rb, out, full = (str(tmp_path / n) for n in ("a", "b", "m", "full"))
     build(spark, synthetic_docs_src(spark, 30), ra)
     build(spark, synthetic_docs_src(spark, 20, start=30), rb)
-    merge_builds(spark, ra, rb, out, merged=True)
+    merge_builds(spark, ra, rb, out)
     build(spark, synthetic_docs_src(spark, 50), full)
     assert load_stats(spark, out) == load_stats(spark, full)
     cat = Catalog(spark, out)
-    assert decoded_lists(cat.read("index")) == decoded_lists(
+    assert not cat.exists("index") and "index" not in cat.mappings()
+    assert decoded_lists(merge_chunks(cat.read("index_chunks"))) == decoded_lists(
         cat.read("index_chunks")
     )

@@ -38,7 +38,7 @@ def test_d_avr_single_doc_is_inf():
 @pytest.fixture(scope="module")
 def one_doc(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("onedoc") / "idx")
-    build(spark, synthetic_docs_src(spark, 1, 42), root, merged=False)
+    build(spark, synthetic_docs_src(spark, 1, 42), root)
     return root
 
 

@@ -194,7 +194,7 @@ def test_and_doc_range_bound_is_two_sided(spark, tmp_path):
     from tests.oracle_util import CorpusOracle
 
     out = str(tmp_path / "idx")
-    build(spark, synthetic_docs_src(spark, 400), out, merged=False)
+    build(spark, synthetic_docs_src(spark, 400), out)
     cat = Catalog(spark, out)
     oracle = CorpusOracle(400)
     query = "hello common"

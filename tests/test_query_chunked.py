@@ -188,8 +188,8 @@ def test_chunked_matches_merged(spark, corpus, query, mode):
 def test_build_chunks_serve_like_merged_export(spark, tmp_out):
     """Full plan: the persisted (salted) index_chunks artifact serves
     the same answers on the distributed path and in the driver-local
-    session, whose multi-chunk terms decode to the lists of the merged
-    export the build derived from the chunks."""
+    session, whose multi-chunk terms decode to the lists of the
+    per-term view merge_chunks derives from the chunks on demand."""
     from invertedindexbuilder_spark.catalog import Catalog
     from invertedindexbuilder_spark.operators.local_query import (
         LocalIndex,
@@ -201,14 +201,16 @@ def test_build_chunks_serve_like_merged_export(spark, tmp_out):
     src = synthetic_docs_src(spark, 400)
     build(spark, src, tmp_out, salt_threshold=200, chunk_blocks=1)
     cat = Catalog(spark, tmp_out)
-    assert cat.exists("index")  # merged export, the decode reference
     chunks = cat.read("index_chunks")
+    # the decode reference: one merged row per term
+    merged_rows = merge_chunks(chunks)
+    assert merged_rows.count() == chunks.select("term").distinct().count()
     docs = cat.read("docs").select("doc_id", "doc_len")
     stats = load_stats(spark, tmp_out)
     li = LocalIndex(tmp_out)
     # the fixture stopword 'common' (df ~380 > 200) must be chunked
     assert chunks.filter(F.col("term") == "common").count() > 1
-    merged = decoded_lists(cat.read("index"))
+    merged = decoded_lists(merged_rows)
     assert sorted(merged) == li.terms
     for term, (doc_ids, tfs) in merged.items():
         d, t = li.decode_all(li.lookup(term, strict=False))

@@ -31,10 +31,7 @@ QUERIES = [
 @pytest.fixture(scope="module")
 def env(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("qidx") / "sf_small")
-    build(
-        spark, synthetic_docs_src(spark, N_DOCS), out, salt_threshold=10**9,
-        merged=False,
-    )
+    build(spark, synthetic_docs_src(spark, N_DOCS), out, salt_threshold=10**9)
     cat = Catalog(spark, out)
     return {
         "chunks": cat.read("index_chunks").cache(),

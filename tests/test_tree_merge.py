@@ -1,8 +1,9 @@
-"""Tree-merge (bounded-fanin chunk assembly) and chunk-only builds:
-the round-2 verdict's one provable 100x-scale breaker was the merged
-index's single-group-per-term assembly — these pin (a) fanin-bounded
+"""Tree-merge (bounded-fanin chunk assembly) and the stored layout: a
+one-row-per-term merge of a stopword's chunks is a 100x-scale breaker
+when one group assembles every chunk row — these pin (a) fanin-bounded
 merge equivalence, (b) that no merge task ever holds more than fanin
-chunk rows, and (c) the merged-free build layout end to end."""
+chunk rows, and (c) that every write path keeps ``index_chunks`` as the
+only stored index table, end to end."""
 
 from __future__ import annotations
 
@@ -85,17 +86,33 @@ def test_partial_merge_bounds_group_row_count(spark, many_chunks):
     assert all(r[1] >= 1 for r in per_super)
 
 
+def _chunks_only(cat):
+    """index_chunks is stored; no merged ``index`` table and no pointer
+    to one."""
+    return (
+        cat.exists("index_chunks")
+        and not cat.exists("index")
+        and "index" not in cat.mappings()
+    )
+
+
 def test_chunk_only_build_serves_and_compacts(spark, tmp_path):
-    """merged=False: no 'index' table is written; queries serve from
-    chunks; compact() maintains the chunk-only layout."""
+    """A default build writes no 'index' table; queries serve from
+    chunks; compact() and purge_deletes() keep the chunk-only layout;
+    asking build for the old merged export raises."""
     from invertedindexbuilder_spark.catalog import Catalog
     from invertedindexbuilder_spark.plans.build import build, compact, load_stats
+    from invertedindexbuilder_spark.plans.deletes import delete_docs, purge_deletes
     from invertedindexbuilder_spark.sources.docs_src import synthetic_docs_src
 
+    with pytest.raises(ValueError, match="merge_chunks"):
+        build(spark, synthetic_docs_src(spark, 300),
+              str(tmp_path / "refused"), merged=True)
+
     root = str(tmp_path / "chunkonly")
-    build(spark, synthetic_docs_src(spark, 300), root, merged=False)
+    build(spark, synthetic_docs_src(spark, 300), root)
     cat = Catalog(spark, root)
-    assert cat.exists("index_chunks") and not cat.exists("index")
+    assert _chunks_only(cat)
     stats = load_stats(spark, root)
     assert stats["n_docs"] == 300
 
@@ -107,14 +124,15 @@ def test_chunk_only_build_serves_and_compacts(spark, tmp_path):
     assert out1
 
     compact(spark, synthetic_docs_src(spark, 100, start=300), root)
-    assert not cat.exists("index")  # layout preserved
+    assert _chunks_only(cat)  # layout preserved
     stats2 = load_stats(spark, root)
     assert stats2["n_docs"] == 400
 
-    # chunk-only compacted result == merged full rebuild, query-for-query
+    # compacted result == full rebuild, query-for-query
     root_f = str(tmp_path / "full")
     build(spark, synthetic_docs_src(spark, 400), root_f)
     cat_f = Catalog(spark, root_f)
+    assert _chunks_only(cat_f)
     stats_f = load_stats(spark, root_f)
     assert stats2 == stats_f
     docs2 = cat.read("docs").select("doc_id", "doc_len")
@@ -140,27 +158,33 @@ def test_chunk_only_build_serves_and_compacts(spark, tmp_path):
     )
     assert a == b
 
+    delete_docs(spark, root, [3, 17, 350])
+    purge_deletes(spark, root)
+    assert load_stats(spark, root)["n_docs"] == 397
+    assert _chunks_only(cat)
+
 
 def test_local_session_serves_chunk_only_build(spark, tmp_path):
-    """The driver-local query session works against a merged-free build
-    (merged=False): it assembles the per-term view in driver memory and
-    answers identically to a session over a merged build."""
+    """The driver-local query session over a default (chunk-only) build
+    assembles the per-term view in driver memory and answers like the
+    spec oracle."""
     from invertedindexbuilder_spark.operators.local_query import (
         LocalIndex,
         topk_local,
     )
+    from invertedindexbuilder_spark.operators.query_exec import tokenize_query
     from invertedindexbuilder_spark.plans.build import build
     from invertedindexbuilder_spark.sources.docs_src import synthetic_docs_src
 
+    from tests.oracle_util import CorpusOracle
+
     root_c = str(tmp_path / "chunkonly")
-    root_m = str(tmp_path / "merged")
-    build(spark, synthetic_docs_src(spark, 250), root_c, merged=False)
-    build(spark, synthetic_docs_src(spark, 250), root_m)
-    li_c, li_m = LocalIndex(root_c), LocalIndex(root_m)
+    build(spark, synthetic_docs_src(spark, 250), root_c)
+    li_c, oracle = LocalIndex(root_c), CorpusOracle(250)
     for q, m in [("alpha beta", "and"), ("common alpha gamma", "or")]:
         a = topk_local(li_c, q, mode=m, k=10)
-        b = topk_local(li_m, q, mode=m, k=10)
-        assert [(d, round(s, 9)) for d, s in a] == [
-            (d, round(s, 9)) for d, s in b
-        ]
+        b = oracle.topk(tokenize_query(q), m, 10)
+        assert [d for d, _ in a] == [d for d, _ in b], (q, m)
+        for (_, sa), (_, sb) in zip(a, b):
+            assert abs(sa - sb) <= 1e-9 * max(1.0, abs(sb)), (q, m)
         assert a
